@@ -1733,10 +1733,7 @@ object SparkEntry {
       // the ORIGINAL segment endpoints, so the oracle replays the
       // identical per-segment arithmetic and filters at the buffer
       import s.implicits._
-      def flat(vs: Seq[(Double, Double)]): Seq[Double] = vs.flatMap { case (la, lo) =>
-        val v = graft.geo.Gade.latLonToNvec(math.toRadians(la), math.toRadians(lo))
-        Seq(v.x, v.y, v.z)
-      }
+      def flat(vs: Seq[(Double, Double)]): Seq[Double] = CellIndex.flatNvecs(vs).toSeq
       val routes = Seq(("r_a", flat(RouteA)), ("r_b", flat(RouteB)))
         .toDF("route_id", "verts")
       SpatialJoins.corridorJoin(

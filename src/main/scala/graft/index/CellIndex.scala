@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.geo.Vec3
+import graft.geo.{Gade, Vec3}
 
 /** S2-style cube-face quadtree cell index over the unit sphere.
   *
@@ -262,6 +262,39 @@ object CellIndex {
     java.util.Arrays.sort(frontier)
     frontier
   }
+
+  /** The cover level of a point-probe join: the level at which a disc
+    * of angular radius `angleRad` (clamped to [1e-6, pi]) spans ~96
+    * of the sphere's 6 * 4^L cells, clamped to [2, MaxLevel]. One
+    * rule for the literal AOI covers, the polygon-table ring covers
+    * and the corridor pieces; [[capCells]] descends the quadtree, so
+    * a fine level costs only O(cover size * level).
+    */
+  def discCoverLevel(angleRad: Double): Int = {
+    val ang = math.min(math.Pi, math.max(angleRad, 1e-6))
+    val discArea = 2.0 * math.Pi * (1.0 - math.cos(ang))
+    val l = (0.5 * (math.log(96.0 * 4.0 * math.Pi / (6.0 * discArea)) /
+      math.log(2.0))).ceil.toInt
+    math.max(2, math.min(MaxLevel, l))
+  }
+
+  /** Flat [x0,y0,z0,x1,...] unit n-vectors of (latDeg, lonDeg)
+    * vertices: the one encoder behind every polygon, ring-list and
+    * route literal the kernels read.
+    */
+  def flatNvecs(latLonDeg: Seq[(Double, Double)]): Array[Double] =
+    latLonDeg.flatMap { case (la, lo) =>
+      val n = Gade.latLonToNvec(math.toRadians(la), math.toRadians(lo))
+      Seq(n.x, n.y, n.z)
+    }.toArray
+
+  /** Ring-list encoding [k, n_0..n_{k-1}, ring coords...] (all
+    * doubles) of (latDeg, lonDeg) rings — the input of
+    * CellKernels.pointInPolygonRings and its siblings.
+    */
+  def ringList(ringsLatLonDeg: Seq[Seq[(Double, Double)]]): Array[Double] =
+    Array(ringsLatLonDeg.length.toDouble) ++ ringsLatLonDeg.map(_.length.toDouble) ++
+      flatNvecs(ringsLatLonDeg.flatten)
 
   /** Face frame axes: dirOf(face, u, v) = faceW + u*faceU + v*faceV. */
   private[index] val faceW = Array(Vec3(1, 0, 0), Vec3(-1, 0, 0), Vec3(0, 1, 0),

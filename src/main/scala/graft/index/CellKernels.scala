@@ -71,20 +71,11 @@ object CellKernels {
       throw new IllegalArgumentException(
         s"polygon vertex array length ${vs.length} is not a multiple of 3 " +
           "(flattened [x0,y0,z0,x1,...] expected)")
-    var sx = 0.0; var sy = 0.0; var sz = 0.0
-    var i = 0
-    while (i < vs.length) { sx += vs(i); sy += vs(i + 1); sz += vs(i + 2); i += 3 }
-    (px * sx + py * sy + pz * sz) > 0.0 &&
-      windingAngle(px, py, pz, vs) > math.Pi
+    ringInside(px, py, pz, vs, 0, vs.length / 3)
   }
 
-  /** |winding angle| of the polygon loop around the point. */
-  def windingAngle(px: Double, py: Double, pz: Double, vs: Array[Double]): Double =
-    windingAngleSlice(px, py, pz, vs, 0, vs.length / 3)
-
-  /** [[windingAngle]] over the ring slice starting at double-offset
-    * `off` with `n` vertices — the per-ring primitive of the
-    * ring-list (holes / multipolygon) variants.
+  /** |winding angle| of the ring slice starting at double-offset
+    * `off` with `n` vertices around the point.
     */
   private def windingAngleSlice(px: Double, py: Double, pz: Double,
                                 vs: Array[Double], off: Int, n: Int): Double = {
@@ -119,9 +110,9 @@ object CellKernels {
     math.abs(total)
   }
 
-  /** Single-ring inside test over a slice: the hemisphere
-    * disambiguator (dot with the ring's vertex sum) plus the winding
-    * angle — exactly [[pointInPolygon]]'s predicate, per ring.
+  /** Single-ring inside test over a slice — the one winding test of
+    * every polygon kernel: the hemisphere disambiguator (dot with the
+    * ring's vertex sum) plus the winding angle.
     */
   private def ringInside(px: Double, py: Double, pz: Double,
                          vs: Array[Double], off: Int, n: Int): Boolean = {
@@ -306,20 +297,32 @@ object CellKernels {
     var r = 0
     while (r < k) {
       val n = vs(1 + r).toInt
-      var i = 0
-      while (i < n) {
-        val j = (i + 1) % n
-        val d = segDistRad(px, py, pz,
-          vs(off + 3 * i), vs(off + 3 * i + 1), vs(off + 3 * i + 2),
-          vs(off + 3 * j), vs(off + 3 * j + 1), vs(off + 3 * j + 2))
-        if (d < best) best = d
-        i += 1
-      }
+      val d = ringEdgeDist(px, py, pz, vs, off, n)
+      if (d < best) best = d
       if (ringInside(px, py, pz, vs, off, n)) inside = !inside
       off += 3 * n
       r += 1
     }
     if (inside) -best else best
+  }
+
+  /** Min [[segDistRad]] [rad] over the edges of the closed ring slice
+    * starting at double-offset `off` with `n` vertices — the one
+    * edge-distance loop of the boundary-distance kernels.
+    */
+  private def ringEdgeDist(px: Double, py: Double, pz: Double,
+                           vs: Array[Double], off: Int, n: Int): Double = {
+    var best = Double.MaxValue
+    var i = 0
+    while (i < n) {
+      val j = (i + 1) % n
+      val d = segDistRad(px, py, pz,
+        vs(off + 3 * i), vs(off + 3 * i + 1), vs(off + 3 * i + 2),
+        vs(off + 3 * j), vs(off + 3 * j + 1), vs(off + 3 * j + 2))
+      if (d < best) best = d
+      i += 1
+    }
+    best
   }
 
   private def decodeRingCount(vs: Array[Double]): Int = {
@@ -345,8 +348,8 @@ object CellKernels {
 
   /** Per-ring (centroid, circumradius, cover level) of a ring-list
     * encoding — the polygon-TABLE analogue of the literal AOI joins'
-    * driver-side sizing: each ring's cover level is chosen so its
-    * (grown) circumdisc covers ~96 cells, clamped to [2, MaxLevel].
+    * driver-side sizing: each ring's (grown) circumdisc gets its own
+    * CellIndex.discCoverLevel (~96 cells).
     * Rings are validated HERE (a table row has no construction-time
     * `validated` hook): the hemisphere contract of the winding test
     * throws rather than silently mis-containing.
@@ -386,11 +389,7 @@ object CellKernels {
             "(>= pi/2): exceeds the winding test's hemisphere contract — " +
             "split the ring")
       val ang = math.min(math.Pi, math.max(circum + extraRad, 1e-6))
-      val discArea = 2.0 * math.Pi * (1.0 - math.cos(ang))
-      val l = (0.5 * (math.log(96.0 * 4.0 * math.Pi / (6.0 * discArea)) /
-        math.log(2.0))).ceil.toInt
-      out(r) = (cx, cy, cz, ang,
-        math.max(2, math.min(CellIndex.MaxLevel, l)))
+      out(r) = (cx, cy, cz, ang, CellIndex.discCoverLevel(ang))
       off += 3 * n
       r += 1
     }
@@ -454,17 +453,8 @@ object CellKernels {
         s"polygon vertex array length ${vs.length}: flattened " +
           "[x0,y0,z0,x1,...] with >= 3 vertices expected")
     val n = vs.length / 3
-    var best = Double.MaxValue
-    var i = 0
-    while (i < n) {
-      val j = (i + 1) % n
-      val d = segDistRad(px, py, pz,
-        vs(3 * i), vs(3 * i + 1), vs(3 * i + 2),
-        vs(3 * j), vs(3 * j + 1), vs(3 * j + 2))
-      if (d < best) best = d
-      i += 1
-    }
-    if (pointInPolygon(px, py, pz, verts)) -best else best
+    val best = ringEdgeDist(px, py, pz, vs, 0, n)
+    if (ringInside(px, py, pz, vs, 0, n)) -best else best
   }
 
   /** Snap a point to an OPEN polyline (vertices flattened

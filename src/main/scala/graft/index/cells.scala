@@ -232,22 +232,10 @@ object cells {
     * ring lists — the [[pointInPolygonRings]] encoding as a Column
     * (AoiM.flatRings for literals the operator sites build inline).
     */
-  def ringsLiteral(ringsLatLonDeg: Seq[Seq[(Double, Double)]]): Column = {
-    val header = ringsLatLonDeg.length.toDouble +:
-      ringsLatLonDeg.map(_.length.toDouble)
-    val flat = header ++ ringsLatLonDeg.flatMap(_.flatMap { case (la, lo) =>
-      val n = graft.geo.Gade.latLonToNvec(math.toRadians(la), math.toRadians(lo))
-      Seq(n.x, n.y, n.z)
-    })
-    array(flat.map(lit): _*)
-  }
+  def ringsLiteral(ringsLatLonDeg: Seq[Seq[(Double, Double)]]): Column =
+    array(CellIndex.ringList(ringsLatLonDeg).toSeq.map(lit): _*)
 
   /** Flat n-vector vertex array literal from (latDeg, lonDeg) pairs. */
-  def polygonLiteral(latLonDeg: Seq[(Double, Double)]): Column = {
-    val flat = latLonDeg.flatMap { case (la, lo) =>
-      val n = graft.geo.Gade.latLonToNvec(math.toRadians(la), math.toRadians(lo))
-      Seq(n.x, n.y, n.z)
-    }
-    array(flat.map(lit): _*)
-  }
+  def polygonLiteral(latLonDeg: Seq[(Double, Double)]): Column =
+    array(CellIndex.flatNvecs(latLonDeg).toSeq.map(lit): _*)
 }

@@ -152,12 +152,6 @@ object Clustering {
 
     val retired = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def keep(df: DataFrame): DataFrame = { retired += df.persist(lvl); df }
-    val dbg = java.lang.Boolean.getBoolean("graft.dbscan.debug") ||
-      sys.env.get("GRAFT_DBSCAN_DEBUG").contains("1")
-    def tick(tag: String, df: DataFrame): Unit = if (dbg) {
-      val t0 = System.nanoTime(); val n = df.count()
-      println(f"[dbscan] $tag rows=$n sec=${(System.nanoTime() - t0) / 1e9}%.1f")
-    }
     try {
       // dense CELL list via one partial-aggregated count (map-side
       // combine; output one narrow row per occupied cell, of which
@@ -213,7 +207,6 @@ object Clustering {
               col("__dn0").cast("double").as("__nb")), "__gc2")
             .agg(coalesce(sum(col("__na") * col("__nb")), lit(0.0)).as("__h"))
             .first().getDouble(0)
-        if (dbg) println(s"[dbscan] dispatch hazard=$hazard budget=$pairwiseBudget")
         if (hazard <= pairwiseBudget.toDouble)
           // finally releases cellCnt; the member-pair plan re-derives
           // everything it needs from the raw points
@@ -250,7 +243,6 @@ object Clustering {
       // no per-cell population bookkeeping is needed), and dense
       // supernodes at eps + rMax (one row per dense CELL — the blob
       // never materializes pairs)
-      val tJ0 = System.nanoTime()
       val candM = keep(SpatialJoins.distanceJoin(
           sparse,
           sparse.select(col("__n").as("__bn"), col("__gc").as("__bc"),
@@ -259,8 +251,6 @@ object Clustering {
           probeSideBloom = true)
         .filter(col("__bid") =!= col("__id"))
         .select("__id", "__gc", "__bc", "__bid"))
-      if (dbg) println(f"[dbscan] candM-plan(eager bloom) sec=${(System.nanoTime() - tJ0) / 1e9}%.1f")
-      tick("candM", candM)
       // supernodes PROBE (ring-explode the few dense cells, not the
       // millions of sparse points); the distance relation is
       // symmetric, so the coverage proof reads the same either way
@@ -275,7 +265,6 @@ object Clustering {
         .select(col("__pid").as("__id"), col("__pn").as("__n"),
           col("__pc").as("__gc"), col("__bc"), col("__bcnt"),
           (col("dist_m") + col("__br") <= epsMeters - margin).as("__allin")))
-      tick("candS", candS)
       // annulus fallback: per (probe, uncertain dense cell), the
       // exact count of that cell's members within eps — feeds degree
       // (the count), and edges/border (count >= 1 = a core in reach,
@@ -285,7 +274,6 @@ object Clustering {
         .join(denseMembers.select(col("__gc").as("__bc"), col("__n").as("__mn")), "__bc")
         .filter(geo.gcDistance(col("__n"), col("__mn"), sphereRadius) <= epsMeters)
         .groupBy("__id", "__bc").agg(count(lit(1)).as("__uc")))
-      tick("uncCnt", uncCnt)
 
       // ---- degree / sparse cores ----------------------------------
       // degree counts the point itself (+1) plus exact member
@@ -298,7 +286,6 @@ object Clustering {
         .join(contrib.groupBy("__id").agg(sum(col("__c")).as("__x")), "__id")
         .filter(col("__x") + 1L >= minPts)
         .select("__gc", "__id", "__n"))
-      tick("coreSparse", coreSparse)
 
       // ---- contracted core-core edges ------------------------------
       // sparse core -> core partner (sparse member partner that is
@@ -403,12 +390,7 @@ object Clustering {
       // ---- components + labels ------------------------------------
       val cores = keep(denseMembers.select("__gc", "__id", "__n")
         .unionByName(coreSparse))
-      tick("cores", cores)
-      if (dbg) { val t0 = System.nanoTime(); val ne = edges.count()
-        println(f"[dbscan] edges rows=$ne sec=${(System.nanoTime() - t0) / 1e9}%.1f") }
-      val tComp0 = System.nanoTime()
       val comp = Dedup.connectedComponents(edges, "__ga", "__gb")
-      if (dbg) println(f"[dbscan] components sec=${(System.nanoTime() - tComp0) / 1e9}%.1f")
       val cellComp = cores.select("__gc").distinct()
         .join(comp.withColumnRenamed("node", "__gc"), Seq("__gc"), "left")
         .select(col("__gc"), coalesce(col("component"), col("__gc")).as("__comp"))
@@ -421,10 +403,8 @@ object Clustering {
         .agg(min(col("__id")).as("__cluster"))
       val coreLabel = keep(coreWithComp.join(compLabel, "__comp")
         .select(col("__id"), col("__cluster")))
-      tick("coreLabel", coreLabel)
       val cellLabel = keep(cellComp.join(compLabel, "__comp")
         .select(col("__gc").as("__lc"), col("__cluster")))
-      tick("cellLabel", cellLabel)
 
       // ---- border attach -------------------------------------------
       // qualifying cells for a non-core sparse point, all read off the
@@ -456,9 +436,6 @@ object Clustering {
         .select(col("__id").as(idCol),
           (if (minPts <= 1) col("__id") else lit(null).cast(idType)).as("cluster"),
           lit(if (minPts <= 1) "core" else "noise").as("kind"))
-      if (dbg) { val t0 = System.nanoTime()
-        val bl = borderLabel.count()
-        println(f"[dbscan] borderLabel rows=$bl sec=${(System.nanoTime() - t0) / 1e9}%.1f") }
       val out = valid.select(col("__id"))
         .join(coreLabel, Seq("__id"), "left")
         .join(borderLabel, Seq("__id"), "left")
@@ -469,9 +446,7 @@ object Clustering {
             .otherwise("noise").as("kind"))
         .unionByName(nullRows)
         .persist(lvl)
-      val tOut0 = System.nanoTime()
       out.count() // materialize before the finally releases the stats
-      if (dbg) println(f"[dbscan] out-assembly sec=${(System.nanoTime() - tOut0) / 1e9}%.1f")
       comp.unpersist(blocking = false)
       out
     } finally retired.foreach(_.unpersist(blocking = false))
@@ -492,12 +467,6 @@ object Clustering {
     val left = ids.select(col(idCol).as("__a"), col(nvecCol).as("__an"))
     val right = ids.select(col(idCol).as("__b"), col(nvecCol).as("__bn"))
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val dbg = java.lang.Boolean.getBoolean("graft.dbscan.debug") ||
-      sys.env.get("GRAFT_DBSCAN_DEBUG").contains("1")
-    def tick(tag: String, df: DataFrame): Unit = if (dbg) {
-      val t0 = System.nanoTime(); val n = df.count()
-      println(f"[dbscan-pw] $tag rows=$n sec=${(System.nanoTime() - t0) / 1e9}%.1f")
-    }
     val pairs = SpatialJoins
       .distanceJoin(left, right, "__an", "__bn", epsMeters, sphereRadius,
         skewSalt = skewSalt)
@@ -505,21 +474,17 @@ object Clustering {
       .select("__a", "__b")
       .repartition(col("__a"))
       .persist(lvl)
-    tick("pairs", pairs)
     val cores =
       if (minPts <= 1) ids.select(col(idCol).as("__core"))
       else pairs.groupBy("__a").agg(count(lit(1)).as("__deg"))
         .filter(col("__deg") + 1 >= minPts)
         .select(col("__a").as("__core"))
     try {
-      tick("cores", cores)
       val coreEdges = pairs
         .join(cores.withColumnRenamed("__core", "__a"), "__a")
         .join(cores.withColumnRenamed("__core", "__b"), "__b")
         .filter(col("__a") < col("__b"))
-      val tC0 = System.nanoTime()
       val comp = Dedup.connectedComponents(coreEdges, "__a", "__b")
-      if (dbg) println(f"[dbscan-pw] components sec=${(System.nanoTime() - tC0) / 1e9}%.1f")
       val coreLabel = cores
         .join(comp.withColumnRenamed("node", "__core"), Seq("__core"), "left")
         .select(col("__core"),
@@ -537,7 +502,6 @@ object Clustering {
             .when(col("__nbrCluster").isNotNull, "border")
             .otherwise("noise").as("kind"))
         .persist(lvl)
-      tick("out", out)
       out.count()
       comp.unpersist(blocking = false)
       out

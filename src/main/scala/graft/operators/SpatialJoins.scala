@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
@@ -19,30 +19,22 @@ object SpatialJoins {
   import Ellipsoids.MeanEarthRadius
 
   /** An area-of-interest polygon given as (latDeg, lonDeg) vertices
-    * (implicitly closed, any orientation, smaller than a hemisphere).
+    * (implicitly closed, any orientation, smaller than a hemisphere):
+    * a view of the one-ring [[AoiM]] `asRings`, which every join,
+    * cover and kernel below runs on.
     */
   final case class Aoi(id: String, vertsLatLonDeg: Seq[(Double, Double)]) {
-    lazy val vertsN: Array[Vec3] = vertsLatLonDeg.map { case (la, lo) =>
-      Gade.latLonToNvec(math.toRadians(la), math.toRadians(lo))
-    }.toArray
-    lazy val centroid: Vec3 = VecMath.unit(vertsN.reduce(_ + _))
+    lazy val asRings: AoiM = AoiM(id, Seq(vertsLatLonDeg))
+    def vertsN: Array[Vec3] = asRings.ringsN.head
+    def centroid: Vec3 = asRings.ringCentroids.head
     /** Circumscribed angular radius around the centroid [rad]. */
-    lazy val circumAngle: Double =
-      vertsN.map(v => Gade.greatCircleDistanceRad(centroid, v)).max
-    def flatVerts: Array[Double] = vertsN.flatMap(v => Array(v.x, v.y, v.z))
+    def circumAngle: Double = asRings.ringCircumAngles.head
+    def flatVerts: Array[Double] = CellIndex.flatNvecs(vertsLatLonDeg)
     /** Enforce the winding disambiguator's validity region (see
-      * CellKernels.pointInPolygon): every vertex — hence, for a
-      * geodesically convex cap, the whole boundary and interior —
-      * within 90 deg of the vertex centroid. Near-hemispheric slivers
-      * would get silently wrong containment answers otherwise.
+      * [[AoiM.validated]]): near-hemispheric slivers would get
+      * silently wrong containment answers otherwise.
       */
-    def validated: Aoi = {
-      require(circumAngle < math.Pi / 2,
-        f"AOI '$id' spans $circumAngle%.3f rad from its vertex centroid " +
-          "(>= pi/2): exceeds the winding test's hemisphere contract — " +
-          "split the polygon")
-      this
-    }
+    def validated: Aoi = { asRings.validated; this }
   }
 
   /** A multipolygon / polygon-with-holes area of interest: a LIST of
@@ -69,10 +61,7 @@ object SpatialJoins {
       ringsN(i).map(v => Gade.greatCircleDistanceRad(ringCentroids(i), v)).max
     }
     /** Ring-list encoding [k, n_0..n_{k-1}, coords...] (all doubles). */
-    def flatRings: Array[Double] = {
-      val header = ringsN.length.toDouble +: ringsN.map(_.length.toDouble)
-      (header ++ ringsN.flatMap(_.flatMap(v => Seq(v.x, v.y, v.z)))).toArray
-    }
+    def flatRings: Array[Double] = CellIndex.ringList(ringsLatLonDeg)
     /** Hemisphere contract: each ring within 90 deg of its OWN vertex
       * centroid — the per-ring winding disambiguator's validity
       * region, and (geodesic balls of radius < pi/2 being convex)
@@ -472,8 +461,6 @@ object SpatialJoins {
           .join(cand.filter(ok).select(qId), Seq(qId), "left_anti")
           .persist(StorageLevel.MEMORY_AND_DISK)
         persisted += next
-        if (sys.env.contains("GRAFT_KNN_DEBUG"))
-          System.err.println(s"KNN_DEBUG step=($l,$r) stragglers=${next.count()}")
         remaining = if (next.isEmpty) null else {
           // stragglers shrink geometrically; once few enough that one
           // wrap-block pass (every data cell probed — still a cell
@@ -537,113 +524,66 @@ object SpatialJoins {
       .drop("__pos", "__knn")
   }
 
-  /** Assign points to AOI polygons: cell prefilter (broadcast cover
-    * map) then exact point-in-polygon winding test. Output: point
-    * columns + `aoi_id` (inner join semantics — points in no AOI drop
-    * out; use a later left join on the result for audits).
+  /** Assign points to AOI polygons: [[aoiJoinM]] over the one-ring
+    * views. Output: point columns + `aoi_id` (inner join semantics —
+    * points in no AOI drop out; use a later left join on the result
+    * for audits).
     */
-  def aoiJoin(points: DataFrame, pointNvec: String, aois: Seq[Aoi]): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    require(aois.nonEmpty)
-    aois.foreach(_.validated) // hemisphere contract of the winding test
-    // exact disc covers: enumerate cells at a level sized so each
-    // AOI's cover is ~100 cells and keep those whose safe
-    // lower-bound distance to the centroid is inside the circumdisc.
-    // Unlike a centroid-ring block, this never degenerates to a
-    // whole-sphere cover for continent-sized AOIs, so points
-    // prefilter to the AOIs that can actually contain them. One
-    // shared level so the join key is a single cell column.
-    val level = aois.map { a =>
-      val discArea = 2.0 * math.Pi *
-        (1.0 - math.cos(math.min(math.Pi, math.max(a.circumAngle, 1e-6))))
-      // 6*4^L cells on the sphere; want ~96 cells over discArea
-      // (capCells descends the quadtree, so fine levels cost only
-      // O(cover size * level) — no full-sphere enumeration, no cap
-      // coarser than the AOI deserves)
-      val l = (0.5 * (math.log(96.0 * 4.0 * math.Pi / (6.0 * discArea)) /
-        math.log(2.0))).ceil.toInt
-      math.max(2, math.min(CellIndex.MaxLevel, l))
-    }.min
-    val cover: Seq[(Long, String)] = aois.flatMap { a =>
-      CellIndex.capCells(a.centroid.x, a.centroid.y, a.centroid.z,
-        level, a.circumAngle).map(c => (c, a.id))
-    }
-    val coverDf = broadcast(cover.toDF("__cell", "aoi_id"))
-    val vertsDf = broadcast(aois.map(a => (a.id, a.flatVerts)).toDF("aoi_id", "__verts"))
-    points.withColumn("__cell", cells.cellAt(col(pointNvec), level))
-      .join(coverDf, "__cell")
-      .join(vertsDf, "aoi_id")
-      .filter(cells.pointInPolygon(col(pointNvec), col("__verts")))
-      .drop("__cell", "__verts")
-  }
+  def aoiJoin(points: DataFrame, pointNvec: String, aois: Seq[Aoi]): DataFrame =
+    aoiJoinM(points, pointNvec, aois.map(_.asRings))
 
-  /** Buffered AOI join: points within `bufferMeters` of each AOI —
-    * the polygon DILATED by the buffer (a point inside counts at any
-    * buffer >= 0). Output: point columns + `aoi_id` + signed
-    * `distCol` (negative inside, as [[aoiBoundaryDistance]]).
-    *
-    * Scale shape: identical to [[aoiJoin]] — a broadcast cover map
-    * prefilters points by cell — except the quadtree cap covers are
-    * grown by the buffer angle (caps with angular radius < pi/2 are
-    * geodesically convex, so the polygon's edges stay inside its
-    * vertex cap and every buffered point lies within circumAngle +
-    * buffer/R of the centroid — the cover is provably complete);
-    * the exact predicate is one boundary-distance kernel call per
-    * surviving candidate.
+  /** Buffered AOI join: [[aoiBufferJoinM]] over the one-ring views —
+    * points within `bufferMeters` of each AOI, the polygon DILATED by
+    * the buffer (a point inside counts at any buffer >= 0). Output:
+    * point columns + `aoi_id` + signed `distCol` (negative inside, as
+    * [[aoiBoundaryDistance]]).
     */
   def aoiBufferJoin(points: DataFrame, pointNvec: String, aois: Seq[Aoi],
                     bufferMeters: Double,
                     radius: Double = MeanEarthRadius,
-                    distCol: String = "dist_m"): DataFrame = {
+                    distCol: String = "dist_m"): DataFrame =
+    aoiBufferJoinM(points, pointNvec, aois.map(_.asRings), bufferMeters, radius, distCol)
+
+  /** Signed great-circle distance from every point to each AOI's
+    * BOUNDARY: [[aoiBoundaryDistanceM]] over the one-ring views.
+    */
+  def aoiBoundaryDistance(points: DataFrame, pointNvec: String,
+                          aois: Seq[Aoi],
+                          radius: Double = MeanEarthRadius,
+                          distCol: String = "dist_m"): DataFrame =
+    aoiBoundaryDistanceM(points, pointNvec, aois.map(_.asRings), radius, distCol)
+
+  /** The literal AOI set as a broadcast (aoi_id, __rings) frame of
+    * ring-list encodings, after the hemisphere contract of the winding
+    * test is checked on every ring.
+    */
+  private[graft] def aoiRingsFrame(spark: SparkSession, aois: Seq[AoiM]): DataFrame = {
     require(aois.nonEmpty)
-    require(bufferMeters >= 0.0, s"buffer must be >= 0 (got $bufferMeters)")
     aois.foreach(_.validated)
-    val bufAngle = bufferMeters / radius
-    val level = aois.map { a =>
-      val ang = math.min(math.Pi, math.max(a.circumAngle + bufAngle, 1e-6))
-      val discArea = 2.0 * math.Pi * (1.0 - math.cos(ang))
-      val l = (0.5 * (math.log(96.0 * 4.0 * math.Pi / (6.0 * discArea)) /
-        math.log(2.0))).ceil.toInt
-      math.max(2, math.min(CellIndex.MaxLevel, l))
-    }.min
-    val cover: Seq[(Long, String)] = aois.flatMap { a =>
-      CellIndex.capCells(a.centroid.x, a.centroid.y, a.centroid.z,
-        level, math.min(math.Pi, a.circumAngle + bufAngle)).map(c => (c, a.id))
-    }
-    val spark = points.sparkSession
     import spark.implicits._
-    val coverDf = broadcast(cover.toDF("__cell", "aoi_id"))
-    val vertsDf = broadcast(aois.map(a => (a.id, a.flatVerts)).toDF("aoi_id", "__verts"))
-    points.withColumn("__cell", cells.cellAt(col(pointNvec), level))
-      .join(coverDf, "__cell")
-      .join(vertsDf, "aoi_id")
-      .withColumn(distCol,
-        cells.boundaryDistSigned(col(pointNvec), col("__verts")) * lit(radius))
-      .filter(col(distCol) <= bufferMeters)
-      .drop("__cell", "__verts")
+    broadcast(aois.map(a => (a.id, a.flatRings.toSeq)).toDF("aoi_id", "__rings"))
   }
 
-  /** Shared cover machinery of the multipolygon joins: points keyed
-    * by cell at a level sized so each AOI's circumdisc cover is ~100
-    * cells, equi-joined against the broadcast (cell, aoi) cover, then
-    * against the broadcast ring encodings. Same scale shape as
-    * [[aoiJoin]]: the only shuffle is the points' cell hash.
+  /** Shared cover machinery of the literal AOI joins: points keyed by
+    * cell at ONE shared level (so the join key is a single cell
+    * column), equi-joined against the broadcast (cell, aoi) cover,
+    * then against the broadcast ring encodings; the only shuffle is
+    * the points' cell hash. The cover is exact per RING: capCells at
+    * the [[CellIndex.discCoverLevel]] of the smallest grown ring
+    * circumdisc keeps the cells whose safe lower-bound distance to the
+    * ring centroid is inside that disc. Unlike a centroid-ring block,
+    * this never degenerates to a whole-sphere cover for
+    * continent-sized AOIs, so points prefilter to the AOIs that can
+    * actually contain them. Completeness: caps with angular radius
+    * < pi/2 are geodesically convex, so a contained point lies inside
+    * some ring's circumdisc, and a buffered point within
+    * `extraAngle` of it.
     */
   private def aoiMCover(points: DataFrame, pointNvec: String,
                         aois: Seq[AoiM], extraAngle: Double): DataFrame = {
-    require(aois.nonEmpty)
-    aois.foreach(_.validated)
-    val level = aois.flatMap(_.ringCircumAngles).map { ca =>
-      val ang = math.min(math.Pi, math.max(ca + extraAngle, 1e-6))
-      val discArea = 2.0 * math.Pi * (1.0 - math.cos(ang))
-      val l = (0.5 * (math.log(96.0 * 4.0 * math.Pi / (6.0 * discArea)) /
-        math.log(2.0))).ceil.toInt
-      math.max(2, math.min(CellIndex.MaxLevel, l))
-    }.min
-    // per-RING circumdisc covers, unioned per AOI: a contained point
-    // lies inside some ring's hull, a buffered point within extra of
-    // some ring's boundary — either way inside that ring's disc
+    val ringsDf = aoiRingsFrame(points.sparkSession, aois)
+    val level = aois.flatMap(_.ringCircumAngles)
+      .map(ca => CellIndex.discCoverLevel(ca + extraAngle)).min
     val cover: Seq[(Long, String)] = aois.flatMap { a =>
       a.ringsN.indices.flatMap { i =>
         val c = a.ringCentroids(i)
@@ -654,14 +594,13 @@ object SpatialJoins {
     val spark = points.sparkSession
     import spark.implicits._
     val coverDf = broadcast(cover.toDF("__cell", "aoi_id"))
-    val ringsDf = broadcast(aois.map(a => (a.id, a.flatRings.toSeq))
-      .toDF("aoi_id", "__rings"))
     points.withColumn("__cell", cells.cellAt(col(pointNvec), level))
       .join(coverDf, "__cell")
       .join(ringsDf, "aoi_id")
   }
 
-  /** [[aoiJoin]] for multipolygons / polygons with holes: one output
+  /** Assign points to multipolygon / polygon-with-holes AOIs: cell
+    * prefilter ([[aoiMCover]]) then the exact winding test, one output
     * row per (point, AOI) whose EVEN-ODD ring containment holds.
     */
   def aoiJoinM(points: DataFrame, pointNvec: String, aois: Seq[AoiM]): DataFrame =
@@ -669,10 +608,12 @@ object SpatialJoins {
       .filter(cells.pointInPolygonRings(col(pointNvec), col("__rings")))
       .drop("__cell", "__rings")
 
-  /** [[aoiBufferJoin]] for multipolygons: points within `bufferMeters`
-    * of the AOI (negative signed distance = inside; a hole's rim is
+  /** Buffered multipolygon AOI join: points within `bufferMeters` of
+    * the AOI (negative signed distance = inside; a hole's rim is
     * boundary, so a point deep inside a hole is NOT within a small
-    * buffer).
+    * buffer). Same cover as [[aoiJoinM]], grown by the buffer angle;
+    * the exact predicate is one boundary-distance kernel call per
+    * surviving candidate.
     */
   def aoiBufferJoinM(points: DataFrame, pointNvec: String, aois: Seq[AoiM],
                      bufferMeters: Double,
@@ -686,10 +627,20 @@ object SpatialJoins {
       .drop("__cell", "__rings")
   }
 
-  /** [[aoiBoundaryDistance]] for multipolygons: signed distance to
-    * the nearest boundary edge of ANY ring (hole rims included),
-    * negative when even-odd containment holds. Map-only, one JITed
-    * kernel call per (point, AOI).
+  /** Signed great-circle distance from every point to each AOI's
+    * BOUNDARY — the nearest edge of ANY ring, hole rims included —
+    * negative when even-odd containment holds, positive outside (the
+    * buffer/erosion primitive: `dist_m <= b` selects the AOI dilated
+    * by b, `dist_m <= -b` the AOI eroded by b). One output row per
+    * (point, AOI).
+    *
+    * Scale shape: AOIs are a small literal list by contract; each
+    * point row makes ONE JITed kernel call per AOI
+    * (CellKernels.boundaryDistSignedRings — min over clamped per-edge
+    * segment distances + the winding inside test), so the whole
+    * operator is map-only: a union of narrow projections, no join, no
+    * shuffle, nothing collected. For thousands of AOIs use
+    * [[aoiJoinM]]'s broadcast-cover machinery instead.
     */
   def aoiBoundaryDistanceM(points: DataFrame, pointNvec: String,
                            aois: Seq[AoiM],
@@ -710,10 +661,7 @@ object SpatialJoins {
     */
   case class Route(id: String, verts: Seq[(Double, Double)]) {
     require(verts.length >= 2, s"route '$id' needs >= 2 vertices")
-    def flatVerts: Seq[Double] = verts.flatMap { case (la, lo) =>
-      val n = graft.geo.Gade.latLonToNvec(math.toRadians(la), math.toRadians(lo))
-      Seq(n.x, n.y, n.z)
-    }
+    def flatVerts: Seq[Double] = CellIndex.flatNvecs(verts).toSeq
   }
 
   /** Snap every point to the nearest segment over a literal set of
@@ -794,12 +742,7 @@ object SpatialJoins {
     val maxPiece = 2.0 * pieceFactor * bufAngle
     val coverAngle = math.min(math.Pi, maxPiece / 2.0 + bufAngle)
     // same sizing rule as the AOI covers: ~96 cells per piece disc
-    val level = {
-      val discArea = 2.0 * math.Pi * (1.0 - math.cos(math.max(coverAngle, 1e-6)))
-      val l = (0.5 * (math.log(96.0 * 4.0 * math.Pi / (6.0 * discArea)) /
-        math.log(2.0))).ceil.toInt
-      math.max(2, math.min(CellIndex.MaxLevel, l))
-    }
+    val level = CellIndex.discCoverLevel(coverAngle)
     def pc(i: Int) = element_at(col("__p"), i)
     // endpoints ride as FLAT doubles and the exact predicate is ONE
     // JITed kernel call (cells.segDist): the composed Column form
@@ -1166,7 +1109,6 @@ object SpatialJoins {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val retired = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def keep(df: DataFrame): DataFrame = { retired += df.persist(lvl); df }
-    val dbg = sys.env.get("GRAFT_LADDER_DEBUG").contains("1")
     try {
       var starved = keep(points.select(col(pointId), col(pointNvec)))
       // round 1 always runs (it also types the empty-input result)
@@ -1174,7 +1116,6 @@ object SpatialJoins {
       val rounds = scala.collection.mutable.ListBuffer.empty[DataFrame]
       var b = startMeters
       while (more) {
-        val tR0 = System.nanoTime()
         val lastRound = b >= maxMeters
         val cand = polygonBufferJoin(starved, pointNvec, pointId,
           polys, polyIdCol, ringsCol, math.min(b, maxMeters), radius, "__sd")
@@ -1192,8 +1133,6 @@ object SpatialJoins {
           more = starved.count() > 0L
           b = b * 4.0
         }
-        if (dbg) println(f"[ladder-poly] b=${math.min(b, maxMeters)}%.0f " +
-          f"sec=${(System.nanoTime() - tR0) / 1e9}%.1f")
       }
       val out = rounds.reduceLeft(_ unionByName _)
         .persist(lvl)
@@ -1237,14 +1176,12 @@ object SpatialJoins {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val retired = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def keep(df: DataFrame): DataFrame = { retired += df.persist(lvl); df }
-    val dbg = sys.env.get("GRAFT_LADDER_DEBUG").contains("1")
     try {
       var starved = keep(points.select(col(pointId), col(pointNvec)))
       var more = true
       val rounds = scala.collection.mutable.ListBuffer.empty[DataFrame]
       var b = startMeters
       while (more) {
-        val tR0 = System.nanoTime()
         val lastRound = b >= maxMeters
         val cand = corridorJoin(starved, pointNvec, pointId,
           routes, routeIdCol, vertsCol, math.min(b, maxMeters), radius,
@@ -1262,8 +1199,6 @@ object SpatialJoins {
           more = starved.count() > 0L
           b = b * 4.0
         }
-        if (dbg) println(f"[ladder-route] b=${math.min(b, maxMeters)}%.0f " +
-          f"sec=${(System.nanoTime() - tR0) / 1e9}%.1f")
       }
       val out = rounds.reduceLeft(_ unionByName _)
         .persist(lvl)
@@ -1376,35 +1311,6 @@ object SpatialJoins {
       .select(col(aIdCol), col(bIdCol))
   }
 
-  /** Signed great-circle distance from every point to each AOI's
-    * BOUNDARY: negative inside the polygon, positive outside (the
-    * buffer/erosion primitive — `dist_m <= b` selects the polygon
-    * dilated by b, `dist_m <= -b` the polygon eroded by b). One
-    * output row per (point, AOI).
-    *
-    * Scale shape: AOIs are a small literal list by contract (same as
-    * [[aoiJoin]]); each point row makes ONE JITed kernel call per AOI
-    * (CellKernels.boundaryDistSigned — min over clamped per-edge
-    * segment distances + the winding inside test in a single flat
-    * pass), so the whole operator is map-only: a union of narrow
-    * projections, no join, no shuffle, nothing collected. For
-    * thousands of AOIs use [[aoiJoin]]'s broadcast-cover machinery
-    * instead.
-    */
-  def aoiBoundaryDistance(points: DataFrame, pointNvec: String,
-                          aois: Seq[Aoi],
-                          radius: Double = MeanEarthRadius,
-                          distCol: String = "dist_m"): DataFrame = {
-    require(aois.nonEmpty)
-    aois.foreach(_.validated) // inside-test hemisphere contract
-    aois.map { a =>
-      points.withColumn("aoi_id", lit(a.id))
-        .withColumn(distCol,
-          cells.boundaryDistSigned(col(pointNvec),
-            typedLit(a.flatVerts.toSeq)) * lit(radius))
-    }.reduce(_ unionByName _)
-  }
-
   /** Geofence enter/exit events: for each (track, AOI), one row per
     * containment TRANSITION along the time-ordered track — `enter`
     * when the fence is entered (including a track whose first fix is
@@ -1421,7 +1327,7 @@ object SpatialJoins {
     * Scale shape: the inside flag is ONE winding-kernel call per
     * (point, AOI) in a map-only projection over a broadcast literal
     * AOI set (the operator is for named fence sets, not an AOI
-    * table — route big polygon TABLES through aoiJoin's cover join);
+    * table — route big polygon TABLES through [[polygonJoin]]);
     * the only shuffle is the window's (track, aoi) hash partition,
     * carrying points x |aois| rows of (track, time, aoi_id, flag) —
     * payload columns do not ride through the fan-out.
@@ -1432,19 +1338,14 @@ object SpatialJoins {
   def geofenceTransitions(points: DataFrame, trackCol: String,
                           timeCol: String, pointNvec: String,
                           aois: Seq[Aoi]): DataFrame = {
-    require(aois.nonEmpty)
-    aois.foreach(_.validated) // winding-test hemisphere contract
-    val spark = points.sparkSession
-    import spark.implicits._
-    val vertsDf = broadcast(
-      aois.map(a => (a.id, a.flatVerts.toSeq)).toDF("aoi_id", "__verts"))
+    val ringsDf = aoiRingsFrame(points.sparkSession, aois.map(_.asRings))
     val w = Window.partitionBy(col(trackCol), col("aoi_id"))
       .orderBy(col(timeCol), col("__in"))
     points
       .filter(col(timeCol).isNotNull && col(pointNvec).isNotNull)
       .select(col(trackCol), col(timeCol), col(pointNvec))
-      .crossJoin(vertsDf)
-      .withColumn("__in", cells.pointInPolygon(col(pointNvec), col("__verts")))
+      .crossJoin(ringsDf)
+      .withColumn("__in", cells.pointInPolygonRings(col(pointNvec), col("__rings")))
       .withColumn("__prev", lag(col("__in"), 1).over(w))
       .filter((col("__prev").isNull && col("__in")) ||
         (col("__prev").isNotNull && col("__prev") =!= col("__in")))
@@ -1480,20 +1381,15 @@ object SpatialJoins {
   def trackDwell(points: DataFrame, trackCol: String, timeCol: String,
                  pointNvec: String, aois: Seq[Aoi],
                  dwellCol: String = "dwell_t"): DataFrame = {
-    require(aois.nonEmpty)
-    aois.foreach(_.validated) // winding-test hemisphere contract
-    val spark = points.sparkSession
-    import spark.implicits._
-    val vertsDf = broadcast(
-      aois.map(a => (a.id, a.flatVerts.toSeq)).toDF("aoi_id", "__verts"))
+    val ringsDf = aoiRingsFrame(points.sparkSession, aois.map(_.asRings))
     val w = Window.partitionBy(col(trackCol)).orderBy(col(timeCol))
     points
       .filter(col(timeCol).isNotNull && col(pointNvec).isNotNull)
       .select(col(trackCol), col(timeCol), col(pointNvec))
       .withColumn("__dt",
         (lead(col(timeCol), 1).over(w) - col(timeCol)).cast("double"))
-      .crossJoin(vertsDf)
-      .withColumn("__in", cells.pointInPolygon(col(pointNvec), col("__verts")))
+      .crossJoin(ringsDf)
+      .withColumn("__in", cells.pointInPolygonRings(col(pointNvec), col("__rings")))
       .groupBy(col(trackCol), col("aoi_id"))
       .agg(
         sum(when(col("__in") && col("__dt").isNotNull, col("__dt"))

@@ -134,21 +134,18 @@ object GeoStreams {
                      nvecCol: String,
                      aois: Seq[graft.operators.SpatialJoins.Aoi],
                      idleTimeout: Option[String] = None): Dataset[FenceEvent] = {
-    require(aois.nonEmpty)
-    aois.foreach(_.validated)
     val spark = stream.sparkSession
     import spark.implicits._
+    val ringsDf = graft.operators.SpatialJoins.aoiRingsFrame(spark, aois.map(_.asRings))
     val timeoutConf =
       if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
       else GroupStateTimeout.NoTimeout()
-    val vertsDf = broadcast(
-      aois.map(a => (a.id, a.flatVerts.toSeq)).toDF("__aoi", "__verts"))
     stream.select(col(trackCol).cast("long").as("track"),
         col(tCol).cast("double").as("t"), col(nvecCol).as("__n"))
       .filter(col("t").isNotNull && col("__n").isNotNull)
-      .crossJoin(vertsDf)
-      .select(col("track"), col("__aoi").as("aoi"), col("t"),
-        graft.index.cells.pointInPolygon(col("__n"), col("__verts")).as("inz"))
+      .crossJoin(ringsDf)
+      .select(col("track"), col("aoi_id").as("aoi"), col("t"),
+        graft.index.cells.pointInPolygonRings(col("__n"), col("__rings")).as("inz"))
       .as[FenceFix]
       .groupByKey(f => (f.track, f.aoi))
       .flatMapGroupsWithState[FenceState, FenceEvent](

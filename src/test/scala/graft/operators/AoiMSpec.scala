@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import graft.SparkTestSession
 import graft.functions.geo
 import graft.geo.Gade
-import graft.index.CellKernels
+import graft.index.{CellIndex, CellKernels}
 import graft.operators.SpatialJoins.{Aoi, AoiM}
 
 /** Multipolygon / polygon-with-holes AOIs: even-odd containment,
@@ -46,17 +46,11 @@ class AoiMSpec extends AnyFunSuite {
   def ringsDist(a: AoiM, p: graft.geo.Vec3): Double =
     CellKernels.boundaryDistSignedRings(p.x, p.y, p.z, flat(a))
   def one(ring: Seq[(Double, Double)], p: graft.geo.Vec3): Boolean =
-    CellKernels.pointInPolygon(p.x, p.y, p.z, new GenericArrayData(
-      ring.flatMap { case (la, lo) =>
-        val v = Gade.latLonToNvec(math.toRadians(la), math.toRadians(lo))
-        Seq(v.x, v.y, v.z)
-      }.toArray))
+    CellKernels.pointInPolygon(p.x, p.y, p.z,
+      new GenericArrayData(CellIndex.flatNvecs(ring)))
   def oneDist(ring: Seq[(Double, Double)], p: graft.geo.Vec3): Double =
-    CellKernels.boundaryDistSigned(p.x, p.y, p.z, new GenericArrayData(
-      ring.flatMap { case (la, lo) =>
-        val v = Gade.latLonToNvec(math.toRadians(la), math.toRadians(lo))
-        Seq(v.x, v.y, v.z)
-      }.toArray))
+    CellKernels.boundaryDistSigned(p.x, p.y, p.z,
+      new GenericArrayData(CellIndex.flatNvecs(ring)))
   def pt(lat: Double, lon: Double) =
     Gade.latLonToNvec(math.toRadians(lat), math.toRadians(lon))
 
@@ -88,9 +82,29 @@ class AoiMSpec extends AnyFunSuite {
           if (want) -m else m
         }
         val got = ringsDist(a, p)
-        assert(math.abs(got - wantD) < 1e-12,
+        assert(got == wantD,
           s"boundary dist mismatch at ($lat, $lon) for ${a.id}: $got vs $wantD")
       }
+    }
+    // a single ring IS the k = 1 ring list: the flat-vertex kernels
+    // and the ring-list kernels over [1, n, flat] agree bit for bit,
+    // over the whole sphere and the box / antimeridian / polar /
+    // concave rings of SpatialJoinsSpec's aoi join test
+    val singles = Seq(
+      box(-10.0, 10.0, -10.0, 10.0),
+      Seq((-20.0, 160.0), (-20.0, -160.0), (25.0, -160.0), (25.0, 160.0)),
+      (0 until 8).map(i => (75.0, -180.0 + 45.0 * i)),
+      Seq((30.0, 60.0), (30.0, 80.0), (50.0, 80.0), (40.0, 70.0), (50.0, 60.0)))
+    val sphere = (0 until 4000).map { _ =>
+      (math.toDegrees(math.asin(rnd.nextDouble() * 2.0 - 1.0)), rnd.nextDouble() * 360.0 - 180.0)
+    }
+    val near = singles.flatMap(_.map { case (la, lo) =>
+      (la + rnd.nextGaussian(), lo + rnd.nextGaussian()) })
+    for (ring <- singles; (lat, lon) <- sphere ++ near) {
+      val p = pt(lat, lon)
+      val asList = AoiM("r", Seq(ring))
+      assert(one(ring, p) == ringsInside(asList, p), s"inside mismatch at ($lat, $lon)")
+      assert(oneDist(ring, p) == ringsDist(asList, p), s"dist mismatch at ($lat, $lon)")
     }
   }
 
