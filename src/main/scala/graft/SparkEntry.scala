@@ -1894,7 +1894,7 @@ object SparkEntry {
     }),
     "q72_dbscan" -> ((s, dir) => {
       // geodesic DBSCAN at 600 km / minPts 4 — the eps self-join is
-      // the ring-cell distance join, components are min-label
+      // the disc-cover distance join, components are min-label
       // propagation; the oracle replays all-pairs + recursive
       // reachability, so core/border/noise AND every label must match
       Clustering.dbscan(
@@ -1908,7 +1908,7 @@ object SparkEntry {
       // IDW field interpolation: estimate the customer-balance field
       // at each supplier position from customers within 2000 km —
       // the oracle recomputes every pair brute-force, so the
-      // ring-cell candidate pruning must lose no in-range sample.
+      // disc-cover candidate pruning must lose no in-range sample.
       // est rounded to 2 decimals: sum order differs between engines
       // and cents-level noise is ~1e-9, so the boundary-straddle
       // probability is negligible (q24's integer-exact trick does
@@ -3512,7 +3512,7 @@ object SparkEntry {
            | FROM pts c LEFT JOIN corelbl cl ON cl.k = c.k LEFT JOIN nbr ON nbr.k = c.k
            | ORDER BY c_custkey""".stripMargin.replace("\n", " ")
       },
-      // IDW: brute-force all-pairs mirror of the ring-cell join +
+      // IDW: brute-force all-pairs mirror of the disc-cover join +
       // weighted quotient, identical distance formula and clamp
       "q73_idw" -> {
         val gc = "atan2(sqrt((s.ny*q.sz - s.nz*q.sy)*(s.ny*q.sz - s.nz*q.sy) + " +

@@ -20,32 +20,6 @@ import graft.geo.{Gade, Vec3}
 object CellIndex {
   val MaxLevel = 26
 
-  /** Worst-case (face corner) angular compression of the gnomonic
-    * projection: 1 unit of u maps to at least this many radians.
-    * d(theta)/du at a corner is sqrt(2)/3 ~= 0.4714.
-    *
-    * NOTE: this bound only holds ON the face (|u|,|v| <= 1). Ring
-    * blocks that overhang a face edge compress further, so join
-    * coverage proofs must use [[coverageLowerBound]] /
-    * [[ringCoverageRad]], which account for the extended block.
-    */
-  val MinAngularPerUnit: Double = math.sqrt(2.0) / 3.0
-
-  /** Minimum angular width [rad] of any on-face cell at `level`
-    * (legacy mid-face heuristic; see note on [[MinAngularPerUnit]]).
-    */
-  def minCellAngle(level: Int): Double =
-    (2.0 / (1L << level)) * MinAngularPerUnit
-
-  /** Largest level whose on-face cells are at least `angleRad` wide
-    * (legacy; join code uses [[levelForRadiusSafe]]).
-    */
-  def levelForRadius(angleRad: Double): Int = {
-    var level = MaxLevel
-    while (level > 0 && minCellAngle(level) < angleRad) level -= 1
-    level
-  }
-
   /** Safe lower bound [rad] on the coverage a k-ring block guarantees
     * for ANY query position inside the center cell, including blocks
     * overhanging face edges/corners where the gnomonic compresses
@@ -266,9 +240,9 @@ object CellIndex {
   /** The cover level of a point-probe join: the level at which a disc
     * of angular radius `angleRad` (clamped to [1e-6, pi]) spans ~96
     * of the sphere's 6 * 4^L cells, clamped to [2, MaxLevel]. One
-    * rule for the literal AOI covers, the polygon-table ring covers
-    * and the corridor pieces; [[capCells]] descends the quadtree, so
-    * a fine level costs only O(cover size * level).
+    * rule for the polygon ring covers (literal AOIs and polygon
+    * tables) and the corridor pieces; [[capCells]] descends the
+    * quadtree, so a fine level costs only O(cover size * level).
     */
   def discCoverLevel(angleRad: Double): Int = {
     val ang = math.min(math.Pi, math.max(angleRad, 1e-6))

@@ -238,7 +238,7 @@ object Clustering {
       // ---- the sparse candidate pass -------------------------------
       // two kept frames: sparse members join at EXACTLY eps (the
       // point-point predicate needs no padding — padding would inflate
-      // the ring-cell candidate volume by the area ratio; same-cell
+      // the disc-cover candidate volume by the area ratio; same-cell
       // pairs are INCLUDED, bounded by < minPts members per cell, so
       // no per-cell population bookkeeping is needed), and dense
       // supernodes at eps + rMax (one row per dense CELL — the blob
@@ -251,7 +251,7 @@ object Clustering {
           probeSideBloom = true)
         .filter(col("__bid") =!= col("__id"))
         .select("__id", "__gc", "__bc", "__bid"))
-      // supernodes PROBE (ring-explode the few dense cells, not the
+      // supernodes PROBE (cover-explode the few dense cells, not the
       // millions of sparse points); the distance relation is
       // symmetric, so the coverage proof reads the same either way
       val candS = keep(SpatialJoins.distanceJoin(

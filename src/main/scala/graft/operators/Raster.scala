@@ -90,7 +90,7 @@ object Raster {
     * (keyed by a synthetic row id, not by value equality — a null
     * in a query payload column must not detach its aggregates).
     *
-    * Scale shape: one ring-cell [[SpatialJoins.distanceJoin]]
+    * Scale shape: one disc-cover [[SpatialJoins.distanceJoin]]
     * (queries x samples confined to cells of the radius, never all
     * pairs) then a single per-query aggregation — partial aggregates
     * combine map-side, so the shuffle carries two doubles per query,

@@ -82,30 +82,29 @@ object SpatialJoins {
 
   /** Distance join: all (left, right) pairs with great-circle distance
     * <= radiusMeters. Columns of both inputs are preserved (names must
-    * be disjoint) plus `distCol`. (level, ring k) are chosen so the
-    * k-ring block PROVABLY covers the radius for every query position,
-    * including blocks overhanging cube-face edges where the gnomonic
-    * projection compresses (CellIndex.coverageLowerBound); each right
-    * row keeps exactly one cell while left probes its ring, so no pair
-    * dedup is needed. Radii beyond what any block can cover (~0.26 rad
-    * ~ 1660 km) switch to per-row quadtree DISC COVERS at a coarse
-    * level (still pruning, still provably complete); only caps
-    * spanning most of the sphere — where the output itself is
-    * quadratic and pruning cannot help — take the exact-filtered
-    * cross join.
-    */
-  /** @param probeSideBloom when true, the ring-exploded probe rows
+    * be disjoint) plus `distCol`. Each left row explodes its per-row
+    * quadtree DISC COVER (cells.capCells: the cells whose safe
+    * lower-bound distance is within the radius — provably complete at
+    * any radius, including cells across cube-face edges where the
+    * gnomonic projection compresses) at a level sized so a cap covers
+    * ~48 cells; each right row keeps exactly one cell, and cover cells
+    * are distinct, so every (left, right) pair is a candidate at most
+    * once and no pair dedup is needed. The exact distance filter
+    * decides membership. Only caps spanning most of the sphere — where
+    * the output itself is quadratic and pruning cannot help — take the
+    * exact-filtered cross join.
+    *
+    * @param probeSideBloom when true, the cover-exploded probe rows
     *   are prefiltered by a Bloom filter over the build side's
     *   OCCUPIED cells before the shuffle. At low cell occupancy
     *   (build rows << cells in reach) most exploded rows target an
     *   empty cell and would ride the exchange for nothing — the
-    *   probe-side explode factor (2k+1)^2 dominates the join cost
-    *   there, and the bloom cuts it to ~occupied hits. False
-    *   positives only ADD candidates (the exact distance filter
-    *   still decides); false negatives cannot occur, so results are
-    *   unchanged. Costs one extra pass over the build side (cheap
-    *   when the caller has it persisted) — leave off for small or
-    *   broadcast builds.
+    *   probe-side explode factor dominates the join cost there, and
+    *   the bloom cuts it to ~occupied hits. False positives only ADD
+    *   candidates (the exact distance filter still decides); false
+    *   negatives cannot occur, so results are unchanged. Costs one
+    *   extra pass over the build side (cheap when the caller has it
+    *   persisted) — leave off for small or broadcast builds.
     */
   def distanceJoin(left: DataFrame, right: DataFrame,
                    leftNvec: String, rightNvec: String,
@@ -115,71 +114,30 @@ object SpatialJoins {
                    broadcastRight: Boolean = false,
                    skewSalt: Int = 0,
                    hotCellThreshold: Long = 1000000L,
-                   sampleCellFraction: Double = 0.001,
                    probeSideBloom: Boolean = false): DataFrame = {
     val angle = radiusMeters / sphereRadius
     require(radiusMeters >= 0 && angle <= math.Pi,
       s"radiusMeters=$radiusMeters out of range for sphereRadius=$sphereRadius")
-    // Two provably-complete cover families compete on the BLOCK
-    // FRACTION metric (expected candidate volume per (probe, build)
-    // pair under roughly uniform density, as a fraction of a face):
-    //
-    //  - ring plans (level, k): probe explodes its cell's (2k+1)^2
-    //    Chebyshev block, level the finest levelForRadiusSafe proves
-    //    against worst-case gnomonic compression. Fraction
-    //    (2k+1)^2 / 4^level. Cheap per probe row (fixed explode, one
-    //    ring kernel), but face-corner distortion forces COARSE
-    //    provable levels: 600 km proves only k=3/level 4 = 49/256 of
-    //    a face per probe.
-    //  - the per-row quadtree DISC COVER: probe explodes the cells
-    //    whose safe lower-bound distance is within the radius
-    //    (cells.capCells — complete at ANY radius, not just beyond
-    //    the ring family's ~0.26 rad ceiling), at a level sized so a
-    //    cap covers ~48 cells. Fraction ~ (cap area + boundary slop)
-    //    / cell area / 4^level — for radii whose provable ring level
-    //    is far coarser than the radius-matched level this is many
-    //    times tighter (600 km: ~0.03 vs 0.19, measured 2.5 s -> 0.6 s
-    //    on the 15k-point sf0.1 dbscan pair join).
-    //
-    // The cap cover pays a quadtree descent per probe row and a
-    // larger explode factor, so it must win the fraction metric by
-    // 2x before it is chosen; both plans produce each (probe, build)
-    // pair at most once (distinct cover cells vs single build cell),
-    // and the exact distance filter decides membership either way —
-    // the choice moves only cost. Only when the cap spans most of
-    // the sphere — where matching pairs are a constant fraction of
-    // |L| x |R| and the OUTPUT is quadratic — does the
-    // exact-filtered cross join remain.
-    val ringPlan = (1 to 4).flatMap { k =>
-        val l = CellIndex.levelForRadiusSafe(angle, k)
-        if (l >= 0) Some((l, k)) else None
-      }
-      .sortBy { case (l, k) =>
-        ((2.0 * k + 1) * (2.0 * k + 1) / math.pow(4.0, l), k) }
-      .headOption
+    // Cap level: the cap (fraction capFrac of the sphere) covers ~48 of
+    // the sphere's 6 * 4^level cells, clamped to MaxLevel. Below the
+    // double-precision floor of 1 - cos(angle) (angles < ~1e-8 rad,
+    // radius 0 included) capFrac is 0 and MaxLevel is set directly.
     val capFrac = (1.0 - math.cos(angle)) / 2.0
-    val capPlan: Option[Int] =
-      if (capFrac > 0.7 || capFrac <= 0.0) None
-      else Some(math.max(1, math.min(CellIndex.MaxLevel,
-        (math.log(8.0 / capFrac) / math.log(4.0)).floor.toInt)))
-    def capBlockFrac(lvl: Int): Double = {
-      // expected cap cells = area term + perimeter/corner slop
-      val areaCells = capFrac * 6.0 * math.pow(4.0, lvl)
-      (areaCells + 4.0 * math.sqrt(areaCells) + 4.0) / math.pow(4.0, lvl)
-    }
-    val useCap = capPlan.isDefined && (ringPlan.isEmpty ||
-      capBlockFrac(capPlan.get) * 2.0 <
-        { val (l, k) = ringPlan.get; (2.0 * k + 1) * (2.0 * k + 1) / math.pow(4.0, l) })
-    if (ringPlan.isEmpty && capPlan.isEmpty) {
+    if (capFrac > 0.7) {
       val b = if (broadcastRight) broadcast(right) else right
       return left.crossJoin(b)
         .withColumn(distCol, geo.gcDistance(col(leftNvec), col(rightNvec), sphereRadius))
         .filter(col(distCol) <= radiusMeters)
     }
-    val level = if (useCap) capPlan.get else ringPlan.get._1
-    def coverOf(n: Column): Column =
-      if (useCap) cells.capCells(n, level, angle)
-      else cells.ringCells(cells.cellAt(n, level), ringPlan.get._2)
+    val level =
+      if (capFrac <= 0.0) CellIndex.MaxLevel
+      else math.max(1, math.min(CellIndex.MaxLevel,
+        (math.log(8.0 / capFrac) / math.log(4.0)).floor.toInt))
+    // a positive floor keeps a radius-0 probe's own cell in its cover
+    // even when cellMinDistLB rounds a hair above 0; slack only adds
+    // candidates
+    val coverAngle = math.max(angle, 1e-12)
+    def coverOf(n: Column): Column = cells.capCells(n, level, coverAngle)
     val probesAll = left.withColumn("__cell", explode(coverOf(col(leftNvec))))
     val build0 = right.withColumn("__cell", cells.cellAt(col(rightNvec), level))
     val probes0 =
@@ -205,7 +163,7 @@ object SpatialJoins {
         // AQE can split skewed shuffle partitions but not one giant
         // key, so hot cells get a per-row salt while the build side
         // replicates only those cells x skewSalt (north_rule "salted
-        // repartitioning of hot cells"). Sampling BEFORE the ring
+        // repartitioning of hot cells"). Sampling BEFORE the cover
         // explode keeps the pre-pass a column-pruned 0.1% scan + tiny
         // agg instead of a full groupBy over every probe row (at
         // 100 TB the full pre-pass doubled the probe-side scan): a
@@ -217,7 +175,7 @@ object SpatialJoins {
         // the join result is identical for any hot set, so sampling
         // noise can only under- or over-salt a borderline-warm cell.
         val frac = math.min(1.0, math.max(
-          sampleCellFraction, 1000.0 / math.max(1.0, hotCellThreshold.toDouble)))
+          0.001, 1000.0 / math.max(1.0, hotCellThreshold.toDouble)))
         val sampleCut = math.max(2L, (hotCellThreshold * frac / 2.0).toLong)
         val hot = left.sample(withReplacement = false, frac, seed = 42L)
           .select(explode(coverOf(col(leftNvec))).as("__cell"))
@@ -553,79 +511,42 @@ object SpatialJoins {
                           distCol: String = "dist_m"): DataFrame =
     aoiBoundaryDistanceM(points, pointNvec, aois.map(_.asRings), radius, distCol)
 
-  /** The literal AOI set as a broadcast (aoi_id, __rings) frame of
-    * ring-list encodings, after the hemisphere contract of the winding
-    * test is checked on every ring.
+  /** The literal AOI set as an (aoi_id, __rings) frame of ring-list
+    * encodings, after the hemisphere contract of the winding test is
+    * checked on every ring. A local relation: joins against it
+    * broadcast by size.
     */
   private[graft] def aoiRingsFrame(spark: SparkSession, aois: Seq[AoiM]): DataFrame = {
     require(aois.nonEmpty)
     aois.foreach(_.validated)
     import spark.implicits._
-    broadcast(aois.map(a => (a.id, a.flatRings.toSeq)).toDF("aoi_id", "__rings"))
+    aois.map(a => (a.id, a.flatRings.toSeq)).toDF("aoi_id", "__rings")
   }
 
-  /** Shared cover machinery of the literal AOI joins: points keyed by
-    * cell at ONE shared level (so the join key is a single cell
-    * column), equi-joined against the broadcast (cell, aoi) cover,
-    * then against the broadcast ring encodings; the only shuffle is
-    * the points' cell hash. The cover is exact per RING: capCells at
-    * the [[CellIndex.discCoverLevel]] of the smallest grown ring
-    * circumdisc keeps the cells whose safe lower-bound distance to the
-    * ring centroid is inside that disc. Unlike a centroid-ring block,
-    * this never degenerates to a whole-sphere cover for
-    * continent-sized AOIs, so points prefilter to the AOIs that can
-    * actually contain them. Completeness: caps with angular radius
-    * < pi/2 are geodesically convex, so a contained point lies inside
-    * some ring's circumdisc, and a buffered point within
-    * `extraAngle` of it.
-    */
-  private def aoiMCover(points: DataFrame, pointNvec: String,
-                        aois: Seq[AoiM], extraAngle: Double): DataFrame = {
-    val ringsDf = aoiRingsFrame(points.sparkSession, aois)
-    val level = aois.flatMap(_.ringCircumAngles)
-      .map(ca => CellIndex.discCoverLevel(ca + extraAngle)).min
-    val cover: Seq[(Long, String)] = aois.flatMap { a =>
-      a.ringsN.indices.flatMap { i =>
-        val c = a.ringCentroids(i)
-        CellIndex.capCells(c.x, c.y, c.z, level,
-          math.min(math.Pi, a.ringCircumAngles(i) + extraAngle)).map(cc => (cc, a.id))
-      }.distinct
-    }
-    val spark = points.sparkSession
-    import spark.implicits._
-    val coverDf = broadcast(cover.toDF("__cell", "aoi_id"))
-    points.withColumn("__cell", cells.cellAt(col(pointNvec), level))
-      .join(coverDf, "__cell")
-      .join(ringsDf, "aoi_id")
-  }
-
-  /** Assign points to multipolygon / polygon-with-holes AOIs: cell
-    * prefilter ([[aoiMCover]]) then the exact winding test, one output
-    * row per (point, AOI) whose EVEN-ODD ring containment holds.
+  /** Assign points to multipolygon / polygon-with-holes AOIs: the
+    * polygon-table candidate path ([[polygonCandidates]]) over the
+    * literal ring frame ([[aoiRingsFrame]]), then the exact winding
+    * test — one output row per (point, AOI) whose EVEN-ODD ring
+    * containment holds. Output: `aoi_id` + point columns.
     */
   def aoiJoinM(points: DataFrame, pointNvec: String, aois: Seq[AoiM]): DataFrame =
-    aoiMCover(points, pointNvec, aois, extraAngle = 0.0)
-      .filter(cells.pointInPolygonRings(col(pointNvec), col("__rings")))
-      .drop("__cell", "__rings")
+    containsJoin(points, pointNvec,
+      aoiRingsFrame(points.sparkSession, aois), "aoi_id", "__rings")
 
   /** Buffered multipolygon AOI join: points within `bufferMeters` of
     * the AOI (negative signed distance = inside; a hole's rim is
     * boundary, so a point deep inside a hole is NOT within a small
-    * buffer). Same cover as [[aoiJoinM]], grown by the buffer angle;
-    * the exact predicate is one boundary-distance kernel call per
-    * surviving candidate.
+    * buffer). Same candidates as [[aoiJoinM]], covers grown by the
+    * buffer angle; the exact predicate is one boundary-distance
+    * kernel call per surviving candidate.
     */
   def aoiBufferJoinM(points: DataFrame, pointNvec: String, aois: Seq[AoiM],
                      bufferMeters: Double,
                      radius: Double = MeanEarthRadius,
-                     distCol: String = "dist_m"): DataFrame = {
-    require(bufferMeters >= 0.0, s"buffer must be >= 0 (got $bufferMeters)")
-    aoiMCover(points, pointNvec, aois, extraAngle = bufferMeters / radius)
-      .withColumn(distCol,
-        cells.boundaryDistSignedRings(col(pointNvec), col("__rings")) * lit(radius))
-      .filter(col(distCol) <= bufferMeters)
-      .drop("__cell", "__rings")
-  }
+                     distCol: String = "dist_m"): DataFrame =
+    bufferJoin(points, pointNvec,
+      aoiRingsFrame(points.sparkSession, aois), "aoi_id", "__rings",
+      bufferMeters, radius, distCol)
 
   /** Signed great-circle distance from every point to each AOI's
     * BOUNDARY — the nearest edge of ANY ring, hole rims included —
@@ -639,8 +560,8 @@ object SpatialJoins {
     * (CellKernels.boundaryDistSignedRings — min over clamped per-edge
     * segment distances + the winding inside test), so the whole
     * operator is map-only: a union of narrow projections, no join, no
-    * shuffle, nothing collected. For thousands of AOIs use
-    * [[aoiJoinM]]'s broadcast-cover machinery instead.
+    * shuffle, nothing collected. For thousands of AOIs use the
+    * cover-pruned [[polygonBufferJoin]] over an AOI table instead.
     */
   def aoiBoundaryDistanceM(points: DataFrame, pointNvec: String,
                            aois: Seq[AoiM],
@@ -741,7 +662,7 @@ object SpatialJoins {
     val bufAngle = bufferMeters / radius
     val maxPiece = 2.0 * pieceFactor * bufAngle
     val coverAngle = math.min(math.Pi, maxPiece / 2.0 + bufAngle)
-    // same sizing rule as the AOI covers: ~96 cells per piece disc
+    // the polygon ring covers' sizing rule: ~96 cells per piece disc
     val level = CellIndex.discCoverLevel(coverAngle)
     def pc(i: Int) = element_at(col("__p"), i)
     // endpoints ride as FLAT doubles and the exact predicate is ONE
@@ -904,29 +825,6 @@ object SpatialJoins {
       .dropDuplicates(aIdCol, bIdCol)
   }
 
-  /** Shared candidate machinery of the polygon-TABLE joins: each
-    * polygon row emits its mixed-level ring-circumdisc cover
-    * ([[cells.ringCoverCells]] — every ring at its OWN ~96-cell
-    * level, so a continent and a city block in the same table each
-    * get a proportionate cover), points emit one cell id per
-    * DISTINCT cover level (levels ride inside the cell id, so mixed
-    * levels still equi-join on the single cell key), the cover is
-    * [[ancestorFreeCover]] so each (point, polygon) candidate arises
-    * exactly once — no dedup shuffle — and the ring encodings join
-    * back by polygon id (AQE broadcasts small polygon tables).
-    *
-    * The distinct level list is the only driver-side value: <= 25
-    * ints off the cheap levels-only kernel pass. Cover proof: rings
-    * pass the hemisphere contract (kernel-enforced, throwing — table
-    * rows have no construction-time `validated` hook), so each
-    * ring's interior stays inside its circumdisc (geodesic balls of
-    * radius < pi/2 are convex); an even-odd-contained point is
-    * inside some ring's hull, a buffered point within extra of some
-    * ring's boundary — either way inside that ring's grown disc.
-    * Rows with null rings / null point positions drop out (no cover
-    * cells / no cell key). Column names of `points` and `polys`
-    * must be disjoint.
-    */
   /** Distinct, per-polygon ANCESTOR-FREE cover (no cover cell
     * contains another of the same polygon): a cell whose proper
     * ancestor at a coarser cover level is also in the cover is
@@ -979,15 +877,44 @@ object SpatialJoins {
     simple.unionByName(pruned)
   }
 
+  /** Shared candidate machinery of the polygon-TABLE joins: each
+    * polygon row emits its mixed-level ring-circumdisc cover
+    * ([[cells.ringCoverCells]] — every ring at its OWN ~96-cell
+    * level, so a continent and a city block in the same table each
+    * get a proportionate cover), points emit one cell id per
+    * DISTINCT cover level (levels ride inside the cell id, so mixed
+    * levels still equi-join on the single cell key), the cover is
+    * [[ancestorFreeCover]] so each (point, polygon) candidate arises
+    * exactly once — no dedup shuffle — and the ring encodings join
+    * back by polygon id (AQE broadcasts small polygon tables).
+    *
+    * The distinct level list is the only driver-side value: <= 25
+    * ints off the cheap levels-only kernel pass. Cover proof: rings
+    * pass the hemisphere contract (kernel-enforced, throwing — table
+    * rows have no construction-time `validated` hook), so each
+    * ring's interior stays inside its circumdisc (geodesic balls of
+    * radius < pi/2 are convex); an even-odd-contained point is
+    * inside some ring's hull, a buffered point within extra of some
+    * ring's boundary — either way inside that ring's grown disc.
+    * Rows with null rings / null point positions drop out (no cover
+    * cells / no cell key). Column names of `points` and `polys`
+    * must be disjoint. Output: `polyIdCol` + point columns +
+    * `ringsCol`.
+    *
+    * `persistCover` keeps the cells-only cover cached (MEMORY_AND_DISK,
+    * until the SparkSession drops it) for a stream-static join, whose
+    * static side re-executes every micro-batch.
+    */
   private def polygonCandidates(points: DataFrame, pointNvec: String,
-                                pointId: String, polys: DataFrame,
-                                polyIdCol: String, ringsCol: String,
-                                extraRad: Double): DataFrame = {
+                                polys: DataFrame, polyIdCol: String,
+                                ringsCol: String, extraRad: Double,
+                                persistCover: Boolean): DataFrame = {
     val polysN = polys.select(col(polyIdCol), col(ringsCol))
     val levels = polysN
       .select(explode(cells.ringCoverLevels(col(ringsCol), extraRad)).as("__l"))
       .distinct().collect().map(_.getInt(0)).sorted
-    val cover = ancestorFreeCover(polysN, polyIdCol, ringsCol, extraRad, levels)
+    val cover0 = ancestorFreeCover(polysN, polyIdCol, ringsCol, extraRad, levels)
+    val cover = if (persistCover) cover0.persist(StorageLevel.MEMORY_AND_DISK) else cover0
     // An empty polygon table (or all-null rings) is a legitimate
     // filtered state, not a contract violation: a null cell key never
     // equi-joins, so the same chain yields the correctly-typed empty
@@ -1000,6 +927,38 @@ object SpatialJoins {
       .join(cover, "__cell") // exactly-once per (point, polygon): see ancestorFreeCover
       .join(polysN, polyIdCol)
       .drop("__cell")
+  }
+
+  /** Containment join shared by [[polygonJoin]], [[aoiJoinM]] and the
+    * stream-static [[graft.streaming.GeoStreams.polygonJoinStream]]:
+    * [[polygonCandidates]] then ONE [[cells.pointInPolygonRings]]
+    * kernel call per candidate. Output: `polyIdCol` + point columns.
+    */
+  private[graft] def containsJoin(points: DataFrame, pointNvec: String,
+                                  polys: DataFrame, polyIdCol: String,
+                                  ringsCol: String,
+                                  persistCover: Boolean = false): DataFrame =
+    polygonCandidates(points, pointNvec, polys, polyIdCol, ringsCol,
+      extraRad = 0.0, persistCover)
+      .filter(cells.pointInPolygonRings(col(pointNvec), col(ringsCol)))
+      .drop(ringsCol)
+
+  /** Buffered join shared by [[polygonBufferJoin]] and
+    * [[aoiBufferJoinM]]: candidates from covers grown by the buffer
+    * angle, kept when the signed boundary distance is <= the buffer.
+    * Output: `polyIdCol` + point columns + `distCol`.
+    */
+  private def bufferJoin(points: DataFrame, pointNvec: String,
+                         polys: DataFrame, polyIdCol: String, ringsCol: String,
+                         bufferMeters: Double, radius: Double,
+                         distCol: String): DataFrame = {
+    require(bufferMeters >= 0.0, s"buffer must be >= 0 (got $bufferMeters)")
+    polygonCandidates(points, pointNvec, polys, polyIdCol, ringsCol,
+      extraRad = bufferMeters / radius, persistCover = false)
+      .withColumn(distCol,
+        cells.boundaryDistSignedRings(col(pointNvec), col(ringsCol)) * lit(radius))
+      .filter(col(distCol) <= bufferMeters)
+      .drop(ringsCol)
   }
 
   /** Point-in-polygon join with polygons as a TABLE — the lift of
@@ -1015,9 +974,10 @@ object SpatialJoins {
     * polygon id only for candidates, and ONE
     * [[cells.pointInPolygonRings]] kernel call per candidate.
     *
-    * @param pointId a UNIQUE point key — the (point, polygon)
-    *   candidate dedup keys on it, so duplicate ids would collapse
-    *   distinct points (same contract as [[corridorJoin]]).
+    * @param pointId the point key column. The join itself does not
+    *   read it (each (point, polygon) candidate arises exactly once by
+    *   construction of the ancestor-free cover, so nothing dedups on
+    *   it); keep it unique so payloads can join back by it.
     * @param polys table of (polyIdCol, ringsCol) with ringsCol the
     *   ring-list encoding [k, n_0..n_{k-1}, ring coords...] (build
     *   literals with [[graft.index.cells.ringsLiteral]] or
@@ -1026,10 +986,7 @@ object SpatialJoins {
   def polygonJoin(points: DataFrame, pointNvec: String, pointId: String,
                   polys: DataFrame, polyIdCol: String,
                   ringsCol: String): DataFrame =
-    polygonCandidates(points, pointNvec, pointId, polys, polyIdCol,
-      ringsCol, extraRad = 0.0)
-      .filter(cells.pointInPolygonRings(col(pointNvec), col(ringsCol)))
-      .drop(ringsCol)
+    containsJoin(points, pointNvec, polys, polyIdCol, ringsCol)
 
   /** Buffered polygon-TABLE join: points within `bufferMeters` of
     * each polygon (signed distance — negative inside by even-odd, a
@@ -1040,15 +997,9 @@ object SpatialJoins {
                         polys: DataFrame, polyIdCol: String, ringsCol: String,
                         bufferMeters: Double,
                         radius: Double = MeanEarthRadius,
-                        distCol: String = "dist_m"): DataFrame = {
-    require(bufferMeters >= 0.0, s"buffer must be >= 0 (got $bufferMeters)")
-    polygonCandidates(points, pointNvec, pointId, polys, polyIdCol,
-      ringsCol, extraRad = bufferMeters / radius)
-      .withColumn(distCol,
-        cells.boundaryDistSignedRings(col(pointNvec), col(ringsCol)) * lit(radius))
-      .filter(col(distCol) <= bufferMeters)
-      .drop(ringsCol)
-  }
+                        distCol: String = "dist_m"): DataFrame =
+    bufferJoin(points, pointNvec, polys, polyIdCol, ringsCol,
+      bufferMeters, radius, distCol)
 
   /** Zonal statistics: per-polygon aggregates over the exact PIP
     * join (polygon population counts, per-admin-area sums/means —
@@ -1102,44 +1053,13 @@ object SpatialJoins {
                      startMeters: Double = 100e3,
                      maxMeters: Double = math.Pi * MeanEarthRadius,
                      radius: Double = MeanEarthRadius,
-                     distCol: String = "dist_m"): DataFrame = {
-    require(startMeters > 0.0, s"startMeters must be > 0 (got $startMeters)")
-    require(maxMeters >= startMeters,
-      s"maxMeters ($maxMeters) must be >= startMeters ($startMeters)")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val retired = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def keep(df: DataFrame): DataFrame = { retired += df.persist(lvl); df }
-    try {
-      var starved = keep(points.select(col(pointId), col(pointNvec)))
-      // round 1 always runs (it also types the empty-input result)
-      var more = true
-      val rounds = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      var b = startMeters
-      while (more) {
-        val lastRound = b >= maxMeters
-        val cand = polygonBufferJoin(starved, pointNvec, pointId,
-          polys, polyIdCol, ringsCol, math.min(b, maxMeters), radius, "__sd")
-        val best = keep(cand
-          .groupBy(col(pointId))
-          .agg(min(struct(greatest(col("__sd"), lit(0.0)).as("d"),
-            col(polyIdCol).as("p"))).as("__m"))
-          .select(col(pointId), col("__m.p").as(polyIdCol),
-            col("__m.d").as(distCol)))
-        rounds += best
-        if (lastRound) more = false
-        else {
-          starved = keep(starved.join(best.select(col(pointId)),
-            Seq(pointId), "left_anti"))
-          more = starved.count() > 0L
-          b = b * 4.0
-        }
-      }
-      val out = rounds.reduceLeft(_ unionByName _)
-        .persist(lvl)
-      out.count()
-      out
-    } finally retired.foreach(_.unpersist())
-  }
+                     distCol: String = "dist_m"): DataFrame =
+    nearestLadder(points, pointNvec, pointId, polyIdCol,
+        startMeters, maxMeters, distCol) { (starved, b) =>
+      polygonBufferJoin(starved, pointNvec, pointId,
+        polys, polyIdCol, ringsCol, b, radius, "__sd")
+        .withColumn("__sd", greatest(col("__sd"), lit(0.0)))
+    }
 
   /** Nearest ROUTE per point over a route TABLE (the route analogue
     * of [[nearestPolygon]], and the table-scale lift of
@@ -1169,27 +1089,46 @@ object SpatialJoins {
                    maxMeters: Double = math.Pi * MeanEarthRadius,
                    radius: Double = MeanEarthRadius,
                    pieceFactor: Double = 4.0,
-                   distCol: String = "dist_m"): DataFrame = {
+                   distCol: String = "dist_m"): DataFrame =
+    nearestLadder(points, pointNvec, pointId, routeIdCol,
+        startMeters, maxMeters, distCol) { (starved, b) =>
+      corridorJoin(starved, pointNvec, pointId,
+        routes, routeIdCol, vertsCol, b, radius, pieceFactor, "__sd")
+    }
+
+  /** The escalation ladder behind [[nearestPolygon]] and
+    * [[nearestRoute]]: round r runs `candidates(starved, b_r)` — a
+    * provably-complete join of the still-unmatched (pointId,
+    * pointNvec) rows against targets within b_r (b, 4b, 16b, ...,
+    * capped at maxMeters), yielding (pointId, targetIdCol, `__sd`)
+    * rows with `__sd` the exact distance — and keeps each point's
+    * min (`__sd`, target id). Matched points leave the ladder; the
+    * rest escalate. Intermediate frames are persisted MEMORY_AND_DISK
+    * and unpersisted once the persisted union of the rounds is
+    * materialized. Output: (pointId, targetIdCol, distCol).
+    */
+  private def nearestLadder(points: DataFrame, pointNvec: String, pointId: String,
+                            targetIdCol: String, startMeters: Double,
+                            maxMeters: Double, distCol: String)
+                           (candidates: (DataFrame, Double) => DataFrame): DataFrame = {
     require(startMeters > 0.0, s"startMeters must be > 0 (got $startMeters)")
     require(maxMeters >= startMeters,
       s"maxMeters ($maxMeters) must be >= startMeters ($startMeters)")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val lvl = StorageLevel.MEMORY_AND_DISK
     val retired = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def keep(df: DataFrame): DataFrame = { retired += df.persist(lvl); df }
     try {
       var starved = keep(points.select(col(pointId), col(pointNvec)))
+      // round 1 always runs (it also types the empty-input result)
       var more = true
       val rounds = scala.collection.mutable.ListBuffer.empty[DataFrame]
       var b = startMeters
       while (more) {
         val lastRound = b >= maxMeters
-        val cand = corridorJoin(starved, pointNvec, pointId,
-          routes, routeIdCol, vertsCol, math.min(b, maxMeters), radius,
-          pieceFactor, "__sd")
-        val best = keep(cand
+        val best = keep(candidates(starved, math.min(b, maxMeters))
           .groupBy(col(pointId))
-          .agg(min(struct(col("__sd").as("d"), col(routeIdCol).as("r"))).as("__m"))
-          .select(col(pointId), col("__m.r").as(routeIdCol),
+          .agg(min(struct(col("__sd").as("d"), col(targetIdCol).as("t"))).as("__m"))
+          .select(col(pointId), col("__m.t").as(targetIdCol),
             col("__m.d").as(distCol)))
         rounds += best
         if (lastRound) more = false
@@ -1344,7 +1283,7 @@ object SpatialJoins {
     points
       .filter(col(timeCol).isNotNull && col(pointNvec).isNotNull)
       .select(col(trackCol), col(timeCol), col(pointNvec))
-      .crossJoin(ringsDf)
+      .crossJoin(broadcast(ringsDf))
       .withColumn("__in", cells.pointInPolygonRings(col(pointNvec), col("__rings")))
       .withColumn("__prev", lag(col("__in"), 1).over(w))
       .filter((col("__prev").isNull && col("__in")) ||
@@ -1388,7 +1327,7 @@ object SpatialJoins {
       .select(col(trackCol), col(timeCol), col(pointNvec))
       .withColumn("__dt",
         (lead(col(timeCol), 1).over(w) - col(timeCol)).cast("double"))
-      .crossJoin(ringsDf)
+      .crossJoin(broadcast(ringsDf))
       .withColumn("__in", cells.pointInPolygonRings(col(pointNvec), col("__rings")))
       .groupBy(col(trackCol), col("aoi_id"))
       .agg(

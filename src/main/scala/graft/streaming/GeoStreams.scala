@@ -143,7 +143,7 @@ object GeoStreams {
     stream.select(col(trackCol).cast("long").as("track"),
         col(tCol).cast("double").as("t"), col(nvecCol).as("__n"))
       .filter(col("t").isNotNull && col("__n").isNotNull)
-      .crossJoin(ringsDf)
+      .crossJoin(broadcast(ringsDf))
       .select(col("track"), col("aoi_id").as("aoi"), col("t"),
         graft.index.cells.pointInPolygonRings(col("__n"), col("__rings")).as("inz"))
       .as[FenceFix]
@@ -187,11 +187,13 @@ object GeoStreams {
     * `radiusMeters` great-circle distance AND `maxTimeDiff` event
     * time of each other. The batch candidate->verify pattern
     * ([[graft.operators.SpatialJoins.distanceJoin]]) carries over
-    * unchanged: the left stream probes the 3x3 ring of its cell at a
-    * level whose 1-ring provably covers the radius
-    * (CellIndex.levelForRadiusSafe), the right stream keeps exactly
-    * ONE cell (so no pair dedup is needed), and the equi-join key
-    * plus the two-sided event-time bound is exactly the shape
+    * with a smaller probe fan-out: the left stream probes the 3x3
+    * ring of its cell at a level whose 1-ring provably covers the
+    * radius (CellIndex.levelForRadiusSafe) instead of the batch
+    * join's per-row disc cover (up to ~48 cells), because the join
+    * state holds every exploded left row; the right stream keeps
+    * exactly ONE cell (so no pair dedup is needed), and the equi-join
+    * key plus the two-sided event-time bound is exactly the shape
     * Spark's stream-stream join needs to bound state: each side's
     * rows are dropped once the other side's watermark passes
     * `maxTimeDiff`. Output: left + right columns + `distCol`,
@@ -214,9 +216,8 @@ object GeoStreams {
         "rename one side before calling")
     val level = graft.index.CellIndex.levelForRadiusSafe(
       radiusMeters / sphereRadius, k = 1)
-    // the batch join falls back to disc covers / cross join beyond
-    // ring coverage; neither shape is stream-stream joinable, so
-    // refuse loudly instead of building garbage level -1 cells
+    // beyond what a 1-ring block can cover, refuse loudly instead of
+    // building garbage level -1 cells
     require(level > 0,
       f"radius ${radiusMeters}%.0f m exceeds what a 1-ring block can provably " +
         "cover (~1660 km); stream-stream distance joins need the ring regime")
@@ -241,47 +242,21 @@ object GeoStreams {
     * columns + `polyIdCol`, even-odd ring semantics. STATELESS: no
     * watermark, no streaming aggregation, append-mode safe.
     *
-    * The batch operator dedups multi-level cover candidates with
-    * dropDuplicates — on a stream that is unbounded keyed state.
-    * Instead the static cover is made ANCESTOR-FREE per polygon up
-    * front: a cover cell contained in a coarser cover cell of the
-    * same polygon is dropped (completeness holds — any point keying
-    * the dropped cell also keys the surviving ancestor at its own
-    * level), and against an ancestor-free cover a point hits at most
-    * ONE cover cell per polygon (matching both c1 at level l1 and c2
-    * at a finer l2 would force c2 inside c1, which ancestor-freeness
-    * excludes). The stream-static equi-join therefore emits each
-    * (point, polygon) candidate exactly once with NO state.
-    *
+    * Candidates come from the batch polygon joins' own cover and
+    * probe code ([[graft.operators.SpatialJoins.polygonJoin]]): the
+    * cover is ANCESTOR-FREE per polygon, so a point hits at most ONE
+    * cover cell per polygon and the stream-static equi-join emits
+    * each (point, polygon) candidate exactly once with NO dedup state.
     * The cover is cells-only (~96 cells per ring) and persisted so
     * the per-micro-batch re-execution of the static side reads the
-    * cached frame; it lives until the SparkSession drops it.
+    * cached frame; it lives until the SparkSession drops it. Null
+    * positions and an empty table / all-null rings emit nothing.
     */
   def polygonJoinStream(stream: DataFrame, pointNvec: String,
                         polys: DataFrame, polyIdCol: String,
-                        ringsCol: String): DataFrame = {
-    val polysN = polys.select(col(polyIdCol), col(ringsCol))
-      .filter(col(ringsCol).isNotNull)
-    val levels = polysN
-      .select(explode(cells.ringCoverLevels(col(ringsCol), 0.0)).as("__l"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val cover = graft.operators.SpatialJoins
-      .ancestorFreeCover(polysN, polyIdCol, ringsCol, 0.0, levels)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // empty table / all-null rings: a null key never equi-joins, so
-    // the stream runs and emits nothing (same contract as the batch
-    // polygon joins)
-    val pointCell =
-      if (levels.isEmpty) lit(null).cast("long")
-      else explode(array(levels.toSeq.map(l =>
-        cells.cellAt(col(pointNvec), l)): _*))
-    stream.filter(col(pointNvec).isNotNull)
-      .withColumn("__cell", pointCell)
-      .join(cover, "__cell")
-      .join(polysN, polyIdCol)
-      .filter(cells.pointInPolygonRings(col(pointNvec), col(ringsCol)))
-      .drop("__cell", ringsCol)
-  }
+                        ringsCol: String): DataFrame =
+    graft.operators.SpatialJoins.containsJoin(stream, pointNvec,
+      polys, polyIdCol, ringsCol, persistCover = true)
 
   final case class AsOfEvt(k: Long, ts: java.sql.Timestamp, id: Long,
                            v: Double, isL: Boolean)

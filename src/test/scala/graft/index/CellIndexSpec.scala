@@ -138,15 +138,6 @@ class CellIndexSpec extends AnyFunSuite {
     assert(fine.contains(cellAt(p.x, p.y, p.z, 14)))
   }
 
-  test("levelForRadius picks a covering level") {
-    for (meters <- Seq(10.0, 1000.0, 50000.0, 2e6)) {
-      val angle = meters / 6371009.0
-      val l = levelForRadius(angle)
-      assert(minCellAngle(l) >= angle || l == 0)
-      if (l < MaxLevel) assert(minCellAngle(l + 1) < angle || l == MaxLevel)
-    }
-  }
-
   test("levelForRadiusSafe guarantees block coverage at the level it picks") {
     for (meters <- Seq(10.0, 1000.0, 50000.0, 1e6); k <- Seq(1, 2)) {
       val angle = meters / 6371009.0

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 import graft.functions.geo
@@ -28,15 +29,32 @@ class SpatialJoinsSpec extends AnyFunSuite {
   test("distance join matches brute force") {
     val a = pointsDf(400, "a", 1)
     val b = pointsDf(300, "b", 2)
-    val radius = 800e3 // 800 km so there are plenty of pairs
-    val got = SpatialJoins.distanceJoin(a, b, "a_n", "b_n", radius)
-      .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val brute = a.crossJoin(b)
-      .withColumn("d", geo.gcDistance(col("a_n"), col("b_n")))
-      .filter(col("d") <= radius)
-      .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == brute, s"missing=${(brute -- got).take(5)} extra=${(got -- brute).take(5)}")
-    assert(brute.nonEmpty)
+    def pairs(df: DataFrame) =
+      df.select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def check(b: DataFrame, radius: Double): Set[(Long, Long)] = {
+      val got = pairs(SpatialJoins.distanceJoin(a, b, "a_n", "b_n", radius))
+      val brute = pairs(a.crossJoin(b)
+        .withColumn("d", geo.gcDistance(col("a_n"), col("b_n")))
+        .filter(col("d") <= radius))
+      assert(got == brute,
+        s"radius=$radius missing=${(brute -- got).take(5)} extra=${(got -- brute).take(5)}")
+      brute
+    }
+    assert(check(b, 800e3).nonEmpty) // 800 km so there are plenty of pairs
+    // the sub-meter band (finest cover level): the build side adds two
+    // exact copies of 50 probe points plus copies shifted ~5 cm and
+    // ~20 cm north
+    val near = a.filter(col("a_id") < 50)
+    def shifted(idOffset: Long, dLatDeg: Double) = near
+      .select((col("a_id") + idOffset).as("b_id"),
+        (col("a_lat") + dLatDeg).as("b_lat"), col("a_lon").as("b_lon"))
+      .withColumn("b_n", geo.nvecDeg(col("b_lat"), col("b_lon")))
+    val bNear = b.unionByName(shifted(1000L, 0.0)).unionByName(shifted(2000L, 0.0))
+      .unionByName(shifted(3000L, 4.5e-7)).unionByName(shifted(4000L, 1.8e-6))
+    val at0 = check(bNear, 0.0)
+    assert(at0.count(_._2 >= 1000L) == 100 && at0.forall(_._2 < 3000L), at0)
+    val atDm = check(bNear, 0.1)
+    assert(at0.subsetOf(atDm) && atDm.count(_._2 >= 3000L) == 50, atDm)
   }
 
   test("knn join matches brute force") {
