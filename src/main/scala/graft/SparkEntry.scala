@@ -699,7 +699,7 @@ object SparkEntry {
   /** Flagship on sf0.001: cell-encode customer positions, assign to
     * AOI polygons (broadcast PIP), aggregate per AOI (count + mean
     * position) and attach the 3 nearest suppliers of each AOI mean
-    * position via the cell-ring kNN join with ellipsoidal re-rank.
+    * position via the kNN join with ellipsoidal re-rank.
     */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import graft.geo.Karney
 
 /** Static entry points for Catalyst `StaticInvoke` codegen. Each method
@@ -50,11 +51,10 @@ object GeoKernels {
   }
 
   /** Exact great-circle top-k of one point against a small literal
-    * landmark set: scan `flat` (x,y,z triples) once, keep the k best
-    * by (distance, id) — the metric is the same eq-16
-    * `atan2(|n1 x n2|, n1.n2) * radius` as `geo.gcDistance`, ties
-    * broken by id like the kNN join's rank window. Returns
-    * array<struct<lm_id, dist_m>> already rank-ordered.
+    * landmark set: [[knnScan]] without re-rank, hit positions mapped to
+    * `ids`. Returns array<struct<lm_id, dist_m>> already rank-ordered,
+    * ties broken by position in `flat` (the Column wrapper orders the
+    * landmarks by id, so that is the kNN join's by-id tie-break).
     *
     * The landmark arrays ride as PLAN LITERALS (like the IVF
     * centroids), so the operator is stateless and shuffle-free: it
@@ -63,46 +63,133 @@ object GeoKernels {
     * work only, no rank window (unsupported on streams), no state.
     */
   def knnLandmarks(px: Double, py: Double, pz: Double,
-                   ids: org.apache.spark.sql.catalyst.util.ArrayData,
-                   flat: org.apache.spark.sql.catalyst.util.ArrayData,
-                   k: Int, radius: Double): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val n = ids.numElements()
-    val keep = math.min(k, n)
-    // public codegen entry point: guard k <= 0 here too (the Column
-    // wrapper validates, but a direct StaticInvoke with k=0 would
-    // read bestD(-1) inside generated code)
-    if (keep <= 0)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
-    val bestD = new Array[Double](keep)
-    val bestId = new Array[Long](keep)
+                   ids: ArrayData, flat: ArrayData,
+                   k: Int, radius: Double): GenericArrayData = {
+    val top = topK(px, py, pz, flat, k, radius, reRank = false, 1.0, 0.0, 0.0)
+    new GenericArrayData(Array.tabulate[Any](top.filled) { j =>
+      new GenericInternalRow(Array[Any](ids.getLong(top.idx(j)), top.gc(j)))
+    })
+  }
+
+  /** Exact top-k of one point against `flat`, a dense (x,y,z) n-vector
+    * array: array<struct<idx, gc, geod>> in rank order, `idx` the
+    * position in `flat`, `gc` the great-circle distance [m] (the eq-16
+    * `atan2(|n1 x n2|, n1.n2) * radius` with the exact double
+    * operations of `geo.gcDistance`, so the values are bit-identical
+    * to the Column form), `geod` the Karney ellipsoidal distance [m]
+    * on (a, f) when `reRank`, else NaN. Ties break by `idx`.
+    *
+    * Without re-rank: the k best by (gc, idx). With re-rank, the exact
+    * provable cut (geodesic >= gc * covDeflate, see
+    * `SpatialJoins.knnJoin`):
+    *  1. pool = the 3k best by (gc, idx), each with its geodesic;
+    *  2. gk1 = the pool's k-th geodesic, an upper bound on the true
+    *     k-th;
+    *  3. every other row with gc * covDeflate <= gk1 gets its
+    *     geodesic too — no row beyond that bound can reach the top k;
+    *  4. the k best by (geodesic, idx) over those rows.
+    * Lat/lon come from the same double operations as `geo.lat` /
+    * `geo.lon`, so `geod` is bit-identical to `geo.geodesicDistance`
+    * over them. Comparisons follow Spark's double ordering (NaN
+    * largest, -0.0 == 0.0).
+    */
+  def knnScan(px: Double, py: Double, pz: Double, flat: ArrayData,
+              k: Int, radius: Double, reRank: Boolean, covDeflate: Double,
+              a: Double, f: Double): GenericArrayData = {
+    val top = topK(px, py, pz, flat, k, radius, reRank, covDeflate, a, f)
+    new GenericArrayData(Array.tabulate[Any](top.filled) { j =>
+      new GenericInternalRow(Array[Any](top.idx(j), top.gc(j),
+        if (reRank) top.key(j) else Double.NaN))
+    })
+  }
+
+  /** Spark's double ordering: NaN largest, -0.0 == 0.0. */
+  private def cmp(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  /** (k1, i1) orders strictly before (k2, i2). */
+  private def before(k1: Double, i1: Int, k2: Double, i2: Int): Boolean = {
+    val c = cmp(k1, k2)
+    c < 0 || (c == 0 && i1 < i2)
+  }
+
+  /** The best `cap` entries by (key, idx), ascending, with each
+    * entry's great-circle distance alongside.
+    */
+  private final class TopK(cap: Int) {
+    val key = new Array[Double](cap)
+    val idx = new Array[Int](cap)
+    val gc = new Array[Double](cap)
     var filled = 0
-    var i = 0
-    while (i < n) {
+    /** (k, i) is in the FULL buffer: it does not order after the
+      * last entry.
+      */
+    def keeps(k: Double, i: Int): Boolean =
+      !before(key(filled - 1), idx(filled - 1), k, i)
+    // insertion into the sorted buffer (cap is small; branch-light)
+    def add(k: Double, i: Int, d: Double): Unit =
+      if (filled < cap || before(k, i, key(filled - 1), idx(filled - 1))) {
+        var j = math.min(filled, cap - 1)
+        while (j > 0 && before(k, i, key(j - 1), idx(j - 1))) {
+          key(j) = key(j - 1); idx(j) = idx(j - 1); gc(j) = gc(j - 1); j -= 1
+        }
+        key(j) = k; idx(j) = i; gc(j) = d
+        if (filled < cap) filled += 1
+      }
+  }
+
+  /** [[knnScan]]'s loop: the result's `key` is the ranking metric (gc,
+    * or the geodesic when re-ranking).
+    */
+  private def topK(px: Double, py: Double, pz: Double, flat: ArrayData,
+                   k: Int, radius: Double, reRank: Boolean, covDeflate: Double,
+                   a: Double, f: Double): TopK = {
+    val n = flat.numElements() / 3
+    // public codegen entry points: guard k <= 0 here too (the Column
+    // wrappers validate, but a direct StaticInvoke with k = 0 must not
+    // index an empty buffer)
+    if (k <= 0 || n == 0) return new TopK(0)
+    // `+ 0.0` mirrors Spark's Atan2, which normalizes -0.0 arguments
+    def gcAt(i: Int): Double = {
       val lx = flat.getDouble(3 * i); val ly = flat.getDouble(3 * i + 1)
       val lz = flat.getDouble(3 * i + 2)
       val cx = py * lz - pz * ly; val cy = pz * lx - px * lz; val cz = px * ly - py * lx
-      val d = math.atan2(math.sqrt(cx * cx + cy * cy + cz * cz),
-        px * lx + py * ly + pz * lz) * radius
-      val id = ids.getLong(i)
-      // insertion into the sorted top-k (k is small; branch-light)
-      if (filled < keep || d < bestD(filled - 1) ||
-          (d == bestD(filled - 1) && id < bestId(filled - 1))) {
-        var j = math.min(filled, keep - 1)
-        while (j > 0 && (bestD(j - 1) > d || (bestD(j - 1) == d && bestId(j - 1) > id))) {
-          bestD(j) = bestD(j - 1); bestId(j) = bestId(j - 1); j -= 1
-        }
-        bestD(j) = d; bestId(j) = id
-        if (filled < keep) filled += 1
+      math.atan2(math.sqrt(cx * cx + cy * cy + cz * cz) + 0.0,
+        px * lx + py * ly + pz * lz + 0.0) * radius
+    }
+    // the k best by gc, or the re-rank's 3k pool
+    val pool = new TopK(math.min(if (reRank) 3L * k else k.toLong, n.toLong).toInt)
+    var i = 0
+    while (i < n) { val d = gcAt(i); pool.add(d, i, d); i += 1 }
+    if (!reRank) return pool
+    val karney = Karney(a, f)
+    val qLat = math.atan2(pz + 0.0, math.sqrt(px * px + py * py) + 0.0)
+    val qLon = math.atan2(py + 0.0, px + 0.0)
+    def geodAt(i: Int): Double = {
+      val lx = flat.getDouble(3 * i); val ly = flat.getDouble(3 * i + 1)
+      val lz = flat.getDouble(3 * i + 2)
+      karney.inverse(qLat, qLon, math.atan2(lz + 0.0, math.sqrt(lx * lx + ly * ly) + 0.0),
+        math.atan2(ly + 0.0, lx + 0.0))._1
+    }
+    val top = new TopK(math.min(k, n))
+    val poolGeod = new Array[Double](pool.filled)
+    var j = 0
+    while (j < pool.filled) {
+      poolGeod(j) = geodAt(pool.idx(j))
+      top.add(poolGeod(j), pool.idx(j), pool.gc(j))
+      j += 1
+    }
+    if (pool.filled < n) { // the pool is full: 3k < n
+      java.util.Arrays.sort(poolGeod)
+      val gk1 = poolGeod(k - 1)
+      i = 0
+      while (i < n) {
+        val d = gcAt(i)
+        if (!pool.keeps(d, i) && cmp(d * covDeflate, gk1) <= 0) top.add(geodAt(i), i, d)
+        i += 1
       }
-      i += 1
     }
-    val out = new Array[Any](filled)
-    i = 0
-    while (i < filled) {
-      out(i) = new GenericInternalRow(Array[Any](bestId(i), bestD(i)))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    top
   }
 
   /** True when the (lat1,lon1)->(lat2,lon2) inverse problem lies in

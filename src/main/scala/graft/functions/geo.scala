@@ -264,31 +264,20 @@ object geo {
   /** Great-circle distance [rad] from `p` to the ARC from `a1` to
     * `a2` (the segment, not the full circle): the cross-circle
     * distance when the foot of the perpendicular lies ON the arc,
-    * else the nearer endpoint. The within-arc test checks that the
-    * (unnormalized) foot point sits on the a1-side of a2 AND the
-    * a2-side of a1 via signed triple products — no trig, no
-    * normalization, robust at both edge poles (a pole point yields a
-    * zero foot vector, which passes both >= 0 tests and lands in the
-    * atan2(|c.p|, 0) = pi/2 branch, the true distance to every point
-    * of that circle). Contract: a1 and a2 must be distinct and
-    * non-antipodal (same as [[gcNormal]]).
+    * else the nearer endpoint. One static call into
+    * `CellKernels.segDistRad` (the same kernel as `cells.segDist`), so
+    * the plan holds one node per segment however the endpoints are
+    * computed. Contract: a1 and a2 must be distinct and non-antipodal
+    * (same as [[gcNormal]]).
     */
-  def segmentDistanceRad(a1: Column, a2: Column, p: Column): Column = {
-    val c = gcNormal(a1, a2)
-    val foot = vsub(p, vscale(c, vdot(c, p)))
-    val within = (vdot(vcross(a1, foot), c) >= 0.0) &&
-      (vdot(vcross(foot, a2), c) >= 0.0)
-    when(within, atan2(abs(vdot(c, p)), vnorm(foot)))
-      .otherwise(least(gcDistanceRad(p, a1), gcDistanceRad(p, a2)))
-  }
+  def segmentDistanceRad(a1: Column, a2: Column, p: Column): Column =
+    graft.index.cells.segDist(p, a1, a2)
 
   /** Min great-circle distance [rad] from `p` to the BOUNDARY of the
     * polygon with the given n-vector vertices (fixed arity >= 3,
-    * closing edge included) — a `least` over the per-edge segment
-    * distances. WARNING: each [[segmentDistanceRad]] term duplicates
-    * its normal/foot subtrees per reference, so the plan tree grows
-    * superlinearly with edge count — fine for a triangle or two,
-    * but for whole-polygon work use the single-pass kernel
+    * closing edge included) — a `least` over one
+    * [[segmentDistanceRad]] kernel call per edge. For a polygon held
+    * as a vertex-array column use the single-pass kernel
     * (`cells.boundaryDistSigned`), which is what
     * `SpatialJoins.aoiBoundaryDistance` does.
     */

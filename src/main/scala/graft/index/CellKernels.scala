@@ -437,11 +437,10 @@ object CellKernels {
     * closed): per edge, the cross-circle distance when the foot of
     * the perpendicular lies ON the arc (signed-triple-product test,
     * no trig), else the nearer endpoint; min over edges; NEGATIVE
-    * when [[pointInPolygon]] holds. One flat JITed pass — the Column
-    * expression form of the same math (geo.segmentDistanceRad
-    * composed per edge) duplicates the shared normal/foot subtrees
-    * per reference and grows the plan tree superlinearly in edge
-    * count, which is why this is a kernel. Same hemisphere contract
+    * when [[pointInPolygon]] holds. One flat JITed pass over a
+    * vertex array of any length (geo.polygonBoundaryDistanceRad is
+    * the fixed-arity Column form: one [[segDistRad]] call per edge).
+    * Same hemisphere contract
     * as the winding test; adjacent duplicate/antipodal vertices are
     * a caller bug (NaN normal).
     */

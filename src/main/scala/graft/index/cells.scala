@@ -67,15 +67,11 @@ object cells {
       Seq(DoubleType, DoubleType, DoubleType, IntegerType, DoubleType))
 
   /** Great-circle distance [rad] from `p` to the minor arc a1->a2 —
-    * ONE JITed CellKernels.segDistRad call. Use this instead of
-    * [[geo.segmentDistanceRad]] inside non-trivial plans: the
-    * composed Column form duplicates its normal/foot subtrees per
-    * reference, and when the endpoints are themselves computed
-    * columns the collapsed projection carries thousands of
-    * extract-value nodes — Catalyst's NestedColumnAliasing is
-    * quadratic in those and wedges the optimizer (observed: 40+ min
-    * on one corridor-join plan). Value-identical to the Column form
-    * on the contract domain (BoundaryDistSpec pins the agreement).
+    * ONE JITed CellKernels.segDistRad call (also behind
+    * [[geo.segmentDistanceRad]]). A single plan node per segment: a
+    * composed arithmetic form would repeat its normal/foot subtrees
+    * per reference and, over computed endpoints, hand Catalyst's
+    * optimizer trees it cannot collapse in reasonable time.
     */
   def segDist(p: Column, a1: Column, a2: Column): Column =
     GraftSqlBridge.staticInvoke(kernelsClass, DoubleType, "segDistRad",

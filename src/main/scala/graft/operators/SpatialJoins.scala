@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
@@ -202,28 +202,38 @@ object SpatialJoins {
       .drop("__cell", "__salt")
   }
 
-  /** k-nearest-neighbor join with iterative cell-ring expansion and
-    * exact re-ranking.
+  /** k-nearest-neighbor join with exact re-ranking. Output: query
+    * columns + data columns + distCol + `rank` (1..k, ties broken by
+    * data id for determinism), then `geodesic_m` with
+    * `geodesicReRank`. `qId` must be unique per query row (both paths
+    * key their per-query state on it). Rows with a null position, on
+    * either side, never rank.
     *
-    * Per query row: candidates from successively wider blocks around
-    * the query's cell; a query is complete once it has k candidates
-    * whose k-th distance lies inside the block's EXACT per-query
-    * coverage radius (CellIndex.ringCoverageRad — accounts for
-    * gnomonic compression at cube-face edges, so nothing closer can
-    * hide in an unprobed cell). Queries left unsatisfied (sparse
+    * Small data side (<= 100k estimated rows, <= 64 MB, Q x D within
+    * `bruteForceThreshold`): one kernel scan per query row
+    * ([[graft.functions.GeoKernels.knnScan]]). The data side is
+    * collected once in `dId` order and rides as a flat n-vector plan
+    * literal; the kernel's (index, distance) hits join its payload
+    * back through a broadcast local relation. No cross join, no
+    * shuffle, no rank window: the top-k and the geodesic re-rank's
+    * provable cut both run inside the kernel.
+    *
+    * Otherwise, per query row: candidates from successively wider
+    * blocks around the query's cell; a query is complete once it has
+    * k candidates whose k-th distance lies inside the block's EXACT
+    * per-query coverage radius (CellIndex.ringCoverageRad — accounts
+    * for gnomonic compression at cube-face edges, so nothing closer
+    * can hide in an unprobed cell). Queries left unsatisfied (sparse
     * regions) escalate to COARSER levels via parent-cell arithmetic —
     * never a cross join against the data side — ending in a
     * full-sphere wrap block whose coverage is pi, which closes the
-    * proof for every query. Output: query columns + data columns +
-    * distCol + `rank` (1..k, ties broken by data id for determinism).
+    * proof for every query. Each round's candidate set and the
+    * straggler chain are persisted MEMORY_AND_DISK (recomputable on
+    * executor loss, unlike localCheckpoint) and explicitly unpersisted
+    * once the final result is materialized.
     *
-    * Each round's candidate set and the straggler chain are persisted
-    * MEMORY_AND_DISK (recomputable on executor loss, unlike
-    * localCheckpoint) and explicitly unpersisted once the final result
-    * is materialized.
-    *
-    * @param level cell level; pass <= 0 to auto-size from data count
-    *              so a cell holds ~2k points on average.
+    * @param level cell level of the ring path; pass <= 0 to auto-size
+    *              from data count so a cell holds ~2k points on average.
     */
   def knnJoin(queries: DataFrame, data: DataFrame,
               qNvec: String, dNvec: String, qId: String, dId: String,
@@ -350,12 +360,14 @@ object SpatialJoins {
         (BigInt(math.max(1L, a)) * BigInt(math.max(1L, b))) <= BigInt(budget)
     val dataCount = estRows(data)
     val dataBytes = data.queryExecution.optimizedPlan.stats.sizeInBytes
-    // cost guard: a broadcast nested-loop pass materializes Q x D
-    // candidate rows — only cheaper than the ring machinery when that
-    // product is small (and the data side must fit a broadcast)
+    // cost guard: the kernel scan costs Q x D distance evaluations
+    // and ships the collected data side to every task — only cheaper
+    // than the ring machinery when that product is small (and the data
+    // side must fit the driver and the plan)
     if (dataCount <= 100000 && dataBytes <= (64L << 20) &&
         pairBudgetOk(dataCount, estRows(queries), bruteForceThreshold)) {
-      return rank(queries.crossJoin(broadcast(data)))
+      return knnScanJoin(queries, data, qNvec, dNvec, dId, k, sphereRadius,
+        distCol, geodesicReRank, covDeflate)
     }
     val lvl =
       if (level > 0) level
@@ -440,6 +452,71 @@ object SpatialJoins {
     result
   }
 
+  /** [[knnJoin]]'s small-data path: the data side collected in `dId`
+    * order (rows with a null position dropped), its n-vectors as one
+    * flat plan literal scanned by [[graft.functions.GeoKernels.knnScan]]
+    * per query row, and the hits joined back to the data payload by
+    * their index through a broadcast local relation. Index order is
+    * `dId` order, so the kernel's (distance, index) ties break as the
+    * ring path's (distance, `dId`) window does.
+    */
+  private def knnScanJoin(queries: DataFrame, data: DataFrame,
+                          qNvec: String, dNvec: String, dId: String, k: Int,
+                          sphereRadius: Double, distCol: String,
+                          geodesicReRank: Boolean, covDeflate: Double): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.RowOrdering
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types._
+    val n = col(dNvec)
+    val idPos = data.schema.fieldIndex(dId)
+    val idType = data.schema(idPos).dataType
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    // Spark's own ascending order of the id type (what the ring
+    // path's rank window sorts by), applied on the driver
+    val rows = data
+      .filter(geo.vx(n).isNotNull && geo.vy(n).isNotNull && geo.vz(n).isNotNull)
+      .collect()
+      .sortBy(r => InternalRow(toCatalyst(r.get(idPos))))(
+        RowOrdering.createNaturalAscendingOrdering(Seq(idType)))
+    val nPos = data.schema.fieldIndex(dNvec)
+    val flat = rows.flatMap { r =>
+      val v = r.getStruct(nPos)
+      Array(v.getAs[Double]("x"), v.getAs[Double]("y"), v.getAs[Double]("z"))
+    }
+    val payload = queries.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows.indices.map(i => Row.fromSeq(rows(i).toSeq :+ i)): _*),
+      data.schema.add("__idx", IntegerType, nullable = false))
+    val e = Ellipsoids.WGS84
+    val hitType = ArrayType(StructType(Seq(
+      StructField("idx", IntegerType, nullable = false),
+      StructField("gc", DoubleType, nullable = false),
+      StructField("geod", DoubleType, nullable = false))), containsNull = false)
+    val q = col(qNvec)
+    val scan = GraftSqlBridge.staticInvoke(
+      Class.forName("graft.functions.GeoKernels"), hitType, "knnScan",
+      Seq(geo.vx(q), geo.vy(q), geo.vz(q), flatLiteral(flat), lit(k), lit(sphereRadius),
+        lit(geodesicReRank), lit(covDeflate), lit(e.a), lit(e.f)),
+      Seq(DoubleType, DoubleType, DoubleType, ArrayType(DoubleType, containsNull = false),
+        IntegerType, DoubleType, BooleanType, DoubleType, DoubleType, DoubleType))
+    val hits = queries.select(col("*"), posexplode(scan).as(Seq("__pos", "__hit")))
+    hits.join(broadcast(payload), hits("__hit.idx") === payload("__idx"))
+      .select(queries.columns.toSeq.map(hits(_)) ++ data.columns.map(payload(_)) ++
+        Seq(hits("__hit.gc").as(distCol), (hits("__pos") + 1).as("rank")) ++
+        (if (geodesicReRank) Seq(hits("__hit.geod").as("geodesic_m")) else Nil): _*)
+  }
+
+  /** A dense double array as one plan literal in unsafe layout (the
+    * kernels read it without unboxing).
+    */
+  private def flatLiteral(flat: Array[Double]): Column = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    GraftSqlBridge.column(Literal(
+      UnsafeArrayData.fromPrimitiveArray(flat), ArrayType(DoubleType, containsNull = false)))
+  }
+
   /** Exact k-nearest-landmarks for every row, against a SMALL
     * in-memory landmark set ((id, nvec) pairs — reference points,
     * beacons, POI anchors): one scalar kernel scan per row
@@ -463,12 +540,14 @@ object SpatialJoins {
     require(landmarks.nonEmpty, "landmarks must be non-empty")
     require(k >= 1, s"k must be >= 1 (got $k)")
     import org.apache.spark.sql.types._
-    val ids = typedlit(landmarks.map(_._1))
-    val flat = typedlit(landmarks.flatMap { case (_, v) => Seq(v.x, v.y, v.z) })
+    // id order: the kernel breaks distance ties by position
+    val sorted = landmarks.sortBy(_._1)
+    val ids = typedlit(sorted.map(_._1))
+    val flat = flatLiteral(sorted.flatMap { case (_, v) => Array(v.x, v.y, v.z) }.toArray)
     val outType = ArrayType(StructType(Seq(
       StructField("lm_id", LongType, nullable = false),
       StructField(distCol, DoubleType, nullable = false))), containsNull = false)
-    val topk = org.apache.spark.sql.GraftSqlBridge.staticInvoke(
+    val topk = GraftSqlBridge.staticInvoke(
       Class.forName("graft.functions.GeoKernels"), outType, "knnLandmarks",
       Seq(col(nvecCol).getField("x"), col(nvecCol).getField("y"),
         col(nvecCol).getField("z"), ids, flat, lit(k), lit(sphereRadius)),
@@ -666,11 +745,7 @@ object SpatialJoins {
     val level = CellIndex.discCoverLevel(coverAngle)
     def pc(i: Int) = element_at(col("__p"), i)
     // endpoints ride as FLAT doubles and the exact predicate is ONE
-    // JITed kernel call (cells.segDist): the composed Column form
-    // (geo.segmentDistanceRad) duplicates its normal/foot subtrees
-    // per reference, and over element_at-computed endpoints the
-    // collapsed projection's thousands of extract-value nodes wedge
-    // Catalyst's NestedColumnAliasing for tens of minutes
+    // JITed kernel call (cells.segDist), a single plan node per piece
     val pieces = routes
       .select(col(routeIdCol), explode(cells.corridorPieces(col(vertsCol), maxPiece)).as("__p"))
       .select(col(routeIdCol),

@@ -195,12 +195,81 @@ class SpatialJoinsSpec extends AnyFunSuite {
   test("knn small-build shortcut equals ring path") {
     val q = pointsDf(60, "q", 21)
     val d = pointsDf(300, "d", 22)
-    val viaShortcut = SpatialJoins.knnJoin(q, d, "q_n", "d_n", "q_id", "d_id", 4)
-      .select("q_id", "d_id", "rank").collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val viaRings = SpatialJoins.knnJoin(q, d, "q_n", "d_n", "q_id", "d_id", 4,
-        bruteForceThreshold = 0)
-      .select("q_id", "d_id", "rank").collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(viaShortcut == viaRings)
+    // same columns in the same order, and distances compared exactly:
+    // the shortcut's kernel computes them with the Column forms'
+    // double operations
+    for (reRank <- Seq(false, true)) {
+      def run(thresh: Long) = {
+        val out = SpatialJoins.knnJoin(q, d, "q_n", "d_n", "q_id", "d_id", 4,
+          bruteForceThreshold = thresh, geodesicReRank = reRank)
+        val rows = out.select("q_id", "d_id", "rank", "dist_m",
+            if (reRank) "geodesic_m" else "dist_m").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3), r.getDouble(4)))
+        (out.schema.map(f => (f.name, f.dataType)), rows.toSet)
+      }
+      val (shortcutCols, viaShortcut) = run(2000000L)
+      val (ringCols, viaRings) = run(0L)
+      assert(shortcutCols == ringCols, s"reRank=$reRank")
+      assert(viaShortcut.size == 60 * 4, s"reRank=$reRank")
+      assert(viaShortcut == viaRings, s"reRank=$reRank: " +
+        s"${(viaShortcut -- viaRings).take(3)} vs ${(viaRings -- viaShortcut).take(3)}")
+    }
+  }
+
+  test("knn null positions: a null query yields no rows, a null data row never ranks") {
+    import spark.implicits._
+    // the null data row carries the smallest id, so a path that sorted
+    // null distances first would rank it 1
+    val nullPos = when(lit(false), geo.nvecDeg(lit(0.0), lit(0.0)))
+    val q = pointsDf(12, "q", 25).select("q_id", "q_n")
+      .unionByName(Seq(99L).toDF("q_id").withColumn("q_n", nullPos))
+    val d = pointsDf(30, "d", 26).select((col("d_id") + 1).as("d_id"), col("d_n"))
+      .unionByName(Seq(0L).toDF("d_id").withColumn("d_n", nullPos))
+    for (thresh <- Seq(2000000L, 0L); reRank <- Seq(false, true)) {
+      val got = SpatialJoins.knnJoin(q, d, "q_n", "d_n", "q_id", "d_id", 3,
+          bruteForceThreshold = thresh, geodesicReRank = reRank)
+        .select("q_id", "d_id", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+      val tag = s"threshold=$thresh reRank=$reRank"
+      assert(!got.exists(_._1 == 99L), s"$tag: null query ranked ${got.filter(_._1 == 99L).toSeq}")
+      assert(!got.exists(_._2 == 0L), s"$tag: null data row ranked ${got.filter(_._2 == 0L).toSeq}")
+      assert(got.length == 12 * 3 && got.map(_._3).toSet == Set(1, 2, 3), s"$tag: ${got.length} rows")
+    }
+  }
+
+  test("knn ties on duplicate positions rank by data id on both paths (Long and String ids)") {
+    import spark.implicits._
+    // 20 distinct positions, each held by three data rows under ids
+    // whose order differs between the numeric and the string form
+    // ("10" < "9"), so the two id types tie-break differently
+    val base = pointsDf(20, "d", 27).select("d_lat", "d_lon").collect()
+      .map(r => (r.getDouble(0), r.getDouble(1)))
+    val dup = base.indices.flatMap { i =>
+      Seq(7L, 40L, 100L).map(m => ((i * 131L + m) % 997L, base(i)._1, base(i)._2))
+    }
+    assert(dup.map(_._1).distinct.size == dup.size)
+    val dLong = dup.toDF("d_id", "d_lat", "d_lon")
+      .withColumn("d_n", geo.nvecDeg(col("d_lat"), col("d_lon")))
+    val dStr = dLong.withColumn("d_id", col("d_id").cast("string"))
+    val q = pointsDf(25, "q", 28)
+    for (d <- Seq(dLong, dStr); reRank <- Seq(false, true)) {
+      def run(thresh: Long) = SpatialJoins.knnJoin(q, d, "q_n", "d_n", "q_id", "d_id", 5,
+          bruteForceThreshold = thresh, geodesicReRank = reRank)
+        .select(col("q_id"), col("d_id").cast("string"), col("rank")).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
+      val viaShortcut = run(2000000L)
+      val tag = s"id=${d.schema("d_id").dataType} reRank=$reRank"
+      assert(viaShortcut.size == 25 * 5, tag)
+      assert(viaShortcut == run(0L), tag)
+      // every query's first three hits share a position: ranks 1..3
+      // hold that position's ids in the id type's own order
+      val byQ = viaShortcut.groupBy(_._1)
+      val ordered = byQ.values.map(_.toSeq.sortBy(_._3).map(_._2).take(3))
+      ordered.foreach { ids =>
+        val want = if (d eq dLong) ids.sortBy(_.toLong) else ids.sorted
+        assert(ids == want, s"$tag: $ids")
+      }
+    }
   }
 
   test("salted distance join handles hot cells and stays exact") {
@@ -256,54 +325,69 @@ class SpatialJoinsSpec extends AnyFunSuite {
   }
 
   test("knn ring path never executes a cross join against the data side") {
-    // dedicated session => QueryExecutionListener sees only this test's
-    // actions; sparse data at a fine level forces the full escalation
-    // chain (base rings -> coarser levels -> wrap block), which in
-    // round 1 ended in remaining.crossJoin(data)
-    val s2 = spark.newSession()
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString)
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    s2.listenerManager.register(listener)
-    try {
-      import s2.implicits._
-      val q = (0 until 40).map { i =>
-        val la = math.toDegrees(math.asin(2 * rnd(900001L + i * 2) - 1))
-        val lo = 360 * rnd(900001L + i * 2 + 1) - 180
-        (i.toLong, la, lo)
-      }.toDF("q_id", "q_lat", "q_lon")
-        .withColumn("q_n", geo.nvecDeg(col("q_lat"), col("q_lon")))
-      val d = (0 until 12).map { i =>
-        val la = math.toDegrees(math.asin(2 * rnd(910001L + i * 2) - 1))
-        val lo = 360 * rnd(910001L + i * 2 + 1) - 180
-        (i.toLong, la, lo)
-      }.toDF("d_id", "d_lat", "d_lon")
-        .withColumn("d_n", geo.nvecDeg(col("d_lat"), col("d_lon")))
-      val res = SpatialJoins.knnJoin(q, d, "q_n", "d_n", "q_id", "d_id", 3,
-        level = 10, bruteForceThreshold = 0)
-      assert(res.count() == 40 * 3)
-      // drain the async listener bus: wait until no new plans arrive
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 4 && waited < 100) {
-        Thread.sleep(100)
-        if (plans.size == last) stable += 1 else { stable = 0; last = plans.size }
-        waited += 1
+    // one dedicated session per knnJoin call => its
+    // QueryExecutionListener sees only that call's actions; sparse data
+    // at a fine level forces the full escalation chain (base rings ->
+    // coarser levels -> wrap block), which in round 1 ended in
+    // remaining.crossJoin(data). The default threshold takes the
+    // small-data kernel scan, which must run no cross join and no rank
+    // window either.
+    def executedPlans(run: (DataFrame, DataFrame) => DataFrame): Array[String] = {
+      val s2 = spark.newSession()
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+                               qe: org.apache.spark.sql.execution.QueryExecution,
+                               durationNs: Long): Unit =
+          plans.add(qe.executedPlan.toString)
+        override def onFailure(funcName: String,
+                               qe: org.apache.spark.sql.execution.QueryExecution,
+                               exception: Exception): Unit = ()
       }
-      assert(plans.size > 0, "listener captured no plans")
-      val offending = plans.toArray(Array.empty[String]).filter(p =>
-        p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin"))
-      if (offending.nonEmpty)
-        fail(s"knnJoin executed a cross-join plan:\n${offending.head.take(2000)}")
-    } finally s2.listenerManager.unregister(listener)
+      s2.listenerManager.register(listener)
+      try {
+        import s2.implicits._
+        val q = (0 until 40).map { i =>
+          val la = math.toDegrees(math.asin(2 * rnd(900001L + i * 2) - 1))
+          val lo = 360 * rnd(900001L + i * 2 + 1) - 180
+          (i.toLong, la, lo)
+        }.toDF("q_id", "q_lat", "q_lon")
+          .withColumn("q_n", geo.nvecDeg(col("q_lat"), col("q_lon")))
+        val d = (0 until 12).map { i =>
+          val la = math.toDegrees(math.asin(2 * rnd(910001L + i * 2) - 1))
+          val lo = 360 * rnd(910001L + i * 2 + 1) - 180
+          (i.toLong, la, lo)
+        }.toDF("d_id", "d_lat", "d_lon")
+          .withColumn("d_n", geo.nvecDeg(col("d_lat"), col("d_lon")))
+        assert(run(q, d).count() == 40 * 3)
+        // drain the async listener bus: wait until no new plans arrive
+        var last = -1
+        var stable = 0
+        var waited = 0
+        while (stable < 4 && waited < 100) {
+          Thread.sleep(100)
+          if (plans.size == last) stable += 1 else { stable = 0; last = plans.size }
+          waited += 1
+        }
+        assert(plans.size > 0, "listener captured no plans")
+        plans.toArray(Array.empty[String])
+      } finally s2.listenerManager.unregister(listener)
+    }
+    val offending = executedPlans(SpatialJoins.knnJoin(_, _, "q_n", "d_n", "q_id", "d_id", 3,
+      level = 10, bruteForceThreshold = 0)).filter(p =>
+      p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin"))
+    if (offending.nonEmpty)
+      fail(s"knnJoin executed a cross-join plan:\n${offending.head.take(2000)}")
+    for (reRank <- Seq(false, true)) {
+      val shortcut = executedPlans(SpatialJoins.knnJoin(_, _, "q_n", "d_n", "q_id", "d_id", 3,
+        geodesicReRank = reRank))
+      assert(shortcut.exists(_.contains("Generate")), shortcut.mkString("\n"))
+      val bad = shortcut.filter(p => p.contains("CartesianProduct") ||
+        p.contains("BroadcastNestedLoopJoin") || p.contains("Window"))
+      if (bad.nonEmpty)
+        fail(s"knnJoin shortcut (reRank=$reRank) ran a cross join or window:\n" +
+          bad.head.take(2000))
+    }
   }
 
   test("distance join broadcasts the build side when asked") {
