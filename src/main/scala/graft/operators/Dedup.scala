@@ -324,6 +324,11 @@ object Dedup {
     pairs.unionByName(starPairs)
   }
 
+  /** Raw edges the local union-find pass may hold: ~150 B each
+    * within an eighth of the driver heap.
+    */
+  private def localEdgeBudget: Long = Runtime.getRuntime.maxMemory / 8 / 150
+
   /** Connected components over a near-dup PAIR list — the cluster
     * resolution step a dedup pipeline needs after [[minHashPairs]] /
     * [[hammingNearDups]] / `Similarity.embeddingNearDups` (pairs
@@ -343,13 +348,14 @@ object Dedup {
     * large input scale, and the guard is an exact count of the
     * persisted edge cache (which round 1 would materialize anyway),
     * never a stats guess. The local pass costs the driver ~150 B per
-    * symmetrized edge transiently (collected rows + union-find maps +
-    * the output array), so the default threshold keeps it under
-    * ~300 MB — sized for ordinary production driver heaps (8 GB+),
-    * and several distributed rounds of 3 jobs each cost more wall
-    * than collecting 2M narrow edges (measured: the 15k-point dbscan
-    * gate's ~900k-edge core graph spent 1.1-2.7 s in pointer-doubling
-    * rounds vs ~0.3 s local). Lower it on memory-tight drivers. Rows with a
+    * raw symmetrized edge transiently (collected rows + union-find
+    * maps + the output array), so the default threshold keeps it
+    * within an eighth of the driver heap (`Runtime.maxMemory`): about
+    * 0.9M edges at Spark's 1 GB default heap, about 7M at 8 GB. Below
+    * that, several distributed rounds of 3 jobs each cost more wall
+    * than the collect (measured: the 15k-point dbscan gate's
+    * ~900k-edge core graph spent 1.1-2.7 s in pointer-doubling rounds
+    * vs ~0.3 s local). `0L` forces the distributed path. Rows with a
     * null id on either side never crash either path: a null id is
     * not a node, and the non-null side of a half-null pair still
     * comes out as an isolated component.
@@ -372,7 +378,7 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIters: Int = 50,
-                          localEdgeThreshold: Long = 2000000L): DataFrame = {
+                          localEdgeThreshold: Long = localEdgeBudget): DataFrame = {
     val spark = pairs.sparkSession
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // a null id is not a node: drop null-src rows up front (the

@@ -172,6 +172,13 @@ object ImageTable {
   // recomputes.
   private val lastDecode =
     new ThreadLocal[(Array[Byte], Array[Byte])]
+
+  /** RGB pixels (3 bytes per pixel, row-major) of an image payload.
+    * The returned array is shared, never a copy, and callers must not
+    * mutate it: for RAW it is `bytes` itself, and for an encoded
+    * payload it may be this thread's memo, which the next call with
+    * the same `bytes` array returns again.
+    */
   def decode(bytes: Array[Byte], w: Int, h: Int, fmt: String): Array[Byte] =
     if (fmt == "RAW") bytes
     else {

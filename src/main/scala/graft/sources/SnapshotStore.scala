@@ -1,9 +1,17 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods
+import com.fasterxml.jackson.core.util.{DefaultPrettyPrinter, Separators}
 import java.nio.file.{Files, Paths, Path, StandardCopyOption}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
+import SnapshotStore.{FileEntry, Manifest}
 
 /** Iceberg-style snapshot/manifest layer over parquet directories
   * (hand-rolled: no Iceberg jar exists in this environment; SURVEY.md
@@ -11,17 +19,23 @@ import scala.jdk.CollectionConverters._
   *
   * {{{
   *   data/s<N>/<name>/...parquet     immutable data of snapshot N
-  *   _snapshots/v<N>.json            snapshot: files, counts, lineage
+  *   _snapshots/v<N>.json            snapshot N's Manifest (JSON)
   *   _snapshots/current              text pointer to latest N
   * }}}
   *
+  * A manifest is one [[SnapshotStore.Manifest]] value with one encoder
+  * and one decoder; every reader goes through the decoded value, and a
+  * manifest that does not decode throws `IllegalStateException` naming
+  * the file instead of yielding a partial file list.
+  *
   * Commit protocol: data is written to the snapshot-versioned
-  * directory, the snapshot JSON is written, and `current` is replaced
-  * by atomic rename — readers only ever follow `current` so a crashed
-  * writer leaves at most unreferenced files, never a torn table
-  * (same guarantee Iceberg's metadata pointer gives). Re-committing an
-  * already-current name+version is a no-op, which is what makes
-  * [[getOrCompute]] a resumable checkpoint.
+  * directory, the manifest is written, and `current` is replaced (both
+  * files by write-then-rename, so neither is ever half-written) —
+  * readers only ever follow `current` so a crashed writer leaves at
+  * most unreferenced files, never a torn table (same guarantee
+  * Iceberg's metadata pointer gives). Re-committing an already-current
+  * name+version is a no-op, which is what makes [[getOrCompute]] a
+  * resumable checkpoint.
   */
 final class SnapshotStore(spark: SparkSession, root: String) {
   private val snapDir = Paths.get(root, "_snapshots")
@@ -45,58 +59,43 @@ final class SnapshotStore(spark: SparkSession, root: String) {
 
   private def snapshotJson(v: Int): Path = snapDir.resolve(s"v$v.json")
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  /** JSON string-literal body: matches up to the CLOSING quote even
-    * when the value contains esc()-escaped quotes/backslashes (a plain
-    * `[^"]*` would stop at the first escaped quote).
+  /** Write-then-rename, so a crash never leaves a half-written file
+    * under `p`'s name (a torn manifest would not decode on resume).
     */
-  private val JsonStr = """(?:[^"\\]|\\.)*"""
-
-  private def unesc(s: String): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) s.charAt(i + 1) match {
-        case 'u' if i + 5 < s.length =>
-          b.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-        case e => b.append(e); i += 2
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
+  private def writeAtomic(p: Path, text: String): Unit = {
+    val tmp = p.resolveSibling(s".${p.getFileName}.tmp")
+    Files.writeString(tmp, text)
+    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
   }
+
+  private def manifestAt(v: Int): Manifest =
+    Manifest.decode(Files.readString(snapshotJson(v)), snapshotJson(v).toString)
+
+  /** The version index: every committed manifest, v1 to current, in
+    * order; expired versions (deleted manifests) are skipped.
+    */
+  private def manifests: Seq[Manifest] =
+    (1 to currentVersion.getOrElse(0)).filter(v => Files.exists(snapshotJson(v))).map(manifestAt)
+
+  /** Latest manifest of `name` at or before version `asOf`. */
+  private def manifestOf(name: String, asOf: Int = Int.MaxValue): Option[Manifest] =
+    manifests.filter(m => m.name == name && m.version <= asOf).lastOption
+
+  private def latest(name: String): Manifest = manifestOf(name).getOrElse(
+    throw new IllegalArgumentException(s"no snapshot named '$name' in $root"))
 
   /** All committed snapshots: (version, name, rowCount). */
-  def snapshots: Seq[(Int, String, Long)] =
-    (1 to currentVersion.getOrElse(0)).flatMap { v =>
-      val p = snapshotJson(v)
-      if (!Files.exists(p)) None
-      else {
-        val s = Files.readString(p)
-        val name = ("\"name\"\\s*:\\s*\"(" + JsonStr + ")\"").r.findFirstMatchIn(s).map(m => unesc(m.group(1)))
-        val rows = """"rowCount"\s*:\s*(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
-        Some((v, name.getOrElse(""), rows.getOrElse(0L)))
-      }
-    }
+  def snapshots: Seq[(Int, String, Long)] = manifests.map(m => (m.version, m.name, m.rowCount))
 
   /** Latest committed snapshot version carrying `name`, if any. */
-  def versionOf(name: String): Option[Int] =
-    snapshots.filter(_._2 == name).map(_._1).lastOption
+  def versionOf(name: String): Option[Int] = manifestOf(name).map(_.version)
 
   def dataPath(v: Int, name: String): String =
     Paths.get(root, "data", s"s$v", name).toString
 
-  def read(name: String): DataFrame = {
-    val v = versionOf(name).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot named '$name' in $root"))
-    spark.read.parquet(dataPath(v, name))
-  }
+  def read(name: String): DataFrame =
+    spark.read.parquet(dataPath(latest(name).version, name))
 
   /** Time travel: read `name` as of store version `asOf` — the latest
     * snapshot of that name with version <= asOf (Iceberg
@@ -104,10 +103,9 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * deleted, so history stays readable).
     */
   def readAt(name: String, asOf: Int): DataFrame = {
-    val v = snapshots.filter(s => s._2 == name && s._1 <= asOf).map(_._1)
-      .lastOption.getOrElse(throw new IllegalArgumentException(
-        s"no snapshot named '$name' at or before version $asOf in $root"))
-    spark.read.parquet(dataPath(v, name))
+    val m = manifestOf(name, asOf).getOrElse(throw new IllegalArgumentException(
+      s"no snapshot named '$name' at or before version $asOf in $root"))
+    spark.read.parquet(dataPath(m.version, name))
   }
 
   /** Write `df` as a new snapshot called `name`: ONE job writes the
@@ -131,7 +129,8 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * Iceberg jar.
     */
   def commit(name: String, df: DataFrame, statsCol: Option[String]): Int = {
-    val v = currentVersion.getOrElse(0) + 1
+    val parent = currentVersion.getOrElse(0)
+    val v = parent + 1
     // concurrent-writer detection: two committers on the same root
     // would both allocate version N+1 and silently clobber each
     // other's data + manifest, last pointer flip winning. The store
@@ -140,19 +139,16 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     // v carrying the SAME name is this job's own torn commit (crash
     // between manifest write and pointer flip — streaming replay hits
     // exactly this window) and is safely re-written; a DIFFERENT name
-    // means a genuinely foreign writer. (Not a full CAS — a true
-    // multi-writer protocol needs an atomic catalog.)
+    // (or none) means a genuinely foreign writer. (Not a full CAS — a
+    // true multi-writer protocol needs an atomic catalog.)
     if (Files.exists(snapshotJson(v))) {
-      val torn = Files.readString(snapshotJson(v))
-      val tornName = ("\"name\": \"(" + JsonStr + ")\"").r
-        .findFirstMatchIn(torn).map(m => unesc(m.group(1)))
+      val torn = Manifest.parse(Files.readString(snapshotJson(v)), snapshotJson(v).toString)
+      def id(key: String) = torn \ key match { case JString(s) => Some(s); case _ => None }
+      val (tornName, tornWriter) = (id("name"), id("writerId"))
       if (!tornName.contains(name))
         throw new IllegalStateException(
           s"version $v already has a manifest for '${tornName.getOrElse("?")}' but " +
-            s"the current pointer is at ${currentVersion.getOrElse(0)} — another " +
-            s"writer is active on $root")
-      val tornWriter = ("\"writerId\": \"(" + JsonStr + ")\"").r
-        .findFirstMatchIn(torn).map(m => unesc(m.group(1)))
+            s"the current pointer is at $parent — another writer is active on $root")
       if (!tornWriter.contains(writerId))
         // a DIFFERENT writer id on the same name is either this
         // store's previous incarnation recovering after a crash (the
@@ -167,63 +163,31 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     }
     val out = dataPath(v, name)
     df.write.mode("overwrite").parquet(out) // the only pass over the data
-    val partCounts = fileMetricsOf(out, statsCol)
+    val files = fileMetricsOf(out, statsCol).map { case (f, p, rows, mm) =>
+      FileEntry(f, p, rows, mm.map(_._1), mm.map(_._2))
+    }
     // a parquet write always leaves at least one part file (possibly
     // 0-row); an empty listing means a committer this store does not
     // understand — fall back to a read-back count rather than
     // recording rowCount 0 for data that exists
     val rowCount =
-      if (partCounts.nonEmpty) partCounts.map(_._3).sum
+      if (files.nonEmpty) files.map(_.rows).sum
       else spark.read.parquet(out).count()
-    val inputs = df.inputFiles.sorted
-    val json = new StringBuilder
-    json.append("{\n")
-    json.append(s"""  "version": $v,\n""")
-    json.append(s"""  "parent": ${currentVersion.getOrElse(0)},\n""")
-    json.append(s"""  "name": "${esc(name)}",\n""")
-    json.append(s"""  "writerId": "${esc(writerId)}",\n""")
-    json.append(s"""  "rowCount": $rowCount,\n""")
-    statsCol.foreach(c => json.append(s"""  "statsCol": "${esc(c)}",\n"""))
-    json.append(s"""  "schema": "${esc(df.schema.json)}",\n""")
-    json.append("  \"files\": [\n")
-    json.append(partCounts.map { case (f, p, c, mm) =>
-      val stats = mm.map { case (lo, hi) => s""", "min": $lo, "max": $hi""" }.getOrElse("")
-      s"""    {"path": "${esc(f)}", "partition": $p, "rows": $c$stats}"""
-    }.mkString(",\n"))
-    json.append("\n  ],\n")
-    json.append("  \"lineage\": [")
-    json.append(inputs.map(f => s""""${esc(f)}"""").mkString(", "))
-    json.append("]\n}\n")
-    Files.writeString(snapshotJson(v), json.toString)
-    // atomic pointer flip
-    val tmp = snapDir.resolve(s".current.tmp.$v")
-    Files.writeString(tmp, v.toString)
-    Files.move(tmp, currentPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    writeAtomic(snapshotJson(v), Manifest.encode(Manifest(v, parent, name, Some(writerId),
+      rowCount, statsCol, df.schema.json, files, df.inputFiles.sorted.toSeq)))
+    writeAtomic(currentPath, v.toString) // atomic pointer flip
     v
   }
 
-  /** (path, write-partition, rows) per data file of a written
-    * directory, from the parquet footers (metadata-only) and the
-    * partition index the committer encodes in part file names.
-    * Hadoop FS API, so the store works on any cluster filesystem.
+  /** (path, write-partition, rows, min/max of `statsCol`) per data
+    * file of a written directory, from the parquet footers
+    * (metadata-only) and the partition index the committer encodes in
+    * part file names. Hadoop FS API, so the store works on any
+    * cluster filesystem.
     */
-  def fileMetricsOf(dir: String): Seq[(String, Int, Long)] =
-    fileMetricsOf(dir, None).map { case (f, p, r, _) => (f, p, r) }
-
   def fileMetricsOf(dir: String, statsCol: Option[String]): Seq[(String, Int, Long, Option[(Long, Long)])] = {
     val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    // recursive: a partitionBy() layout nests part files under
-    // key=value directories — a top-level-only listing would record
-    // an empty manifest for a successfully written table
-    val it = fs.listFiles(p, true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-    while (it.hasNext) files += it.next()
-    val statuses = files.toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.toString)
+    val statuses = parquetFiles(dir)
     def readOne(s: org.apache.hadoop.fs.FileStatus,
                 conf: org.apache.hadoop.conf.Configuration): (String, Int, Long, Option[(Long, Long)]) = {
         val fname = s.getPath.getName
@@ -235,8 +199,7 @@ final class SnapshotStore(spark: SparkSession, root: String) {
           .map(_.group(1).toInt).getOrElse(-1)
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(s.getPath, conf))
-        val (rows, mm) = try {
-          val rc = reader.getRecordCount
+        try {
           // integral min/max of statsCol across the file's row groups,
           // from the column-chunk statistics already in the footer; a
           // missing column / missing stats / non-integral type yields
@@ -262,34 +225,48 @@ final class SnapshotStore(spark: SparkSession, root: String) {
               Some((perBlock.map(_.get._1).min, perBlock.map(_.get._2).max))
             else None
           }
-          (rc, stats)
+          (s.getPath.toString, part, reader.getRecordCount, stats)
         } finally reader.close()
-        (s.getPath.toString, part, rows, mm)
       }
 
     // footer reads are independent filesystem round-trips: run them on
     // a bounded pool — serially, a large table's footers would make
     // this "metadata-only" step O(file count) in driver round-trip
-    // latency (order is preserved: futures are collected in order).
-    // Each task gets its OWN Configuration copy (Hadoop Configuration
-    // is not documented thread-safe — a lazy-init inside one reader
-    // could race another's), and ExecutionException is unwrapped so
-    // commit's failure surface stays the underlying IOException.
+    // latency (Future.traverse keeps the listing's order). Each task
+    // gets its OWN Configuration copy (Hadoop Configuration is not
+    // documented thread-safe — a lazy-init inside one reader could
+    // race another's), and Await.result rethrows a failed read's own
+    // exception, so commit's failure surface stays the IOException.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(16, statuses.size)))
-    try statuses.map { s =>
-      pool.submit(new java.util.concurrent.Callable[(String, Int, Long, Option[(Long, Long)])] {
-        override def call(): (String, Int, Long, Option[(Long, Long)]) =
-          readOne(s, new org.apache.hadoop.conf.Configuration(conf))
-      })
-    }.map { f =>
-      try f.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          throw Option(e.getCause).getOrElse(e)
-      }
-    }
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try Await.result(Future.traverse(statuses)(s =>
+      Future(readOne(s, new org.apache.hadoop.conf.Configuration(conf)))), Duration.Inf)
     finally pool.shutdown()
+  }
+
+  /** Parquet data files under `dir` in path order. Recursive: a
+    * partitionBy() layout nests part files under key=value
+    * directories — a top-level-only listing would record an empty
+    * manifest for a successfully written table.
+    */
+  private def parquetFiles(dir: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val it = p.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(p, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      .toSeq.sortBy(_.getPath.toString)
+  }
+
+  /** Delete version `v`'s data directory, then its manifest: a crash
+    * in between leaves a manifest whose data is gone, which re-running
+    * the deletion finishes, never unreferenced data no manifest names.
+    */
+  private def dropVersion(v: Int, name: String): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(dataPath(v, name))
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(dir)) fs.delete(dir, true)
+    Files.deleteIfExists(snapshotJson(v))
   }
 
   /** Zone-map column the current version of `name` was committed
@@ -299,11 +276,7 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * check this instead of trusting their own configuration: a
     * mismatch makes the residual filter silently drop every row.
     */
-  def statsColOf(name: String): Option[String] = versionOf(name).flatMap { v =>
-    val s = Files.readString(snapshotJson(v))
-    ("\"statsCol\": \"(" + JsonStr + ")\"").r
-      .findFirstMatchIn(s).map(m => unesc(m.group(1)))
-  }
+  def statsColOf(name: String): Option[String] = manifestOf(name).flatMap(_.statsCol)
 
   /** Read `name` restricted to rows whose zone-map column lies in
     * [lo, hi]: manifest min/max stats select only the OVERLAPPING
@@ -313,25 +286,8 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * scanning a subset of the files. [[prunedFiles]] exposes the
     * selection for plan/IO assertions.
     */
-  def readPruned(name: String, lo: Long, hi: Long): DataFrame = {
-    val v = versionOf(name).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot named '$name' in $root"))
-    val s = Files.readString(snapshotJson(v))
-    val statsCol = ("\"statsCol\": \"(" + JsonStr + ")\"").r
-      .findFirstMatchIn(s).map(m => unesc(m.group(1))).getOrElse(
-        throw new IllegalArgumentException(
-          s"snapshot '$name' v$v was committed without a statsCol"))
-    val keep = prunedFiles(v, lo, hi)
-    val schema = ("\"schema\": \"(" + JsonStr + ")\"").r.findFirstMatchIn(s)
-      .map(m => org.apache.spark.sql.types.DataType.fromJson(unesc(m.group(1)))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .getOrElse(throw new IllegalStateException(s"no schema in manifest v$v"))
-    val base =
-      if (keep.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(keep: _*)
-    base.filter(col(statsCol).between(lo, hi))
-  }
+  def readPruned(name: String, lo: Long, hi: Long): DataFrame =
+    readPrunedBy(name, (mn, mx) => mn <= hi && mx >= lo)(_.between(lo, hi))
 
   /** Read `name` restricted to rows whose zone-map column is one of
     * `values` — the AOI/disc-cover consumer shape (a cover at the
@@ -342,13 +298,6 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     */
   def readPrunedIn(name: String, values: Seq[Long]): DataFrame = {
     require(values.nonEmpty, "values must be non-empty")
-    val v = versionOf(name).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot named '$name' in $root"))
-    val s = Files.readString(snapshotJson(v))
-    val statsCol = ("\"statsCol\": \"(" + JsonStr + ")\"").r
-      .findFirstMatchIn(s).map(m => unesc(m.group(1))).getOrElse(
-        throw new IllegalArgumentException(
-          s"snapshot '$name' v$v was committed without a statsCol"))
     val sorted = values.distinct.sorted.toArray
     def anyIn(lo: Long, hi: Long): Boolean = {
       // binary search: first value >= lo, then check it is <= hi
@@ -356,69 +305,46 @@ final class SnapshotStore(spark: SparkSession, root: String) {
       while (a < b) { val m = (a + b) >>> 1; if (sorted(m) < lo) a = m + 1 else b = m }
       a < sorted.length && sorted(a) <= hi
     }
-    val keep = filesWhere(v, anyIn)
-    val schema = ("\"schema\": \"(" + JsonStr + ")\"").r.findFirstMatchIn(s)
-      .map(m => org.apache.spark.sql.types.DataType.fromJson(unesc(m.group(1)))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .getOrElse(throw new IllegalStateException(s"no schema in manifest v$v"))
+    readPrunedBy(name, anyIn)(_.isin(values: _*))
+  }
+
+  /** The latest `name` over only the files `overlap` keeps, with the
+    * exact `residual` filter on its zone-map column; the manifest's
+    * schema keeps an all-pruned read typed.
+    */
+  private def readPrunedBy(name: String, overlap: (Long, Long) => Boolean)(
+      residual: Column => Column): DataFrame = {
+    val m = latest(name)
+    val statsCol = m.statsCol.getOrElse(throw new IllegalArgumentException(
+      s"snapshot '$name' v${m.version} was committed without a statsCol"))
+    val schema = DataType.fromJson(m.schema).asInstanceOf[StructType]
+    val keep = filesWhere(m, overlap)
     val base =
-      if (keep.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      if (keep.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
       else spark.read.schema(schema).parquet(keep: _*)
-    base.filter(col(statsCol).isin(values: _*))
+    base.filter(residual(col(statsCol)))
   }
 
-  /** Number of file entries a manifest declares — counted by the
-    * `"path":` key alone (appears once per file object and nowhere
-    * else: lineage entries are plain strings). The file-entry parsers
-    * below cross-check their exact-spacing regex against this count
-    * and THROW on mismatch: a drifted manifest format must fail
-    * loudly, not silently drop files from pruned reads (which would
-    * return partial data) or from per-partition metrics.
+  /** Data files of `m` kept by a zone-map predicate over their
+    * (min, max); files without recorded stats are always kept.
     */
-  private def fileEntryCount(s: String): Int =
-    "\"path\":".r.findAllMatchIn(s).size
-
-  private def checkFileParse(parsed: Int, s: String, what: String): Unit = {
-    val declared = fileEntryCount(s)
-    if (parsed != declared)
-      throw new IllegalStateException(
-        s"$what parsed $parsed of $declared file entries — manifest format " +
-          "drift; refusing to return a partial file list")
-  }
-
-  /** Data files of version `v` kept by a zone-map predicate over
-    * their (min, max); files without recorded stats are always kept.
-    */
-  private def filesWhere(v: Int, overlap: (Long, Long) => Boolean): Seq[String] = {
-    val s = Files.readString(snapshotJson(v))
-    val entries = ("\\{\"path\": \"(" + JsonStr + ")\", \"partition\": -?\\d+, \"rows\": \\d+" +
-      "(?:, \"min\": (-?\\d+), \"max\": (-?\\d+))?\\}").r
-      .findAllMatchIn(s).toSeq
-    checkFileParse(entries.size, s, s"filesWhere(v$v)")
-    entries
-      .filter(m => m.group(2) == null ||
-        overlap(m.group(2).toLong, m.group(3).toLong))
-      .map(m => unesc(m.group(1)))
-  }
+  private def filesWhere(m: Manifest, overlap: (Long, Long) => Boolean): Seq[String] =
+    m.files.filter(f => (f.min, f.max) match {
+      case (Some(lo), Some(hi)) => overlap(lo, hi)
+      case _ => true
+    }).map(_.path)
 
   /** Data files of version `v` whose zone-map range intersects
     * [lo, hi]; files without recorded stats are always kept.
     */
   def prunedFiles(v: Int, lo: Long, hi: Long): Seq[String] =
-    filesWhere(v, (mn, mx) => mn <= hi && mx >= lo)
+    filesWhere(manifestAt(v), (mn, mx) => mn <= hi && mx >= lo)
 
-  /** Per-partition metrics of a committed snapshot, parsed back from
+  /** Per-partition metrics of a committed snapshot, read back from
     * its manifest (no data access): (partition_id, rows, file).
     */
-  def fileMetrics(v: Int): Seq[(Int, Long, String)] = {
-    val s = Files.readString(snapshotJson(v))
-    val entries = ("\\{\"path\": \"(" + JsonStr + ")\", \"partition\": (-?\\d+), \"rows\": (\\d+)" +
-      "(?:, \"min\": -?\\d+, \"max\": -?\\d+)?\\}").r
-      .findAllMatchIn(s).toSeq
-    checkFileParse(entries.size, s, s"fileMetrics(v$v)")
-    entries.map(m => (m.group(2).toInt, m.group(3).toLong, unesc(m.group(1))))
-  }
+  def fileMetrics(v: Int): Seq[(Int, Long, String)] =
+    manifestAt(v).files.map(f => (f.partition, f.rows, f.path))
 
   /** Resumable checkpoint: if a committed snapshot named `name`
     * exists, read it back; otherwise compute, commit, and read back
@@ -453,7 +379,8 @@ final class SnapshotStore(spark: SparkSession, root: String) {
   def merge(name: String, updates: DataFrame, keyCols: Seq[String],
             statsCol: Option[String] = None): Int = {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
-    val cur0 = read(name)
+    val m = latest(name)
+    val cur0 = spark.read.parquet(dataPath(m.version, name))
     // SCHEMA EVOLUTION (Iceberg's add-column): updates may carry NEW
     // columns — existing rows take typed nulls for them (CoW rewrite,
     // so the new version's files all hold the full schema, while time
@@ -488,12 +415,7 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     // caller overrides, inherit the table's statsCol from the current
     // manifest and keep the output range-clustered on it — otherwise
     // a routine merge would silently strip pruning from the table
-    val effStats = statsCol.orElse {
-      val v = versionOf(name).get
-      ("\"statsCol\": \"(" + JsonStr + ")\"").r
-        .findFirstMatchIn(Files.readString(snapshotJson(v)))
-        .map(m => unesc(m.group(1)))
-    }
+    val effStats = statsCol.orElse(m.statsCol)
     val kept = cur.join(updates.select(keyCols.map(col): _*).distinct(),
       keyCols, "left_anti")
     val merged = kept.unionByName(updates)
@@ -518,15 +440,8 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     */
   def expireSnapshots(keepLast: Int = 1): Seq[Int] = {
     require(keepLast >= 1, s"keepLast must be >= 1 (got $keepLast)")
-    val conf = spark.sessionState.newHadoopConf()
-    snapshots.groupBy(_._2).toSeq.flatMap { case (name, vs) =>
-      vs.map(_._1).sorted.dropRight(keepLast).map { v =>
-        val dir = new org.apache.hadoop.fs.Path(dataPath(v, name))
-        val fs = dir.getFileSystem(conf)
-        if (fs.exists(dir)) fs.delete(dir, true)
-        Files.deleteIfExists(snapshotJson(v))
-        v
-      }
+    manifests.groupBy(_.name).toSeq.flatMap { case (name, ms) =>
+      ms.map(_.version).sorted.dropRight(keepLast).map { v => dropVersion(v, name); v }
     }.sorted
   }
 
@@ -548,41 +463,25 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * whole keyspace) and the new manifest records fresh stats.
     */
   def compact(name: String, targetBytes: Long = 128L << 20): Int = {
-    val v = versionOf(name).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot named '$name' in $root"))
-    val dir = dataPath(v, name)
-    val statsCol = ("\"statsCol\": \"(" + JsonStr + ")\"").r
-      .findFirstMatchIn(Files.readString(snapshotJson(v))).map(m => unesc(m.group(1)))
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    val it = fs.listFiles(p, true)
-    var totalBytes = 0L
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile && s.getPath.getName.endsWith(".parquet")) totalBytes += s.getLen
-    }
+    val m = latest(name)
+    val dir = dataPath(m.version, name)
+    val totalBytes = parquetFiles(dir).map(_.getLen).sum
     val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val before = snapshots.find(_._1 == v).map(_._3).getOrElse(0L)
+    val before = m.rowCount
     val src = spark.read.parquet(dir)
-    val rewritten = statsCol match {
+    val rewritten = m.statsCol match {
       case Some(c) => src.repartitionByRange(nFiles, col(c))
       case None => src.repartition(nFiles)
     }
-    val newV = commit(name, rewritten, statsCol)
-    val after = snapshots.find(_._1 == newV).map(_._3).getOrElse(-1L)
+    val newV = commit(name, rewritten, m.statsCol)
+    val after = manifestAt(newV).rowCount
     if (after != before) {
       // roll the pointer back to the pre-compaction state and remove
-      // the failed version's manifest AND rewritten data — leaving
+      // the failed version's rewritten data AND manifest — leaving
       // the directory would orphan a full table copy that
       // expireSnapshots (manifest-driven) could never reclaim
-      val tmp = snapDir.resolve(s".current.tmp.rollback.$v")
-      Files.writeString(tmp, (newV - 1).toString)
-      Files.move(tmp, currentPath, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-      Files.deleteIfExists(snapshotJson(newV))
-      val badDir = new org.apache.hadoop.fs.Path(dataPath(newV, name))
-      if (fs.exists(badDir)) fs.delete(badDir, true)
+      writeAtomic(currentPath, (newV - 1).toString)
+      dropVersion(newV, name)
       throw new IllegalStateException(
         s"compaction of '$name' rewrote $after rows, expected $before; rolled back to v${newV - 1}")
     }
@@ -591,11 +490,73 @@ final class SnapshotStore(spark: SparkSession, root: String) {
 
   /** Files added/removed between two snapshot versions of a name. */
   def diff(v1: Int, v2: Int): (Seq[String], Seq[String]) = {
-    def files(v: Int): Set[String] = {
-      val s = Files.readString(snapshotJson(v))
-      ("\"path\"\\s*:\\s*\"(" + JsonStr + ")\"").r.findAllMatchIn(s).map(m => unesc(m.group(1))).toSet
-    }
+    def files(v: Int): Set[String] = manifestAt(v).files.map(_.path).toSet
     val (a, b) = (files(v1), files(v2))
     ((b -- a).toSeq.sorted, (a -- b).toSeq.sorted)
+  }
+}
+
+object SnapshotStore {
+  /** One data file of a snapshot: its path, the write partition the
+    * committer encoded in its name (-1 if none), its row count, and
+    * the min/max of the snapshot's `statsCol` when the footer had them.
+    */
+  private[sources] final case class FileEntry(path: String, partition: Int, rows: Long,
+                                              min: Option[Long], max: Option[Long])
+
+  /** The `_snapshots/v<N>.json` record of snapshot N: its parent
+    * version, name, the id of the store instance that wrote it, total
+    * rows, zone-map column, Spark schema (as `DataType.json`), data
+    * files, and the input files of the committed DataFrame.
+    */
+  private[sources] final case class Manifest(version: Int, parent: Int, name: String,
+                                             writerId: Option[String], rowCount: Long,
+                                             statsCol: Option[String], schema: String,
+                                             files: Seq[FileEntry], lineage: Seq[String])
+
+  private[sources] object Manifest {
+    // `"key": value` spacing, as manifests have always been written
+    private val writer = JsonMethods.mapper.writer(new DefaultPrettyPrinter(
+      Separators.createDefaultInstance().withObjectFieldValueSpacing(Separators.Spacing.AFTER)))
+
+    /** Absent options are left out of the object (JNothing fields are not written). */
+    def encode(m: Manifest): String = {
+      val files = m.files.map(f => ("path" -> f.path) ~ ("partition" -> f.partition) ~
+        ("rows" -> f.rows) ~ ("min" -> f.min) ~ ("max" -> f.max))
+      writer.writeValueAsString(("version" -> m.version) ~ ("parent" -> m.parent) ~
+        ("name" -> m.name) ~ ("writerId" -> m.writerId) ~ ("rowCount" -> m.rowCount) ~
+        ("statsCol" -> m.statsCol) ~ ("schema" -> m.schema) ~ ("files" -> files) ~
+        ("lineage" -> m.lineage)) + "\n"
+    }
+
+    def parse(json: String, file: String): JValue =
+      try JsonMethods.parse(json)
+      catch { case e: Exception => throw new IllegalStateException(s"manifest $file is not valid JSON", e) }
+
+    /** Field-by-field mapping of the parsed JSON (no reflection); a
+      * missing or mistyped field throws, naming the file.
+      */
+    def decode(json: String, file: String): Manifest = {
+      def bad(what: String) = new IllegalStateException(s"manifest $file: $what")
+      def opt[A](j: JValue, key: String)(f: PartialFunction[JValue, A]): Option[A] = j match {
+        case JObject(fs) => fs.collectFirst { case (`key`, x) if x != JNull =>
+          f.applyOrElse(x, (_: JValue) => throw bad(s"\"$key\" has the wrong type: $x"))
+        }
+        case _ => throw bad(s"expected an object holding \"$key\"")
+      }
+      def req[A](j: JValue, key: String)(f: PartialFunction[JValue, A]): A =
+        opt(j, key)(f).getOrElse(throw bad(s"no \"$key\""))
+      val str: PartialFunction[JValue, String] = { case JString(s) => s }
+      val long: PartialFunction[JValue, Long] = { case JInt(n) if n.isValidLong => n.toLong }
+      val int: PartialFunction[JValue, Int] = { case JInt(n) if n.isValidInt => n.toInt }
+      val arr: PartialFunction[JValue, List[JValue]] = { case JArray(a) => a }
+      val o = parse(json, file)
+      Manifest(req(o, "version")(int), req(o, "parent")(int), req(o, "name")(str),
+        opt(o, "writerId")(str), req(o, "rowCount")(long), opt(o, "statsCol")(str),
+        req(o, "schema")(str),
+        req(o, "files")(arr).map(f => FileEntry(req(f, "path")(str), req(f, "partition")(int),
+          req(f, "rows")(long), opt(f, "min")(long), opt(f, "max")(long))),
+        req(o, "lineage")(arr).map(str.applyOrElse(_, (x: JValue) => throw bad(s"lineage entry $x"))))
+    }
   }
 }

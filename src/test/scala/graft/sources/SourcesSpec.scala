@@ -161,17 +161,29 @@ class SourcesSpec extends AnyFunSuite {
     val root = Files.newTmp("drift")
     val store = new SnapshotStore(spark, root)
     val v = store.commit("t", spark.range(10).toDF("x"), Some("x"))
-    assert(store.fileMetrics(v).nonEmpty)
-    // corrupt ONE file entry's spacing so the exact-spacing parser
-    // misses it: both the metrics and the pruning parsers must throw
-    // (silently dropping the file would make readPruned return
-    // partial data)
+    val files = store.fileMetrics(v)
+    assert(files.nonEmpty)
     val mPath = java.nio.file.Paths.get(root, "_snapshots", s"v$v.json")
-    val drifted = java.nio.file.Files.readString(mPath)
-      .replaceFirst("\\{\"path\": ", "{\"path\":  ")
-    java.nio.file.Files.writeString(mPath, drifted)
-    intercept[IllegalStateException] { store.fileMetrics(v) }
-    intercept[IllegalStateException] { store.prunedFiles(v, 0L, 5L) }
+    val good = java.nio.file.Files.readString(mPath)
+    // extra spacing after a key is still valid JSON: the same files
+    java.nio.file.Files.writeString(mPath, good.replaceFirst("\"path\": ", "\"path\":  "))
+    assert(store.fileMetrics(v) == files)
+    assert(store.prunedFiles(v, 0L, 9L).toSet == files.map(_._3).toSet)
+    // real corruptions: the metrics and both pruning paths must throw
+    // (silently dropping a file would make readPrunedIn return
+    // partial data)
+    val corrupt = Seq(
+      "truncated" -> good.take(good.indexOf("\"files\"") + 30),
+      "entry without rows" -> good.replaceFirst(",\\s*\"rows\":\\s*\\d+", ""),
+      "non-integer rows" -> good.replaceFirst("(\"rows\":\\s*)\\d+", "$1\"ten\""))
+    for ((what, text) <- corrupt) {
+      assert(text != good, what)
+      java.nio.file.Files.writeString(mPath, text)
+      val e = intercept[IllegalStateException](store.fileMetrics(v))
+      assert(e.getMessage.contains(mPath.toString), s"$what: ${e.getMessage}")
+      intercept[IllegalStateException](store.prunedFiles(v, 0L, 5L))
+      intercept[IllegalStateException](store.readPrunedIn("t", Seq(1L)))
+    }
   }
 
   test("copy-on-write merge updates matched keys, inserts new, keeps history") {
