@@ -34,19 +34,29 @@ object PipelineMain {
       case bad => sys.error(
         s"malformed arguments near '${bad.mkString(" ")}' — expected --flag value pairs")
     }.toMap
-    val storeRoot = opts.getOrElse("store",
-      sys.error("--store <dir> is required"))
-    // NOTE resume is keyed by snapshot NAME only: re-running an
-    // existing store with different --tile-level/--images/--generate
-    // returns the previously committed stages unchanged — use a fresh
-    // --store (or expire the old snapshots) when parameters change
-    val tileLevel = opts.getOrElse("tile-level", "8").toInt
+    if (!opts.contains("store")) sys.error("--store <dir> is required")
 
     val spark = SparkSession.builder()
       .appName("graft-image-tile-pipeline")
       .getOrCreate() // master/executors from spark-submit
     spark.sparkContext.setLogLevel("WARN")
-    val store = new SnapshotStore(spark, storeRoot)
+    println(run(spark, opts))
+    spark.stop()
+  }
+
+  /** Run (or resume) the pipeline on the store at `opts("store")`
+    * with the options of [[main]] (keys without the leading `--`),
+    * and return the one-line JSON summary: tiles, assigned images,
+    * bad payloads, nearest rows and committed snapshots (5 after a
+    * run without maintenance).
+    */
+  def run(spark: SparkSession, opts: Map[String, String]): String = {
+    val store = new SnapshotStore(spark, opts("store"))
+    // NOTE resume is keyed by snapshot NAME only: re-running an
+    // existing store with different --tile-level/--images/--generate
+    // returns the previously committed stages unchanged — use a fresh
+    // --store (or expire the old snapshots) when parameters change
+    val tileLevel = opts.getOrElse("tile-level", "8").toInt
 
     // stage 1: ingest (committed snapshot = resumable source of truth)
     val images = store.getOrCompute("images") {
@@ -193,9 +203,8 @@ object PipelineMain {
     opts.get("compact").foreach(store.compact(_))
     opts.get("expire-keep").foreach(n => store.expireSnapshots(n.toInt))
 
-    println(s"""{"tiles":${summary.getLong(0)},"assigned":${summary.getLong(1)},""" +
+    s"""{"tiles":${summary.getLong(0)},"assigned":${summary.getLong(1)},""" +
       s""""bad_payloads":${summary.getLong(2)},"nearest_rows":$nearestRows,""" +
-      s""""snapshots":${store.snapshots.size}}""")
-    spark.stop()
+      s""""snapshots":${store.snapshots.size}}"""
   }
 }

@@ -1,14 +1,15 @@
 package graft.sources
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Per-partition lineage + row-count metrics (north_rule: "every
   * partition emits lineage + row-count metrics into snapshots").
-  * A single mapPartitions pass tags rows with their physical
-  * partition id and stage attempt, aggregated into one small metrics
-  * table suitable for a snapshot commit alongside the data.
+  * [[partitionMetrics]] tags rows with their physical partition id
+  * and stage attempt in a single mapPartitions pass; a committed
+  * snapshot carries the same per-partition rows in its manifest, so
+  * [[commitWithMetrics]] is a plain commit whose metrics read back as
+  * `<name>__metrics` without a second snapshot.
   */
 object Lineage {
   /** (partition_id, rows, task_attempt) per physical partition of
@@ -32,18 +33,13 @@ object Lineage {
     counts.orderBy("partition_id")
   }
 
-  /** Commit `df` as a snapshot together with its per-partition
-    * metrics (a sibling `<name>__metrics` snapshot in the same store
-    * version history). The metrics come from the commit's own
-    * manifest — parquet footers + committer file names — so the data
-    * is computed and scanned exactly ONCE; `df` is never re-executed.
+  /** Commit `df` as a snapshot whose per-partition metrics read as
+    * `<name>__metrics`: `store.read(name + "__metrics")` serves
+    * (partition_id, rows, file) from the commit's own manifest —
+    * parquet footers + committer file names — so this is ONE commit,
+    * the data is computed and scanned exactly once, and no store
+    * operation spans two versions.
     */
-  def commitWithMetrics(store: SnapshotStore, name: String, df: DataFrame): Int = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val v = store.commit(name, df)
-    val metrics = store.fileMetrics(v).toDF("partition_id", "rows", "file")
-    store.commit(s"${name}__metrics", metrics)
-    v
-  }
+  def commitWithMetrics(store: SnapshotStore, name: String, df: DataFrame): Int =
+    store.commit(name, df)
 }

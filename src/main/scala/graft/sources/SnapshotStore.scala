@@ -2,16 +2,17 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 import org.json4s._
 import org.json4s.JsonDSL._
 import org.json4s.jackson.JsonMethods
 import com.fasterxml.jackson.core.util.{DefaultPrettyPrinter, Separators}
-import java.nio.file.{Files, Paths, Path, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Paths, Path, StandardOpenOption}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
-import SnapshotStore.{FileEntry, Manifest}
+import scala.util.matching.Regex
+import SnapshotStore.{FileEntry, Manifest, MetricsSchema, MetricsSuffix}
 
 /** Iceberg-style snapshot/manifest layer over parquet directories
   * (hand-rolled: no Iceberg jar exists in this environment; SURVEY.md
@@ -20,63 +21,71 @@ import SnapshotStore.{FileEntry, Manifest}
   * {{{
   *   data/s<N>/<name>/...parquet     immutable data of snapshot N
   *   _snapshots/v<N>.json            snapshot N's Manifest (JSON)
-  *   _snapshots/current              text pointer to latest N
   * }}}
   *
   * A manifest is one [[SnapshotStore.Manifest]] value with one encoder
   * and one decoder; every reader goes through the decoded value, and a
   * manifest that does not decode throws `IllegalStateException` naming
-  * the file instead of yielding a partial file list.
+  * the file instead of yielding a partial file list. Paths under
+  * `root` are stored relative to it, so a store moves with a plain
+  * directory move.
   *
-  * Commit protocol: data is written to the snapshot-versioned
-  * directory, the manifest is written, and `current` is replaced (both
-  * files by write-then-rename, so neither is ever half-written) —
-  * readers only ever follow `current` so a crashed writer leaves at
-  * most unreferenced files, never a torn table (same guarantee
-  * Iceberg's metadata pointer gives). Re-committing an already-current
-  * name+version is a no-op, which is what makes [[getOrCompute]] a
+  * Commit protocol (Iceberg's file-system tables): data is written to
+  * the snapshot-versioned directory, the manifest to a temporary file
+  * unique to the attempt, and the commit is the one atomic step that
+  * creates `v<N>.json` from it if, and only if, that name is absent.
+  * The committed versions are the listing of `_snapshots/v*.json`;
+  * the current version is the highest. A crashed writer leaves at
+  * most data no manifest names and a temporary file, never a torn
+  * table, and [[expireSnapshots]] sweeps both. Writers of different
+  * names may share a root: the one that loses a version fails loudly
+  * and changes no snapshot. Each snapshot NAME has a single writer, as
+  * two writers of one name would share `data/s<N>/<name>`.
+  * Re-committing a name whose data was written but whose manifest was
+  * not overwrites that data, which is what makes [[getOrCompute]] a
   * resumable checkpoint.
   */
 final class SnapshotStore(spark: SparkSession, root: String) {
   private val snapDir = Paths.get(root, "_snapshots")
   Files.createDirectories(snapDir)
 
-  /** Identifies THIS store instance's writes in manifests it commits,
-    * so a torn-commit self-heal (same version, same name) can tell
-    * "my own crashed attempt" from "a live foreign writer that chose
-    * the same name" — the latter is logged loudly instead of silently
-    * absorbed. Deliberately NOT used to refuse the overwrite: crash
-    * resume re-runs in a NEW process (new id), and refusing would
-    * break the exact recovery path the self-heal exists for.
-    */
-  private val writerId = java.util.UUID.randomUUID().toString
-
-  private def currentPath = snapDir.resolve("current")
-
-  def currentVersion: Option[Int] =
-    if (Files.exists(currentPath)) Some(Files.readString(currentPath).trim.toInt)
-    else None
-
   private def snapshotJson(v: Int): Path = snapDir.resolve(s"v$v.json")
 
-  /** Write-then-rename, so a crash never leaves a half-written file
-    * under `p`'s name (a torn manifest would not decode on resume).
+  /** Entries of `dir` (none if it does not exist). */
+  private def list(dir: Path): Seq[java.io.File] = Option(dir.toFile.listFiles).toSeq.flatten
+
+  /** Entries of `dir` whose name `re` matches, with the version it captures. */
+  private def numbered(dir: Path, re: Regex): Seq[(Int, java.io.File)] =
+    list(dir).flatMap(f => re.unapplySeq(f.getName).map(g => (g.head.toInt, f)))
+
+  /** Versions of the committed manifests, ascending. */
+  private def versions: Seq[Int] = numbered(snapDir, SnapshotStore.ManifestFile).map(_._1).sorted
+
+  /** The highest committed version. */
+  def currentVersion: Option[Int] = versions.lastOption
+
+  /** The root as the parquet committer reports paths under it. */
+  private val rootPrefix = s"file:${Paths.get(root).toAbsolutePath.normalize}/"
+
+  private def isAbsolute(p: String): Boolean = p.startsWith("/") || SnapshotStore.Scheme.findPrefixOf(p).isDefined
+
+  /** `p` relative to the root when it lies under it, in the committer's
+    * form or in the URI form `inputFiles` reports (`file:///tmp/store/`);
+    * other paths are kept whole.
     */
-  private def writeAtomic(p: Path, text: String): Unit = {
-    val tmp = p.resolveSibling(s".${p.getFileName}.tmp")
-    Files.writeString(tmp, text)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+  private def relative(p: String): String = Seq(rootPrefix, rootPrefix.replace("file:", "file://"))
+    .find(p.startsWith).map(pre => p.drop(pre.length)).filterNot(isAbsolute).getOrElse(p)
+
+  private def resolve(p: String): String = if (isAbsolute(p)) p else rootPrefix + p
+
+  /** Version `v`'s manifest with every path resolved against the root. */
+  private def manifestAt(v: Int): Manifest = {
+    val m = Manifest.decode(Files.readString(snapshotJson(v)), snapshotJson(v).toString)
+    m.copy(files = m.files.map(f => f.copy(path = resolve(f.path))), lineage = m.lineage.map(resolve))
   }
 
-  private def manifestAt(v: Int): Manifest =
-    Manifest.decode(Files.readString(snapshotJson(v)), snapshotJson(v).toString)
-
-  /** The version index: every committed manifest, v1 to current, in
-    * order; expired versions (deleted manifests) are skipped.
-    */
-  private def manifests: Seq[Manifest] =
-    (1 to currentVersion.getOrElse(0)).filter(v => Files.exists(snapshotJson(v))).map(manifestAt)
+  /** The version index: every committed manifest in version order. */
+  private def manifests: Seq[Manifest] = versions.map(manifestAt)
 
   /** Latest manifest of `name` at or before version `asOf`. */
   private def manifestOf(name: String, asOf: Int = Int.MaxValue): Option[Manifest] =
@@ -94,8 +103,16 @@ final class SnapshotStore(spark: SparkSession, root: String) {
   def dataPath(v: Int, name: String): String =
     Paths.get(root, "data", s"s$v", name).toString
 
+  /** The latest snapshot of `name`. `<base>__metrics` of a committed
+    * `base` is served from `base`'s manifest: (partition_id, rows,
+    * file) per data file, as [[fileMetrics]] (see
+    * [[Lineage.commitWithMetrics]]).
+    */
   def read(name: String): DataFrame =
-    spark.read.parquet(dataPath(latest(name).version, name))
+    (if (name.endsWith(MetricsSuffix)) versionOf(name.stripSuffix(MetricsSuffix)) else None) match {
+      case Some(v) => spark.createDataFrame(fileMetrics(v).map(Row.fromTuple).asJava, MetricsSchema)
+      case None => spark.read.parquet(dataPath(latest(name).version, name))
+    }
 
   /** Time travel: read `name` as of store version `asOf` — the latest
     * snapshot of that name with version <= asOf (Iceberg
@@ -112,9 +129,12 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * data files; the manifest (per-file row counts + the write
     * partition each file came from) is then assembled from parquet
     * FOOTERS — a metadata-only read, never a second pass over the
-    * data — followed by the atomic `current` pointer flip. The
-    * partition index is the one the parquet committer encodes in the
-    * part file name, so per-partition lineage costs nothing extra.
+    * data — and published by creating `v<N>.json`. The partition index
+    * is the one the parquet committer encodes in the part file name,
+    * so per-partition lineage costs nothing extra. Throws
+    * `IllegalStateException` when version N was committed first by a
+    * writer of a different name; that snapshot is untouched, and the
+    * next commit takes N+1.
     */
   def commit(name: String, df: DataFrame): Int = commit(name, df, None)
 
@@ -128,44 +148,20 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * overlapping files — Iceberg's data-skipping story without the
     * Iceberg jar.
     */
-  def commit(name: String, df: DataFrame, statsCol: Option[String]): Int = {
+  def commit(name: String, df: DataFrame, statsCol: Option[String]): Int =
+    publish(name, df, statsCol)(_ => ())
+
+  /** [[commit]], with `check` run on the new manifest before it is
+    * published: when it throws, the written data is deleted and no
+    * version is created.
+    */
+  private def publish(name: String, df: DataFrame, statsCol: Option[String])(
+      check: Manifest => Unit): Int = {
     val parent = currentVersion.getOrElse(0)
     val v = parent + 1
-    // concurrent-writer detection: two committers on the same root
-    // would both allocate version N+1 and silently clobber each
-    // other's data + manifest, last pointer flip winning. The store
-    // is single-writer by design (one driver owns a root); make a
-    // violation loud instead of a silent lost commit. A manifest for
-    // v carrying the SAME name is this job's own torn commit (crash
-    // between manifest write and pointer flip — streaming replay hits
-    // exactly this window) and is safely re-written; a DIFFERENT name
-    // (or none) means a genuinely foreign writer. (Not a full CAS — a
-    // true multi-writer protocol needs an atomic catalog.)
-    if (Files.exists(snapshotJson(v))) {
-      val torn = Manifest.parse(Files.readString(snapshotJson(v)), snapshotJson(v).toString)
-      def id(key: String) = torn \ key match { case JString(s) => Some(s); case _ => None }
-      val (tornName, tornWriter) = (id("name"), id("writerId"))
-      if (!tornName.contains(name))
-        throw new IllegalStateException(
-          s"version $v already has a manifest for '${tornName.getOrElse("?")}' but " +
-            s"the current pointer is at $parent — another writer is active on $root")
-      if (!tornWriter.contains(writerId))
-        // a DIFFERENT writer id on the same name is either this
-        // store's previous incarnation recovering after a crash (the
-        // path self-heal exists for) or a foreign writer racing on
-        // the same name — indistinguishable without an atomic
-        // catalog, so heal but say so loudly
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"commit('$name'): overwriting a torn v$v manifest written by " +
-            s"${tornWriter.getOrElse("a pre-writerId store")} (this writer: " +
-            s"$writerId) — expected after crash resume; if another job is " +
-            s"live on $root, its commit is being discarded")
-    }
     val out = dataPath(v, name)
     df.write.mode("overwrite").parquet(out) // the only pass over the data
-    val files = fileMetricsOf(out, statsCol).map { case (f, p, rows, mm) =>
-      FileEntry(f, p, rows, mm.map(_._1), mm.map(_._2))
-    }
+    val files = fileEntries(out, statsCol)
     // a parquet write always leaves at least one part file (possibly
     // 0-row); an empty listing means a committer this store does not
     // understand — fall back to a read-back count rather than
@@ -173,23 +169,34 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     val rowCount =
       if (files.nonEmpty) files.map(_.rows).sum
       else spark.read.parquet(out).count()
-    writeAtomic(snapshotJson(v), Manifest.encode(Manifest(v, parent, name, Some(writerId),
-      rowCount, statsCol, df.schema.json, files, df.inputFiles.sorted.toSeq)))
-    writeAtomic(currentPath, v.toString) // atomic pointer flip
+    val m = Manifest(v, parent, name, rowCount, statsCol, df.schema.json, files,
+      df.inputFiles.sorted.toSeq.map(relative))
+    try check(m) catch { case e: Exception => deleteDir(out); throw e }
+    // the commit: a temporary file unique to this attempt, hard-linked
+    // to v<N>.json, which fails if that name exists (a rename would
+    // replace it)
+    val tmp = snapDir.resolve(s".v$v-${java.util.UUID.randomUUID}.json.tmp")
+    try {
+      Files.writeString(tmp, Manifest.encode(m), StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+      Files.createLink(snapshotJson(v), tmp)
+    } catch {
+      case _: FileAlreadyExistsException => throw new IllegalStateException(
+        s"version $v of $root was committed by '${manifestAt(v).name}' while '$name' was being " +
+          "written; nothing was published for it")
+    } finally Files.deleteIfExists(tmp)
     v
   }
 
-  /** (path, write-partition, rows, min/max of `statsCol`) per data
-    * file of a written directory, from the parquet footers
-    * (metadata-only) and the partition index the committer encodes in
-    * part file names. Hadoop FS API, so the store works on any
-    * cluster filesystem.
+  /** The manifest entry (root-relative path, write partition, rows,
+    * min/max of `statsCol`) of every data file of a written directory,
+    * from the parquet footers (metadata-only) and the partition index
+    * the committer encodes in part file names. Hadoop FS API, so the
+    * store works on any cluster filesystem.
     */
-  def fileMetricsOf(dir: String, statsCol: Option[String]): Seq[(String, Int, Long, Option[(Long, Long)])] = {
+  private def fileEntries(dir: String, statsCol: Option[String]): Seq[FileEntry] = {
     val conf = spark.sessionState.newHadoopConf()
     val statuses = parquetFiles(dir)
-    def readOne(s: org.apache.hadoop.fs.FileStatus,
-                conf: org.apache.hadoop.conf.Configuration): (String, Int, Long, Option[(Long, Long)]) = {
+    def readOne(s: org.apache.hadoop.fs.FileStatus, conf: org.apache.hadoop.conf.Configuration): FileEntry = {
         val fname = s.getPath.getName
         // committer naming is "part-NNNNN-uuid..."; anything else
         // (foreign committers, over-long numeric prefixes) degrades
@@ -204,28 +211,18 @@ final class SnapshotStore(spark: SparkSession, root: String) {
           // from the column-chunk statistics already in the footer; a
           // missing column / missing stats / non-integral type yields
           // None and the file simply stays unpruneable (always read)
-          val stats = statsCol.flatMap { c =>
-            val blocks = reader.getFooter.getBlocks.asScala.toSeq
-            val perBlock = blocks.map { b =>
-              b.getColumns.asScala
-                .find(_.getPath.toDotString == c)
-                .map(_.getStatistics)
-                .filter(st => st != null && st.hasNonNullValue)
-                .flatMap { st =>
-                  (st.genericGetMin, st.genericGetMax) match {
-                    case (lo: Number, hi: Number)
-                      if !lo.isInstanceOf[java.lang.Double] &&
-                         !lo.isInstanceOf[java.lang.Float] =>
-                      Some((lo.longValue(), hi.longValue()))
-                    case _ => None
-                  }
-                }
-            }
-            if (perBlock.nonEmpty && perBlock.forall(_.isDefined))
-              Some((perBlock.map(_.get._1).min, perBlock.map(_.get._2).max))
-            else None
-          }
-          (s.getPath.toString, part, reader.getRecordCount, stats)
+          val perBlock = statsCol.toSeq.flatMap(c => reader.getFooter.getBlocks.asScala.map { b =>
+            b.getColumns.asScala.find(_.getPath.toDotString == c).map(_.getStatistics)
+              .filter(st => st != null && st.hasNonNullValue)
+              .flatMap(st => (st.genericGetMin, st.genericGetMax) match {
+                case (lo: Number, hi: Number) if !lo.isInstanceOf[java.lang.Double] &&
+                  !lo.isInstanceOf[java.lang.Float] => Some((lo.longValue(), hi.longValue()))
+                case _ => None
+              })
+          })
+          val range = Some(perBlock).filter(b => b.nonEmpty && b.forall(_.isDefined)).map(_.flatten)
+          FileEntry(relative(s.getPath.toString), part, reader.getRecordCount,
+            range.map(_.map(_._1).min), range.map(_.map(_._2).max))
         } finally reader.close()
       }
 
@@ -258,14 +255,17 @@ final class SnapshotStore(spark: SparkSession, root: String) {
       .toSeq.sortBy(_.getPath.toString)
   }
 
+  private def deleteDir(dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+  }
+
   /** Delete version `v`'s data directory, then its manifest: a crash
     * in between leaves a manifest whose data is gone, which re-running
     * the deletion finishes, never unreferenced data no manifest names.
     */
   private def dropVersion(v: Int, name: String): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(dataPath(v, name))
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(dir)) fs.delete(dir, true)
+    deleteDir(dataPath(v, name))
     Files.deleteIfExists(snapshotJson(v))
   }
 
@@ -433,16 +433,27 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * referenced by no retained manifest (nothing orphaned, nothing
     * shared). Long-running ingest needs this: without retention the
     * store accretes every superseded version's data forever. The
-    * `current` pointer never moves (the newest version of every name
-    * is always retained), and [[readAt]] time travel keeps working
-    * across the RETAINED versions; reads at expired versions fail
-    * loudly. Returns the expired version numbers.
+    * newest version of every name is always retained, and [[readAt]]
+    * time travel keeps working across the RETAINED versions; reads at
+    * expired versions fail loudly. It also sweeps the residue of
+    * crashed commits at versions up to the current one: data
+    * directories no manifest of their version names, and temporary
+    * manifests (later versions may belong to a commit in flight).
+    * Returns the expired version numbers.
     */
   def expireSnapshots(keepLast: Int = 1): Seq[Int] = {
     require(keepLast >= 1, s"keepLast must be >= 1 (got $keepLast)")
-    manifests.groupBy(_.name).toSeq.flatMap { case (name, ms) =>
-      ms.map(_.version).sorted.dropRight(keepLast).map { v => dropVersion(v, name); v }
+    val ms = manifests
+    val expired = ms.groupBy(_.name).toSeq.flatMap { case (name, vs) =>
+      vs.map(_.version).dropRight(keepLast).map { v => dropVersion(v, name); v }
     }.sorted
+    val top = ms.lastOption.fold(0)(_.version)
+    val named = ms.map(m => (m.version, m.name)).toSet
+    for ((v, s) <- numbered(Paths.get(root, "data"), SnapshotStore.DataDir) if v <= top;
+         d <- list(s.toPath) if !named((v, d.getName)))
+      deleteDir(d.toString)
+    for ((v, f) <- numbered(snapDir, SnapshotStore.TempFile) if v <= top) f.delete()
+    expired
   }
 
   /** Compact the latest snapshot of `name` into ~`targetBytes` data
@@ -452,10 +463,10 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * grows with file count, not byte count. The data is rewritten in
     * ONE pass, committed as a NEW version of the same name, so
     * history and [[readAt]] time travel keep working against the old
-    * files; the new manifest's footer-derived rowCount is then
-    * checked against the source manifest and a mismatch rolls the
-    * `current` pointer back (also deleting the failed version's
-    * rewritten data — nothing can leak) and throws.
+    * files. The new manifest's footer-derived rowCount is checked
+    * against the source manifest BEFORE it is published: on a
+    * mismatch the rewritten data is deleted and it throws, and no
+    * version was ever created.
     *
     * A zone-map snapshot (committed with a statsCol) keeps its
     * pruning guarantees: the rewrite RANGE-partitions on the stats
@@ -467,25 +478,15 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     val dir = dataPath(m.version, name)
     val totalBytes = parquetFiles(dir).map(_.getLen).sum
     val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val before = m.rowCount
     val src = spark.read.parquet(dir)
     val rewritten = m.statsCol match {
       case Some(c) => src.repartitionByRange(nFiles, col(c))
       case None => src.repartition(nFiles)
     }
-    val newV = commit(name, rewritten, m.statsCol)
-    val after = manifestAt(newV).rowCount
-    if (after != before) {
-      // roll the pointer back to the pre-compaction state and remove
-      // the failed version's rewritten data AND manifest — leaving
-      // the directory would orphan a full table copy that
-      // expireSnapshots (manifest-driven) could never reclaim
-      writeAtomic(currentPath, (newV - 1).toString)
-      dropVersion(newV, name)
-      throw new IllegalStateException(
-        s"compaction of '$name' rewrote $after rows, expected $before; rolled back to v${newV - 1}")
+    publish(name, rewritten, m.statsCol) { n =>
+      if (n.rowCount != m.rowCount) throw new IllegalStateException(
+        s"compaction of '$name' rewrote ${n.rowCount} rows, expected ${m.rowCount}; nothing was published")
     }
-    newV
   }
 
   /** Files added/removed between two snapshot versions of a name. */
@@ -497,6 +498,16 @@ final class SnapshotStore(spark: SparkSession, root: String) {
 }
 
 object SnapshotStore {
+  private val ManifestFile = "v(\\d{1,9})\\.json".r
+  /** `.v<N>-<uuid>.json.tmp`, and `.v<N>.json.tmp` of older stores. */
+  private val TempFile = "\\.v(\\d{1,9})\\D.*\\.tmp".r
+  private val DataDir = "s(\\d{1,9})".r
+  private val Scheme = "[A-Za-z][A-Za-z0-9+.-]*:".r
+
+  private val MetricsSuffix = "__metrics"
+  private val MetricsSchema = new StructType()
+    .add("partition_id", IntegerType).add("rows", LongType).add("file", StringType)
+
   /** One data file of a snapshot: its path, the write partition the
     * committer encoded in its name (-1 if none), its row count, and
     * the min/max of the snapshot's `statsCol` when the footer had them.
@@ -505,14 +516,16 @@ object SnapshotStore {
                                               min: Option[Long], max: Option[Long])
 
   /** The `_snapshots/v<N>.json` record of snapshot N: its parent
-    * version, name, the id of the store instance that wrote it, total
-    * rows, zone-map column, Spark schema (as `DataType.json`), data
-    * files, and the input files of the committed DataFrame.
+    * version, name, total rows, zone-map column, Spark schema (as
+    * `DataType.json`), data files, and the input files of the
+    * committed DataFrame. Paths under the store root are relative to
+    * it. Keys the decoder does not read (older stores also wrote a
+    * writer id) are ignored.
     */
   private[sources] final case class Manifest(version: Int, parent: Int, name: String,
-                                             writerId: Option[String], rowCount: Long,
-                                             statsCol: Option[String], schema: String,
-                                             files: Seq[FileEntry], lineage: Seq[String])
+                                             rowCount: Long, statsCol: Option[String],
+                                             schema: String, files: Seq[FileEntry],
+                                             lineage: Seq[String])
 
   private[sources] object Manifest {
     // `"key": value` spacing, as manifests have always been written
@@ -524,14 +537,10 @@ object SnapshotStore {
       val files = m.files.map(f => ("path" -> f.path) ~ ("partition" -> f.partition) ~
         ("rows" -> f.rows) ~ ("min" -> f.min) ~ ("max" -> f.max))
       writer.writeValueAsString(("version" -> m.version) ~ ("parent" -> m.parent) ~
-        ("name" -> m.name) ~ ("writerId" -> m.writerId) ~ ("rowCount" -> m.rowCount) ~
+        ("name" -> m.name) ~ ("rowCount" -> m.rowCount) ~
         ("statsCol" -> m.statsCol) ~ ("schema" -> m.schema) ~ ("files" -> files) ~
         ("lineage" -> m.lineage)) + "\n"
     }
-
-    def parse(json: String, file: String): JValue =
-      try JsonMethods.parse(json)
-      catch { case e: Exception => throw new IllegalStateException(s"manifest $file is not valid JSON", e) }
 
     /** Field-by-field mapping of the parsed JSON (no reflection); a
       * missing or mistyped field throws, naming the file.
@@ -550,9 +559,10 @@ object SnapshotStore {
       val long: PartialFunction[JValue, Long] = { case JInt(n) if n.isValidLong => n.toLong }
       val int: PartialFunction[JValue, Int] = { case JInt(n) if n.isValidInt => n.toInt }
       val arr: PartialFunction[JValue, List[JValue]] = { case JArray(a) => a }
-      val o = parse(json, file)
+      val o = try JsonMethods.parse(json)
+        catch { case e: Exception => throw new IllegalStateException(s"manifest $file is not valid JSON", e) }
       Manifest(req(o, "version")(int), req(o, "parent")(int), req(o, "name")(str),
-        opt(o, "writerId")(str), req(o, "rowCount")(long), opt(o, "statsCol")(str),
+        req(o, "rowCount")(long), opt(o, "statsCol")(str),
         req(o, "schema")(str),
         req(o, "files")(arr).map(f => FileEntry(req(f, "path")(str), req(f, "partition")(int),
           req(f, "rows")(long), opt(f, "min")(long), opt(f, "max")(long))),

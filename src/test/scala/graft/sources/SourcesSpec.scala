@@ -2,9 +2,9 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   test("jpeg fast-raster decode equals the per-pixel getRGB reference") {
@@ -59,7 +59,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("snapshot store commit/read/diff/resume") {
-    val root = Files.newTmp("snap")
+    val root = tempDir("snap")
     val store = new SnapshotStore(spark, root)
     assert(store.currentVersion.isEmpty)
     val v1 = store.commit("images", ImageTable.generate(spark, 50, 2))
@@ -95,7 +95,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("zone-map stats prune files on ranged reads, results stay exact") {
-    val root = Files.newTmp("zonemap")
+    val root = tempDir("zonemap")
     val store = new SnapshotStore(spark, root)
     // 4 range-partitioned files over a monotone cell column: each
     // file's footer min/max covers a disjoint quarter of [0, 400)
@@ -130,35 +130,26 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("concurrent-writer version collision is detected, not clobbered") {
-    val root = Files.newTmp("conflict")
+    // two store instances on one root, writing different names: each
+    // commit creates the next absent v<N>.json, so none replaces
+    // another's manifest (a lost race throws; SnapshotStoreSpec)
+    val root = tempDir("conflict")
     val store = new SnapshotStore(spark, root)
-    store.commit("a", spark.range(3).toDF("x"))
-    // simulate a second writer that already wrote the next version's
-    // manifest while our pointer still reads the old version
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(root, "_snapshots", "v2.json"), "{}")
-    intercept[IllegalStateException] { store.commit("b", spark.range(3).toDF("x")) }
-    // recovery path: removing the foreign manifest unblocks commits
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(root, "_snapshots", "v2.json"))
-    assert(store.commit("b", spark.range(3).toDF("x")) == 2)
-    // a torn manifest from OUR OWN crashed commit (same name, pointer
-    // not flipped — the streaming-replay window) self-heals: the
-    // re-commit overwrites it instead of refusing
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(root, "_snapshots", "v3.json"),
-      """{ "version": 3, "name": "c", "rowCount": 0, "files": [], "lineage": [] }""")
-    assert(store.commit("c", spark.range(4).toDF("x")) == 3)
-    assert(store.read("c").count() == 4)
-    // manifests carry the committing store's writerId (torn-commit
-    // self-heal distinguishes own vs foreign writes and logs foreign)
+    val other = new SnapshotStore(spark, root)
+    assert(store.commit("a", spark.range(3).toDF("x")) == 1)
+    assert(other.commit("b", spark.range(4).toDF("x")) == 2)
+    assert(store.commit("c", spark.range(5).toDF("x")) == 3)
+    assert(store.snapshots == Seq((1, "a", 3L), (2, "b", 4L), (3, "c", 5L)))
+    assert(other.snapshots == store.snapshots)
+    assert(other.read("c").count() == 5 && store.read("b").count() == 4)
+    // a manifest names no writer instance
     val m3 = java.nio.file.Files.readString(
       java.nio.file.Paths.get(root, "_snapshots", "v3.json"))
-    assert(m3.contains("\"writerId\""), "manifest should record writerId")
+    assert(!m3.contains("\"writerId\""))
   }
 
   test("manifest format drift fails loudly, never a partial file list") {
-    val root = Files.newTmp("drift")
+    val root = tempDir("drift")
     val store = new SnapshotStore(spark, root)
     val v = store.commit("t", spark.range(10).toDF("x"), Some("x"))
     val files = store.fileMetrics(v)
@@ -188,7 +179,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("copy-on-write merge updates matched keys, inserts new, keeps history") {
     import spark.implicits._
-    val root = Files.newTmp("merge")
+    val root = tempDir("merge")
     val store = new SnapshotStore(spark, root)
     val v1 = store.commit("t",
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "val"))
@@ -243,7 +234,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("set-membership pruning reads only files whose range holds a cover cell") {
-    val root = Files.newTmp("zonemap_in")
+    val root = tempDir("zonemap_in")
     val store = new SnapshotStore(spark, root)
     val df = spark.range(0, 400).toDF("cell")
       .withColumn("payload", col("cell") * 3)
@@ -270,7 +261,7 @@ class SourcesSpec extends AnyFunSuite {
     import graft.index.{cells, CellIndex}
     import graft.operators.SpatialJoins
     import graft.operators.SpatialJoins.Aoi
-    val root = Files.newTmp("aoi_pruned")
+    val root = tempDir("aoi_pruned")
     val store = new SnapshotStore(spark, root)
     val coarseLevel = 4
     val pts = spark.range(0, 20000).toDF("id")
@@ -299,7 +290,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("expire-snapshots drops old versions and their files, keeps the rest") {
-    val root = Files.newTmp("expire")
+    val root = tempDir("expire")
     val store = new SnapshotStore(spark, root)
     val v1 = store.commit("t", spark.range(10).toDF("x"))         // will expire
     val v2 = store.commit("t", spark.range(20).toDF("x"))         // retained
@@ -327,7 +318,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("compaction rewrites small files, keeps data and history") {
-    val root = Files.newTmp("compact")
+    val root = tempDir("compact")
     val store = new SnapshotStore(spark, root)
     // ingest fragmented into 32 small files
     val src = ImageTable.generate(spark, 200, 4).repartition(32)
@@ -349,7 +340,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("compaction preserves zone-map stats and range-clustered pruning") {
-    val root = Files.newTmp("compact_zm")
+    val root = tempDir("compact_zm")
     val store = new SnapshotStore(spark, root)
     val df = spark.range(0, 4000).toDF("cell")
       .withColumn("payload", col("cell") * 11)
@@ -375,7 +366,7 @@ class SourcesSpec extends AnyFunSuite {
     val m = Lineage.partitionMetrics(df).collect()
     assert(m.map(_.getAs[Long]("rows")).sum == 100)
     assert(m.length == 5)
-    val root = Files.newTmp("lineage")
+    val root = tempDir("lineage")
     val store = new SnapshotStore(spark, root)
     Lineage.commitWithMetrics(store, "imgs", df)
     assert(store.read("imgs").count() == 100)
@@ -391,7 +382,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("commit runs exactly one job and the manifest matches the data") {
     val df = ImageTable.generate(spark, 120, 6)
-    val root = Files.newTmp("onejob")
+    val root = tempDir("onejob")
     val store = new SnapshotStore(spark, root)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -432,7 +423,7 @@ class SourcesSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import graft.functions.geo
     import graft.index.cells
-    val warehouse = Files.newTmp("buckets")
+    val warehouse = tempDir("buckets")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS buckets_db LOCATION '$warehouse'")
     spark.sql("USE buckets_db")
     try {
@@ -469,10 +460,5 @@ class SourcesSpec extends AnyFunSuite {
       spark.sql("DROP DATABASE IF EXISTS buckets_db CASCADE")
       spark.sql("USE default")
     }
-  }
-
-  object Files {
-    def newTmp(prefix: String): String =
-      java.nio.file.Files.createTempDirectory(prefix).toString
   }
 }

@@ -4,11 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 import graft.functions.geo
 import graft.SparkTestSession.rnd
 
-class GeoStreamsSpec extends AnyFunSuite {
+class GeoStreamsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   test("streaming dedup by image id within watermark") {
@@ -335,8 +335,8 @@ class GeoStreamsSpec extends AnyFunSuite {
   test("streaming ingest commits deduplicated snapshots and resumes") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("stream_snap").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("stream_ckpt").toString
+    val root = tempDir("stream_snap")
+    val ckpt = tempDir("stream_ckpt")
     val store = new graft.sources.SnapshotStore(spark, root)
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     def ts(m: Int) = new java.sql.Timestamp(t0.getTime + m * 60000L)
