@@ -2,10 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
 import graft.functions.geo
-import graft.index.{CellIndex, cells}
+import graft.index.{CellIndex, CellKernels, cells}
 import graft.geo.{Ellipsoids, Gade, Vec3, VecMath}
 
 /** Spatial join operators: all are cell-index candidate generation
@@ -602,6 +603,16 @@ object SpatialJoins {
     aois.map(a => (a.id, a.flatRings.toSeq)).toDF("aoi_id", "__rings")
   }
 
+  /** The distinct cover levels of a literal AOI list at `extraRad`:
+    * the value [[polygonCandidates]]' distributed levels pass would
+    * collect, from the same scalar kernel on the driver, so no job
+    * runs. Each AOI passes `validated` first, so a bad ring fails
+    * with its AOI's name rather than in the kernel.
+    */
+  private def aoiCoverLevels(aois: Seq[AoiM], extraRad: Double): Array[Int] =
+    aois.flatMap(a => CellKernels.ringCoverLevels(
+      new GenericArrayData(a.validated.flatRings), extraRad).toIntArray()).distinct.sorted.toArray
+
   /** Assign points to multipolygon / polygon-with-holes AOIs: the
     * polygon-table candidate path ([[polygonCandidates]]) over the
     * literal ring frame ([[aoiRingsFrame]]), then the exact winding
@@ -609,8 +620,8 @@ object SpatialJoins {
     * containment holds. Output: `aoi_id` + point columns.
     */
   def aoiJoinM(points: DataFrame, pointNvec: String, aois: Seq[AoiM]): DataFrame =
-    containsJoin(points, pointNvec,
-      aoiRingsFrame(points.sparkSession, aois), "aoi_id", "__rings")
+    containsJoin(points, pointNvec, aoiRingsFrame(points.sparkSession, aois), "aoi_id", "__rings",
+      literalLevels = Some(aoiCoverLevels(aois, 0.0)))
 
   /** Buffered multipolygon AOI join: points within `bufferMeters` of
     * the AOI (negative signed distance = inside; a hole's rim is
@@ -623,9 +634,8 @@ object SpatialJoins {
                      bufferMeters: Double,
                      radius: Double = MeanEarthRadius,
                      distCol: String = "dist_m"): DataFrame =
-    bufferJoin(points, pointNvec,
-      aoiRingsFrame(points.sparkSession, aois), "aoi_id", "__rings",
-      bufferMeters, radius, distCol)
+    bufferJoin(points, pointNvec, aoiRingsFrame(points.sparkSession, aois), "aoi_id", "__rings",
+      bufferMeters, radius, distCol, Some(aoiCoverLevels(aois, bufferMeters / radius)))
 
   /** Signed great-circle distance from every point to each AOI's
     * BOUNDARY — the nearest edge of ANY ring, hole rims included —
@@ -964,7 +974,9 @@ object SpatialJoins {
     * back by polygon id (AQE broadcasts small polygon tables).
     *
     * The distinct level list is the only driver-side value: <= 25
-    * ints off the cheap levels-only kernel pass. Cover proof: rings
+    * ints off the cheap levels-only kernel pass over a table, or
+    * `literalLevels` when the caller computed them on the driver from
+    * a literal AOI list ([[aoiCoverLevels]]). Cover proof: rings
     * pass the hemisphere contract (kernel-enforced, throwing — table
     * rows have no construction-time `validated` hook), so each
     * ring's interior stays inside its circumdisc (geodesic balls of
@@ -983,11 +995,12 @@ object SpatialJoins {
   private def polygonCandidates(points: DataFrame, pointNvec: String,
                                 polys: DataFrame, polyIdCol: String,
                                 ringsCol: String, extraRad: Double,
-                                persistCover: Boolean): DataFrame = {
+                                persistCover: Boolean,
+                                literalLevels: Option[Array[Int]]): DataFrame = {
     val polysN = polys.select(col(polyIdCol), col(ringsCol))
-    val levels = polysN
+    val levels = literalLevels.getOrElse(polysN
       .select(explode(cells.ringCoverLevels(col(ringsCol), extraRad)).as("__l"))
-      .distinct().collect().map(_.getInt(0)).sorted
+      .distinct().collect().map(_.getInt(0)).sorted)
     val cover0 = ancestorFreeCover(polysN, polyIdCol, ringsCol, extraRad, levels)
     val cover = if (persistCover) cover0.persist(StorageLevel.MEMORY_AND_DISK) else cover0
     // An empty polygon table (or all-null rings) is a legitimate
@@ -1012,9 +1025,10 @@ object SpatialJoins {
   private[graft] def containsJoin(points: DataFrame, pointNvec: String,
                                   polys: DataFrame, polyIdCol: String,
                                   ringsCol: String,
-                                  persistCover: Boolean = false): DataFrame =
+                                  persistCover: Boolean = false,
+                                  literalLevels: Option[Array[Int]] = None): DataFrame =
     polygonCandidates(points, pointNvec, polys, polyIdCol, ringsCol,
-      extraRad = 0.0, persistCover)
+      extraRad = 0.0, persistCover, literalLevels)
       .filter(cells.pointInPolygonRings(col(pointNvec), col(ringsCol)))
       .drop(ringsCol)
 
@@ -1026,10 +1040,11 @@ object SpatialJoins {
   private def bufferJoin(points: DataFrame, pointNvec: String,
                          polys: DataFrame, polyIdCol: String, ringsCol: String,
                          bufferMeters: Double, radius: Double,
-                         distCol: String): DataFrame = {
+                         distCol: String,
+                         literalLevels: Option[Array[Int]] = None): DataFrame = {
     require(bufferMeters >= 0.0, s"buffer must be >= 0 (got $bufferMeters)")
     polygonCandidates(points, pointNvec, polys, polyIdCol, ringsCol,
-      extraRad = bufferMeters / radius, persistCover = false)
+      extraRad = bufferMeters / radius, persistCover = false, literalLevels)
       .withColumn(distCol,
         cells.boundaryDistSignedRings(col(pointNvec), col(ringsCol)) * lit(radius))
       .filter(col(distCol) <= bufferMeters)

@@ -26,9 +26,11 @@ import SnapshotStore.{FileEntry, Manifest, MetricsSchema, MetricsSuffix}
   * A manifest is one [[SnapshotStore.Manifest]] value with one encoder
   * and one decoder; every reader goes through the decoded value, and a
   * manifest that does not decode throws `IllegalStateException` naming
-  * the file instead of yielding a partial file list. Paths under
-  * `root` are stored relative to it, so a store moves with a plain
-  * directory move.
+  * the file instead of yielding a partial file list. Reads are typed
+  * by the manifest's recorded schema (Iceberg plans a scan from its
+  * metadata the same way), so planning a read touches no data and
+  * runs no Spark job. Paths under `root` are stored relative to it,
+  * so a store moves with a plain directory move.
   *
   * Commit protocol (Iceberg's file-system tables): data is written to
   * the snapshot-versioned directory, the manifest to a temporary file
@@ -103,27 +105,35 @@ final class SnapshotStore(spark: SparkSession, root: String) {
   def dataPath(v: Int, name: String): String =
     Paths.get(root, "data", s"s$v", name).toString
 
-  /** The latest snapshot of `name`. `<base>__metrics` of a committed
-    * `base` is served from `base`'s manifest: (partition_id, rows,
-    * file) per data file, as [[fileMetrics]] (see
+  /** The latest snapshot of `name`, typed by its manifest: planning
+    * the read touches no data and runs no Spark job. `<base>__metrics`
+    * of a committed `base` is served from `base`'s manifest:
+    * (partition_id, rows, file) per data file, as [[fileMetrics]] (see
     * [[Lineage.commitWithMetrics]]).
     */
-  def read(name: String): DataFrame =
-    (if (name.endsWith(MetricsSuffix)) versionOf(name.stripSuffix(MetricsSuffix)) else None) match {
-      case Some(v) => spark.createDataFrame(fileMetrics(v).map(Row.fromTuple).asJava, MetricsSchema)
-      case None => spark.read.parquet(dataPath(latest(name).version, name))
-    }
+  def read(name: String): DataFrame = readAt(name, Int.MaxValue)
 
   /** Time travel: read `name` as of store version `asOf` — the latest
     * snapshot of that name with version <= asOf (Iceberg
     * snapshot-id-style read; superseded data directories are never
-    * deleted, so history stays readable).
+    * deleted, so history stays readable). Names resolve as in [[read]]:
+    * `<base>__metrics` is the file metrics of `base`'s latest manifest
+    * at or before `asOf`.
     */
-  def readAt(name: String, asOf: Int): DataFrame = {
-    val m = manifestOf(name, asOf).getOrElse(throw new IllegalArgumentException(
-      s"no snapshot named '$name' at or before version $asOf in $root"))
-    spark.read.parquet(dataPath(m.version, name))
-  }
+  def readAt(name: String, asOf: Int): DataFrame =
+    Some(name.stripSuffix(MetricsSuffix)).filter(_ != name).flatMap(manifestOf(_, asOf)) match {
+      case Some(b) => spark.createDataFrame(metricsOf(b).map(Row.fromTuple).asJava, MetricsSchema)
+      case None => scan(manifestOf(name, asOf).getOrElse {
+        val when = if (asOf == Int.MaxValue) "" else s" at or before version $asOf"
+        throw new IllegalArgumentException(s"no snapshot named '$name'$when in $root")
+      })
+    }
+
+  /** Version `m`'s data directory, read with the schema its manifest
+    * recorded: Spark infers nothing, so no job runs until an action.
+    */
+  private def scan(m: Manifest): DataFrame =
+    spark.read.schema(m.structType).parquet(dataPath(m.version, m.name))
 
   /** Write `df` as a new snapshot called `name`: ONE job writes the
     * data files; the manifest (per-file row counts + the write
@@ -168,7 +178,7 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     // recording rowCount 0 for data that exists
     val rowCount =
       if (files.nonEmpty) files.map(_.rows).sum
-      else spark.read.parquet(out).count()
+      else spark.read.schema(df.schema).parquet(out).count()
     val m = Manifest(v, parent, name, rowCount, statsCol, df.schema.json, files,
       df.inputFiles.sorted.toSeq.map(relative))
     try check(m) catch { case e: Exception => deleteDir(out); throw e }
@@ -317,7 +327,7 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     val m = latest(name)
     val statsCol = m.statsCol.getOrElse(throw new IllegalArgumentException(
       s"snapshot '$name' v${m.version} was committed without a statsCol"))
-    val schema = DataType.fromJson(m.schema).asInstanceOf[StructType]
+    val schema = m.structType
     val keep = filesWhere(m, overlap)
     val base =
       if (keep.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
@@ -343,12 +353,16 @@ final class SnapshotStore(spark: SparkSession, root: String) {
   /** Per-partition metrics of a committed snapshot, read back from
     * its manifest (no data access): (partition_id, rows, file).
     */
-  def fileMetrics(v: Int): Seq[(Int, Long, String)] =
-    manifestAt(v).files.map(f => (f.partition, f.rows, f.path))
+  def fileMetrics(v: Int): Seq[(Int, Long, String)] = metricsOf(manifestAt(v))
+
+  private def metricsOf(m: Manifest): Seq[(Int, Long, String)] =
+    m.files.map(f => (f.partition, f.rows, f.path))
 
   /** Resumable checkpoint: if a committed snapshot named `name`
     * exists, read it back; otherwise compute, commit, and read back
     * (so downstream stages always consume the materialized files).
+    * The read-back is typed by the manifest, so a hit runs no Spark
+    * job.
     */
   def getOrCompute(name: String)(compute: => DataFrame): DataFrame =
     getOrCompute(name, None)(compute)
@@ -380,7 +394,7 @@ final class SnapshotStore(spark: SparkSession, root: String) {
             statsCol: Option[String] = None): Int = {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
     val m = latest(name)
-    val cur0 = spark.read.parquet(dataPath(m.version, name))
+    val cur0 = scan(m)
     // SCHEMA EVOLUTION (Iceberg's add-column): updates may carry NEW
     // columns — existing rows take typed nulls for them (CoW rewrite,
     // so the new version's files all hold the full schema, while time
@@ -478,7 +492,7 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     val dir = dataPath(m.version, name)
     val totalBytes = parquetFiles(dir).map(_.getLen).sum
     val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val src = spark.read.parquet(dir)
+    val src = scan(m)
     val rewritten = m.statsCol match {
       case Some(c) => src.repartitionByRange(nFiles, col(c))
       case None => src.repartition(nFiles)
@@ -525,7 +539,9 @@ object SnapshotStore {
   private[sources] final case class Manifest(version: Int, parent: Int, name: String,
                                              rowCount: Long, statsCol: Option[String],
                                              schema: String, files: Seq[FileEntry],
-                                             lineage: Seq[String])
+                                             lineage: Seq[String]) {
+    def structType: StructType = DataType.fromJson(schema).asInstanceOf[StructType]
+  }
 
   private[sources] object Manifest {
     // `"key": value` spacing, as manifests have always been written

@@ -3,7 +3,7 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import graft.SparkTestSession
+import graft.{JobCount, SparkTestSession}
 import graft.functions.geo
 import graft.geo.Gade
 import graft.index.{CellIndex, CellKernels}
@@ -142,6 +142,23 @@ class AoiMSpec extends AnyFunSuite {
         assert(math.abs(gotD((i, a.id)) - want) < 1e-6,
           s"boundary dist mismatch id=$i aoi=${a.id}")
       }
+    }
+  }
+
+  test("literal AOI joins plan without a job and validate before the levels kernel") {
+    val df = Seq((1L, 1.0, 1.0)).toDF("id", "lat", "lon")
+      .select(col("id"), geo.nvecDeg(col("lat"), col("lon")).as("n"))
+    val (_, jobs) = JobCount(spark) {
+      SpatialJoins.aoiJoinM(df, "n", Seq(multi, concave))
+      SpatialJoins.aoiBufferJoinM(df, "n", Seq(multi, concave), 300e3)
+    }
+    assert(jobs == 0, s"building the literal AOI joins ran $jobs jobs")
+    // the AoiM check names the AOI; the kernel's own check would not
+    val wide = AoiM("wide", Seq((0 to 8).map(i => (0.0 + (i % 2), i * 25.0))))
+    for (build <- Seq(() => SpatialJoins.aoiJoinM(df, "n", Seq(multi, wide)),
+                      () => SpatialJoins.aoiBufferJoinM(df, "n", Seq(multi, wide), 300e3))) {
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains("AOI 'wide' ring 0 spans"), e.getMessage)
     }
   }
 

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.{SparkTestSession, TempDirs}
+import graft.{JobCount, SparkTestSession, TempDirs}
 
 class SourcesSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
@@ -380,28 +380,57 @@ class SourcesSpec extends AnyFunSuite with TempDirs {
       .sameElements(0 until 5))
   }
 
+  test("readAt serves each version's file metrics of a committed base") {
+    val store = new SnapshotStore(spark, tempDir("metrics_at"))
+    val v1 = store.commit("imgs", ImageTable.generate(spark, 60, 3))
+    store.commit("other", ImageTable.generate(spark, 10, 1))
+    val v3 = store.commit("imgs", ImageTable.generate(spark, 90, 4))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getLong(1), r.getString(2))).toSeq
+    for ((asOf, v) <- Seq(v1 -> v1, v1 + 1 -> v1, v3 -> v3)) {
+      val m = store.readAt("imgs__metrics", asOf)
+      assert(m.schema == new org.apache.spark.sql.types.StructType().add("partition_id", "int")
+        .add("rows", "long").add("file", "string"))
+      assert(rows(m) == store.fileMetrics(v), s"metrics as of $asOf")
+    }
+    assert(rows(store.read("imgs__metrics")) == store.fileMetrics(v3))
+    val e = intercept[IllegalArgumentException](store.readAt("imgs__metrics", 0))
+    assert(e.getMessage.contains("no snapshot named 'imgs__metrics' at or before version 0"))
+  }
+
   test("commit runs exactly one job and the manifest matches the data") {
     val df = ImageTable.generate(spark, 120, 6)
     val root = tempDir("onejob")
     val store = new SnapshotStore(spark, root)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    val (_, commitJobs) = JobCount(spark)(store.commit("imgs", df))
+    assert(commitJobs == 1, s"commit must scan the data exactly once, ran $commitJobs jobs")
+    // reads are typed by the manifest: planning one runs no job, and
+    // the manifest schema is the one Spark would infer from the files
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val meta = new MetadataBuilder().putString("comment", "row key").putLong("since", 3L).build()
+    val schema = new StructType()
+      .add(StructField("id", LongType, nullable = false, meta))
+      .add("pos", new StructType().add("lat", DoubleType, nullable = false).add("lon", DoubleType))
+      .add("tags", ArrayType(StringType, containsNull = false))
+      .add("attrs", MapType(StringType, IntegerType))
+      .add("price", DecimalType(12, 3))
+      .add("blob", BinaryType)
+      .add("ts", TimestampType)
+    val typed = spark.createDataFrame(java.util.Arrays.asList(
+      Row(1L, Row(1.5, -2.0), Seq("a", "b"), Map("k" -> 1), new java.math.BigDecimal("12.345"),
+        Array[Byte](1, 2), java.sql.Timestamp.valueOf("2020-01-02 03:04:05")),
+      Row(2L, null, Seq.empty[String], Map.empty[String, Int], null, null, null)), schema)
+    val vTyped = store.commit("typed", typed)
+    val (reads, readJobs) = JobCount(spark) {
+      Seq(store.read("imgs"), store.readAt("imgs", 1), store.read("typed"),
+        store.getOrCompute("imgs")(sys.error("a committed snapshot must not be recomputed")))
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      store.commit("imgs", df)
-      // drain the async listener bus
-      var last = -1; var stable = 0; var waited = 0
-      while (stable < 4 && waited < 100) {
-        Thread.sleep(100)
-        if (jobs.get == last) stable += 1 else { stable = 0; last = jobs.get }
-        waited += 1
-      }
-      assert(jobs.get == 1,
-        s"commit must scan the data exactly once, ran ${jobs.get} jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(readJobs == 0, s"planning four reads ran $readJobs jobs")
+    assert(reads(0).schema == spark.read.parquet(store.dataPath(1, "imgs")).schema)
+    assert(reads(2).schema == spark.read.parquet(store.dataPath(vTyped, "typed")).schema)
+    assert(reads(2).schema("id").metadata == meta)
+    assert(reads(2).orderBy("id").collect().toSeq == typed.orderBy("id").collect().toSeq)
     // manifest content equals a fresh count over the committed files
     val json = java.nio.file.Files.readString(
       java.nio.file.Paths.get(root, "_snapshots", "v1.json"))
