@@ -126,7 +126,8 @@ object PipelineMain {
       // store with a different --tile-level resumes the OLD snapshot
       // (resume is keyed by name), and cell ids at different levels
       // never match — the isin filter would silently commit an EMPTY
-      // tile_stats. Read the level back from the data itself.
+      // tile_stats. Read the level back from the committed data's
+      // zone map: the manifest's min of tile_coarse (no job).
       // ... and the cover must target the column the snapshot's zone
       // maps were actually built on: a 'tiled' snapshot committed by
       // an older writer with statsCol 'tile' would pass fine-tile ids
@@ -138,11 +139,8 @@ object PipelineMain {
             s"'$sc', not 'tile_coarse' — it was written by an " +
             "incompatible pipeline version; use a fresh --store")
       }
-      val committedCoarseLevel = {
-        val sample = store.read(tiledName).select("tile_coarse").limit(1).collect()
-        if (sample.isEmpty) coarseLevel
-        else graft.index.CellIndex.levelOf(sample(0).getLong(0))
-      }
+      val committedCoarseLevel = store.statsRange(tiledName)
+        .fold(coarseLevel) { case (lo, _) => graft.index.CellIndex.levelOf(lo) }
       if (committedCoarseLevel != coarseLevel)
         System.err.println(s"[pipeline] WARNING: committed 'tiled' snapshot " +
           s"is at coarse level $committedCoarseLevel but --tile-level implies " +

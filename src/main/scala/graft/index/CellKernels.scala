@@ -2,6 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import graft.geo.VecMath
 
@@ -139,16 +140,19 @@ object CellKernels {
   def pointInPolygonRings(px: Double, py: Double, pz: Double,
                           data: ArrayData): Boolean = {
     val vs = data.toDoubleArray()
-    insideRingsRaw(px, py, pz, vs, decodeRingCount(vs))
+    insideRingsRaw(px, py, pz, vs, 0, decodeRingCount(vs))
   }
 
+  /** Even-odd containment over the ring-list encoding of `k` rings
+    * whose header starts at double-offset `base` of `vs`.
+    */
   private def insideRingsRaw(px: Double, py: Double, pz: Double,
-                             vs: Array[Double], k: Int): Boolean = {
+                             vs: Array[Double], base: Int, k: Int): Boolean = {
     var inside = false
-    var off = 1 + k
+    var off = base + 1 + k
     var r = 0
     while (r < k) {
-      val n = vs(1 + r).toInt
+      val n = vs(base + 1 + r).toInt
       if (ringInside(px, py, pz, vs, off, n)) inside = !inside
       off += 3 * n
       r += 1
@@ -211,7 +215,7 @@ object CellKernels {
       var i = 0
       while (i < n) {
         if (insideRingsRaw(src(off + 3 * i), src(off + 3 * i + 1),
-            src(off + 3 * i + 2), dst, kDst)) return true
+            src(off + 3 * i + 2), dst, 0, kDst)) return true
         i += 1
       }
       off += 3 * n
@@ -290,13 +294,20 @@ object CellKernels {
   def boundaryDistSignedRings(px: Double, py: Double, pz: Double,
                               data: ArrayData): Double = {
     val vs = data.toDoubleArray()
-    val k = decodeRingCount(vs)
+    boundaryDistRaw(px, py, pz, vs, 0, decodeRingCount(vs))
+  }
+
+  /** [[boundaryDistSignedRings]] over the encoding of `k` rings whose
+    * header starts at double-offset `base` of `vs`.
+    */
+  private def boundaryDistRaw(px: Double, py: Double, pz: Double,
+                              vs: Array[Double], base: Int, k: Int): Double = {
     var best = Double.MaxValue
     var inside = false
-    var off = 1 + k
+    var off = base + 1 + k
     var r = 0
     while (r < k) {
-      val n = vs(1 + r).toInt
+      val n = vs(base + 1 + r).toInt
       val d = ringEdgeDist(px, py, pz, vs, off, n)
       if (d < best) best = d
       if (ringInside(px, py, pz, vs, off, n)) inside = !inside
@@ -430,6 +441,73 @@ object CellKernels {
     val k = decodeRingCount(vs)
     val stats = ringCoverStats(vs, extraRad, k)
     new GenericArrayData(stats.map(_._5).distinct.sorted)
+  }
+
+  /** Polygon indices of a shipped cover that hold the point's cell at
+    * some cover level, ascending and distinct. `cells` is sorted and
+    * `polys` parallel to it: every cell of each polygon's
+    * [[ringCoverCells]], so a polygon whose cover holds the point's
+    * cells at two levels is still returned once.
+    */
+  private def coverHits(px: Double, py: Double, pz: Double, levels: Array[Int],
+                        cells: Array[Long], polys: Array[Int]): Array[Int] = {
+    var out = new Array[Int](8)
+    var m = 0
+    var li = 0
+    while (li < levels.length) {
+      val c = CellIndex.cellAt(px, py, pz, levels(li))
+      var a = 0; var b = cells.length
+      while (a < b) { val mid = (a + b) >>> 1; if (cells(mid) < c) a = mid + 1 else b = mid }
+      while (a < cells.length && cells(a) == c) {
+        if (m == out.length) out = java.util.Arrays.copyOf(out, 2 * m)
+        out(m) = polys(a); m += 1; a += 1
+      }
+      li += 1
+    }
+    java.util.Arrays.sort(out, 0, m)
+    var w = 0
+    var i = 0
+    while (i < m) {
+      if (w == 0 || out(w - 1) != out(i)) { out(w) = out(i); w += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(out, w)
+  }
+
+  /** Point-in-polygon over a small polygon set in one call: the
+    * candidates are [[coverHits]] over the set's cover, and each runs
+    * the even-odd test of [[pointInPolygonRings]] on its encoding in
+    * `rings` (the concatenated ring-list encodings, polygon i's header
+    * at double-offset `offsets(i)`). Returns the indices that pass,
+    * ascending. The arrays are plan literals, read in place; the
+    * encodings were validated when the cover was built.
+    */
+  def pipScan(px: Double, py: Double, pz: Double, levels: Array[Int],
+              cells: Array[Long], polys: Array[Int],
+              rings: Array[Double], offsets: Array[Int]): ArrayData = {
+    val cand = coverHits(px, py, pz, levels, cells, polys)
+    var m = 0
+    var i = 0
+    while (i < cand.length) {
+      val base = offsets(cand(i))
+      if (insideRingsRaw(px, py, pz, rings, base, rings(base).toInt)) { cand(m) = cand(i); m += 1 }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(cand, m))
+  }
+
+  /** [[pipScan]]'s buffered form: (index, signed boundary distance
+    * [rad] as [[boundaryDistSignedRings]]) for every candidate of a
+    * cover grown by the buffer; the caller keeps those within it.
+    */
+  def pipBufferScan(px: Double, py: Double, pz: Double, levels: Array[Int],
+                    cells: Array[Long], polys: Array[Int],
+                    rings: Array[Double], offsets: Array[Int]): ArrayData = {
+    val cand = coverHits(px, py, pz, levels, cells, polys)
+    new GenericArrayData(cand.map { p =>
+      val base = offsets(p)
+      new GenericInternalRow(Array[Any](p, boundaryDistRaw(px, py, pz, rings, base, rings(base).toInt)))
+    })
   }
 
   /** Signed great-circle distance [rad] from the point to the

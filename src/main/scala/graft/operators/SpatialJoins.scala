@@ -2,17 +2,22 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{GetArrayItem, KnownNotNull, KnownNullable, Literal}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
 import graft.functions.geo
 import graft.index.{CellIndex, CellKernels, cells}
 import graft.geo.{Ellipsoids, Gade, Vec3, VecMath}
 
-/** Spatial join operators: all are cell-index candidate generation
-  * (equi-join, shuffle on cell id) followed by exact geodesic
-  * verification — the candidate -> verify -> select pattern
-  * (SURVEY.md §3 EP-3). No custom physical operators: the planner
+/** Spatial join operators: cell-index candidate generation (equi-join,
+  * shuffle on cell id) followed by exact geodesic verification — the
+  * candidate -> verify -> select pattern (SURVEY.md §3 EP-3). A small
+  * kNN data side or a small polygon set instead ships as plan literals
+  * to one kernel scan per row, which generates and verifies the row's
+  * candidates itself. No custom physical operators: the planner
   * keeps choosing broadcast vs shuffled hash vs sort-merge, AQE keeps
   * handling stragglers, and every filter stays codegen'd.
   */
@@ -340,18 +345,6 @@ object SpatialJoins {
         max(col(if (geodesicReRank) "geodesic_m" else distCol)).over(wStat))
     }
 
-    // Size estimates from catalyst statistics — metadata only, never a
-    // job over the data (a count() pre-pass would add a full-table
-    // scan per call at 100 TB). rowCount when the plan provides it,
-    // else sizeInBytes / row width; both only steer COST choices
-    // (brute-force guard, auto level), never correctness.
-    def estRows(df: DataFrame): Long = {
-      val plan = df.queryExecution.optimizedPlan
-      plan.stats.rowCount.map(_.min(BigInt(Long.MaxValue)).toLong).getOrElse {
-        val width = math.max(8L, plan.schema.map(_.dataType.defaultSize).sum.toLong)
-        (plan.stats.sizeInBytes.min(BigInt(Long.MaxValue)) / width).toLong
-      }
-    }
     // stats-derived estimates can sit near Long.MaxValue (sizeInBytes
     // fallback), so pair budgets must be compared without overflow: a
     // wrapped product could falsely pass the <= threshold test and
@@ -360,7 +353,7 @@ object SpatialJoins {
       a <= budget && b <= budget &&
         (BigInt(math.max(1L, a)) * BigInt(math.max(1L, b))) <= BigInt(budget)
     val dataCount = estRows(data)
-    val dataBytes = data.queryExecution.optimizedPlan.stats.sizeInBytes
+    val dataBytes = estBytes(data)
     // cost guard: the kernel scan costs Q x D distance evaluations
     // and ships the collected data side to every task — only cheaper
     // than the ring machinery when that product is small (and the data
@@ -453,6 +446,22 @@ object SpatialJoins {
     result
   }
 
+  /** Size estimates from Catalyst statistics: metadata only, never a
+    * job over the data (a count() pre-pass would add a full-table scan
+    * per call at 100 TB). Rows are the plan's rowCount when it has
+    * one, else sizeInBytes / row width. Both only steer COST choices
+    * (kernel or distributed path, auto level), never correctness.
+    */
+  private def estRows(df: DataFrame): Long = {
+    val plan = df.queryExecution.optimizedPlan
+    plan.stats.rowCount.map(_.min(BigInt(Long.MaxValue)).toLong).getOrElse {
+      val width = math.max(8L, plan.schema.map(_.dataType.defaultSize).sum.toLong)
+      (plan.stats.sizeInBytes.min(BigInt(Long.MaxValue)) / width).toLong
+    }
+  }
+
+  private def estBytes(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
+
   /** [[knnJoin]]'s small-data path: the data side collected in `dId`
     * order (rows with a null position dropped), its n-vectors as one
     * flat plan literal scanned by [[graft.functions.GeoKernels.knnScan]]
@@ -466,10 +475,8 @@ object SpatialJoins {
                           sphereRadius: Double, distCol: String,
                           geodesicReRank: Boolean, covDeflate: Double): DataFrame = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.catalyst.expressions.RowOrdering
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.types._
     val n = col(dNvec)
     val idPos = data.schema.fieldIndex(dId)
     val idType = data.schema(idPos).dataType
@@ -512,8 +519,7 @@ object SpatialJoins {
     * kernels read it without unboxing).
     */
   private def flatLiteral(flat: Array[Double]): Column = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData}
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
     GraftSqlBridge.column(Literal(
       UnsafeArrayData.fromPrimitiveArray(flat), ArrayType(DoubleType, containsNull = false)))
   }
@@ -540,7 +546,6 @@ object SpatialJoins {
                    distCol: String = "dist_m"): DataFrame = {
     require(landmarks.nonEmpty, "landmarks must be non-empty")
     require(k >= 1, s"k must be >= 1 (got $k)")
-    import org.apache.spark.sql.types._
     // id order: the kernel breaks distance ties by position
     val sorted = landmarks.sortBy(_._1)
     val ids = typedlit(sorted.map(_._1))
@@ -603,25 +608,27 @@ object SpatialJoins {
     aois.map(a => (a.id, a.flatRings.toSeq)).toDF("aoi_id", "__rings")
   }
 
-  /** The distinct cover levels of a literal AOI list at `extraRad`:
-    * the value [[polygonCandidates]]' distributed levels pass would
-    * collect, from the same scalar kernel on the driver, so no job
-    * runs. Each AOI passes `validated` first, so a bad ring fails
-    * with its AOI's name rather than in the kernel.
+  /** A literal AOI list as the kernel path's polygon set (see
+    * [[PolygonSet]]), built on the driver with no job. Each AOI passes
+    * `validated` first, so a bad ring fails with its AOI's name rather
+    * than in the cover kernel.
     */
-  private def aoiCoverLevels(aois: Seq[AoiM], extraRad: Double): Array[Int] =
-    aois.flatMap(a => CellKernels.ringCoverLevels(
-      new GenericArrayData(a.validated.flatRings), extraRad).toIntArray()).distinct.sorted.toArray
+  private def aoiPolygonSet(aois: Seq[AoiM], extraRad: Double): PolygonSet = {
+    require(aois.nonEmpty)
+    PolygonSet(StructField("aoi_id", StringType), aois.map { a =>
+      val flat = a.validated.flatRings
+      (a.id, flat, CellKernels.ringCoverCells(new GenericArrayData(flat), extraRad).toLongArray())
+    })
+  }
 
-  /** Assign points to multipolygon / polygon-with-holes AOIs: the
-    * polygon-table candidate path ([[polygonCandidates]]) over the
-    * literal ring frame ([[aoiRingsFrame]]), then the exact winding
-    * test — one output row per (point, AOI) whose EVEN-ODD ring
-    * containment holds. Output: `aoi_id` + point columns.
+  /** Assign points to multipolygon / polygon-with-holes AOIs: one
+    * kernel scan per point over the AOIs' covers ([[containsScan]]),
+    * the exact winding test on each candidate — one output row per
+    * (point, AOI) whose EVEN-ODD ring containment holds. Output:
+    * `aoi_id` + point columns.
     */
   def aoiJoinM(points: DataFrame, pointNvec: String, aois: Seq[AoiM]): DataFrame =
-    containsJoin(points, pointNvec, aoiRingsFrame(points.sparkSession, aois), "aoi_id", "__rings",
-      literalLevels = Some(aoiCoverLevels(aois, 0.0)))
+    containsScan(points, pointNvec, aoiPolygonSet(aois, 0.0))
 
   /** Buffered multipolygon AOI join: points within `bufferMeters` of
     * the AOI (negative signed distance = inside; a hole's rim is
@@ -633,9 +640,11 @@ object SpatialJoins {
   def aoiBufferJoinM(points: DataFrame, pointNvec: String, aois: Seq[AoiM],
                      bufferMeters: Double,
                      radius: Double = MeanEarthRadius,
-                     distCol: String = "dist_m"): DataFrame =
-    bufferJoin(points, pointNvec, aoiRingsFrame(points.sparkSession, aois), "aoi_id", "__rings",
-      bufferMeters, radius, distCol, Some(aoiCoverLevels(aois, bufferMeters / radius)))
+                     distCol: String = "dist_m"): DataFrame = {
+    require(bufferMeters >= 0.0, s"buffer must be >= 0 (got $bufferMeters)")
+    bufferScan(points, pointNvec, aoiPolygonSet(aois, bufferMeters / radius),
+      bufferMeters, radius, distCol, ringsNullable = true)
+  }
 
   /** Signed great-circle distance from every point to each AOI's
     * BOUNDARY — the nearest edge of ANY ring, hole rims included —
@@ -962,7 +971,7 @@ object SpatialJoins {
     simple.unionByName(pruned)
   }
 
-  /** Shared candidate machinery of the polygon-TABLE joins: each
+  /** Candidate machinery of the cover path of the polygon-TABLE joins: each
     * polygon row emits its mixed-level ring-circumdisc cover
     * ([[cells.ringCoverCells]] — every ring at its OWN ~96-cell
     * level, so a continent and a city block in the same table each
@@ -974,9 +983,10 @@ object SpatialJoins {
     * back by polygon id (AQE broadcasts small polygon tables).
     *
     * The distinct level list is the only driver-side value: <= 25
-    * ints off the cheap levels-only kernel pass over a table, or
-    * `literalLevels` when the caller computed them on the driver from
-    * a literal AOI list ([[aoiCoverLevels]]). Cover proof: rings
+    * ints off the cheap levels-only kernel pass over the table. This
+    * is the path of polygon tables above [[smallPolygonSide]]'s gate
+    * and of the stream-static join; small sets and literal AOI lists
+    * take [[containsScan]] / [[bufferScan]]. Cover proof: rings
     * pass the hemisphere contract (kernel-enforced, throwing — table
     * rows have no construction-time `validated` hook), so each
     * ring's interior stays inside its circumdisc (geodesic balls of
@@ -995,12 +1005,11 @@ object SpatialJoins {
   private def polygonCandidates(points: DataFrame, pointNvec: String,
                                 polys: DataFrame, polyIdCol: String,
                                 ringsCol: String, extraRad: Double,
-                                persistCover: Boolean,
-                                literalLevels: Option[Array[Int]]): DataFrame = {
+                                persistCover: Boolean): DataFrame = {
     val polysN = polys.select(col(polyIdCol), col(ringsCol))
-    val levels = literalLevels.getOrElse(polysN
+    val levels = polysN
       .select(explode(cells.ringCoverLevels(col(ringsCol), extraRad)).as("__l"))
-      .distinct().collect().map(_.getInt(0)).sorted)
+      .distinct().collect().map(_.getInt(0)).sorted
     val cover0 = ancestorFreeCover(polysN, polyIdCol, ringsCol, extraRad, levels)
     val cover = if (persistCover) cover0.persist(StorageLevel.MEMORY_AND_DISK) else cover0
     // An empty polygon table (or all-null rings) is a legitimate
@@ -1017,79 +1026,220 @@ object SpatialJoins {
       .drop("__cell")
   }
 
-  /** Containment join shared by [[polygonJoin]], [[aoiJoinM]] and the
-    * stream-static [[graft.streaming.GeoStreams.polygonJoinStream]]:
-    * [[polygonCandidates]] then ONE [[cells.pointInPolygonRings]]
-    * kernel call per candidate. Output: `polyIdCol` + point columns.
+  /** The polygon table is small enough to ship to every task as plan
+    * literals, by Catalyst statistics (no job): at most 10,000
+    * estimated rows and 16 MB. A one-ring polygon covers ~96 cells of
+    * 12 shipped bytes each (cell id and polygon index), so 10,000 rows
+    * ship ~12 MB of cover, and the byte bound caps the ring encodings
+    * the driver collects and every task deserializes once. Above that,
+    * the distributed cover's shuffle costs less than the literal.
     */
-  private[graft] def containsJoin(points: DataFrame, pointNvec: String,
-                                  polys: DataFrame, polyIdCol: String,
-                                  ringsCol: String,
-                                  persistCover: Boolean = false,
-                                  literalLevels: Option[Array[Int]] = None): DataFrame =
+  private def smallPolygonSide(polysN: DataFrame): Boolean =
+    estRows(polysN) <= 10000L && estBytes(polysN) <= (16L << 20)
+
+  /** A small polygon set for [[containsScan]] and [[bufferScan]]:
+    * per polygon its id (an external value of `idField`'s type), its
+    * ring-list encoding and its cover cells ([[cells.ringCoverCells]]
+    * at the join's grown radius).
+    */
+  private final case class PolygonSet(idField: StructField,
+                                      polys: Seq[(Any, Array[Double], Array[Long])])
+
+  /** A two-column (id, rings) polygon table as a [[PolygonSet]],
+    * collected in one job. The covers are computed in that job's
+    * tasks (an RDD map, which the optimizer cannot fold into a local
+    * table on the driver), so a ring breaking the hemisphere contract
+    * throws there as a SparkException, as on the cover path. Rows
+    * with null rings or a null id drop out, as they join nothing on
+    * the cover path.
+    */
+  private def collectPolygonSet(polysN: DataFrame, ringsCol: String,
+                                extraRad: Double): PolygonSet =
+    PolygonSet(polysN.schema.head, polysN.filter(col(ringsCol).isNotNull).rdd
+      .map { r =>
+        val rings = r.getSeq[Double](1).toArray
+        (r.get(0), rings,
+          CellKernels.ringCoverCells(new GenericArrayData(rings), extraRad).toLongArray())
+      }
+      .collect().filter(_._1 != null).toSeq)
+
+  /** A primitive JVM array as a plan literal that a kernel receives as
+    * the array itself: it ships with the task and is read in place,
+    * never copied per row.
+    */
+  private def arrayLiteral(a: AnyRef): Column =
+    GraftSqlBridge.column(Literal(a, ObjectType(a.getClass)))
+
+  /** `c` with the given nullability, so a kernel-path column carries
+    * the same schema as the cover path's.
+    */
+  private def withNullable(c: Column, nullable: Boolean): Column = {
+    val e = GraftSqlBridge.expression(c)
+    GraftSqlBridge.column(if (nullable) KnownNullable(e) else KnownNotNull(e))
+  }
+
+  /** The kernel path of the polygon joins: one `kernel` call
+    * ([[CellKernels.pipScan]] or `pipBufferScan`) per point row over
+    * the set shipped as plan literals — the distinct cover levels, the
+    * sorted cover cells with a parallel array of polygon indices, the
+    * concatenated ring-list encodings and their offsets — and one row
+    * per hit, its polygon id looked up in an id array literal. No
+    * levels job, no cover equi-join and no shuffle of the points. The
+    * cover cells are each polygon's full [[cells.ringCoverCells]],
+    * which the cover path's ancestor-free pruning only thins, so the
+    * candidates, and under the same exact kernel the output rows,
+    * equal the cover path's. Null point positions match nothing.
+    * Output: the polygon id + point columns + `__hit`, the hit with
+    * its index at `hitIdx`.
+    */
+  private def scanPolygonSet(points: DataFrame, pointNvec: String, set: PolygonSet,
+                             kernel: String, hitType: DataType, hitIdx: String): DataFrame = {
+    val polys = set.polys
+    val rings = polys.flatMap(_._2).toArray
+    val offsets = polys.scanLeft(0)(_ + _._2.length).init.toArray
+    val cover = polys.indices.flatMap(i => polys(i)._3.map(c => (c, i))).sorted
+    val coverCells = cover.map(_._1).toArray
+    val literals = Seq[AnyRef](coverCells.map(CellIndex.levelOf).distinct.sorted,
+      coverCells, cover.map(_._2).toArray, rings, offsets)
+    val n = col(pointNvec)
+    val scan = GraftSqlBridge.staticInvoke(Class.forName("graft.index.CellKernels"), hitType,
+      kernel, Seq(geo.vx(n), geo.vy(n), geo.vz(n)) ++ literals.map(arrayLiteral),
+      Seq(DoubleType, DoubleType, DoubleType) ++ literals.map(a => ObjectType(a.getClass)))
+    val idType = set.idField.dataType
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    val ids = Literal(new GenericArrayData(polys.map(p => toCatalyst(p._1)).toArray),
+      ArrayType(idType, containsNull = false))
+    val id = GraftSqlBridge.column(GetArrayItem(ids, GraftSqlBridge.expression(col(hitIdx))))
+    points.select(col("*"), explode(scan).as("__hit"))
+      .select(withNullable(id, set.idField.nullable).as(set.idField.name), col("*"))
+  }
+
+  /** Containment over a small polygon set ([[polygonJoin]] under the
+    * gate, [[aoiJoinM]]): [[scanPolygonSet]] with
+    * [[CellKernels.pipScan]]. Output: the polygon id + point columns.
+    */
+  private def containsScan(points: DataFrame, pointNvec: String, set: PolygonSet): DataFrame =
+    scanPolygonSet(points, pointNvec, set, "pipScan",
+      ArrayType(IntegerType, containsNull = false), "__hit").drop("__hit")
+
+  /** The buffered join over a small polygon set ([[polygonBufferJoin]]
+    * under the gate, [[aoiBufferJoinM]]): [[scanPolygonSet]] with
+    * [[CellKernels.pipBufferScan]], the signed distance scaled by
+    * `radius` in Spark as on the cover path, so `distCol` is
+    * bit-identical. `distCol` is nullable as the cover path's kernel
+    * column is: when the rings or the point's coordinates are.
+    * Output: the polygon id + point columns + `distCol`.
+    */
+  private def bufferScan(points: DataFrame, pointNvec: String, set: PolygonSet,
+                         bufferMeters: Double, radius: Double, distCol: String,
+                         ringsNullable: Boolean): DataFrame = {
+    val n = col(pointNvec)
+    val distNullable = ringsNullable ||
+      points.select(geo.vx(n), geo.vy(n), geo.vz(n)).schema.exists(_.nullable)
+    val hitType = ArrayType(StructType(Seq(
+      StructField("idx", IntegerType, nullable = false),
+      StructField("d", DoubleType, nullable = false))), containsNull = false)
+    scanPolygonSet(points, pointNvec, set, "pipBufferScan", hitType, "__hit.idx")
+      .withColumn(distCol, withNullable(col("__hit.d") * lit(radius), distNullable))
+      .filter(col(distCol) <= bufferMeters)
+      .drop("__hit")
+  }
+
+  /** The cover path of the containment joins: [[polygonCandidates]]
+    * then ONE [[cells.pointInPolygonRings]] kernel call per candidate.
+    * [[polygonJoin]] takes it for polygon tables above
+    * [[smallPolygonSide]]'s gate, and the stream-static
+    * [[graft.streaming.GeoStreams.polygonJoinStream]] always (with
+    * `persistCover`: its static side re-executes every micro-batch,
+    * which a driver collect would freeze). Output: `polyIdCol` + point
+    * columns.
+    */
+  private[graft] def containsCover(points: DataFrame, pointNvec: String,
+                                   polys: DataFrame, polyIdCol: String,
+                                   ringsCol: String,
+                                   persistCover: Boolean = false): DataFrame =
     polygonCandidates(points, pointNvec, polys, polyIdCol, ringsCol,
-      extraRad = 0.0, persistCover, literalLevels)
+      extraRad = 0.0, persistCover)
       .filter(cells.pointInPolygonRings(col(pointNvec), col(ringsCol)))
       .drop(ringsCol)
 
-  /** Buffered join shared by [[polygonBufferJoin]] and
-    * [[aoiBufferJoinM]]: candidates from covers grown by the buffer
-    * angle, kept when the signed boundary distance is <= the buffer.
-    * Output: `polyIdCol` + point columns + `distCol`.
+  /** The cover path of the buffered joins: candidates from covers
+    * grown by the buffer angle, kept when the signed boundary distance
+    * is <= the buffer. Output: `polyIdCol` + point columns + `distCol`.
     */
-  private def bufferJoin(points: DataFrame, pointNvec: String,
-                         polys: DataFrame, polyIdCol: String, ringsCol: String,
-                         bufferMeters: Double, radius: Double,
-                         distCol: String,
-                         literalLevels: Option[Array[Int]] = None): DataFrame = {
-    require(bufferMeters >= 0.0, s"buffer must be >= 0 (got $bufferMeters)")
+  private[graft] def bufferCover(points: DataFrame, pointNvec: String,
+                                 polys: DataFrame, polyIdCol: String, ringsCol: String,
+                                 bufferMeters: Double, radius: Double,
+                                 distCol: String): DataFrame =
     polygonCandidates(points, pointNvec, polys, polyIdCol, ringsCol,
-      extraRad = bufferMeters / radius, persistCover = false, literalLevels)
+      extraRad = bufferMeters / radius, persistCover = false)
       .withColumn(distCol,
         cells.boundaryDistSignedRings(col(pointNvec), col(ringsCol)) * lit(radius))
       .filter(col(distCol) <= bufferMeters)
       .drop(ringsCol)
-  }
 
   /** Point-in-polygon join with polygons as a TABLE — the lift of
     * [[aoiJoinM]]'s literal AOI list to arbitrarily many polygons
     * (admin boundaries, land masks), same even-odd ring semantics.
     * One output row per (point, polygon) whose containment holds:
-    * all point columns + `polyIdCol`.
+    * `polyIdCol` + all point columns.
     *
-    * Scale shape: one points scan fanning out one NARROW row per
-    * distinct cover level (pass a narrow frame and join payloads
-    * back by `pointId`), a cell equi-join against the distributed
-    * cover (never |points| x |polys|), ring data joined back by
-    * polygon id only for candidates, and ONE
-    * [[cells.pointInPolygonRings]] kernel call per candidate.
+    * Scale shape, chosen by Catalyst statistics of the polygon side
+    * (no job, [[smallPolygonSide]]):
+    *  - a SMALL table (<= 10,000 estimated rows, <= 16 MB) is collected
+    *    once with its ring covers and shipped as plan literals; each
+    *    point row looks up its own candidates and tests them in one
+    *    kernel call ([[containsScan]]). One job to build, no shuffle
+    *    of the points.
+    *  - a larger table takes the distributed cover
+    *    ([[containsCover]]): one points scan fanning out one NARROW
+    *    row per distinct cover level (pass a narrow frame and join
+    *    payloads back by `pointId`), a cell equi-join against the
+    *    cover (never |points| x |polys|), ring data joined back by
+    *    polygon id only for candidates, and ONE
+    *    [[cells.pointInPolygonRings]] kernel call per candidate.
+    * Both paths give the same rows and schema.
     *
     * @param pointId the point key column. The join itself does not
-    *   read it (each (point, polygon) candidate arises exactly once by
-    *   construction of the ancestor-free cover, so nothing dedups on
-    *   it); keep it unique so payloads can join back by it.
+    *   read it (each (point, polygon) pair is tested at most once on
+    *   either path, so nothing dedups on it); keep it unique so
+    *   payloads can join back by it.
     * @param polys table of (polyIdCol, ringsCol) with ringsCol the
     *   ring-list encoding [k, n_0..n_{k-1}, ring coords...] (build
     *   literals with [[graft.index.cells.ringsLiteral]] or
-    *   AoiM.flatRings).
+    *   AoiM.flatRings). `polyIdCol` must be unique per polygon (both
+    *   paths key a polygon's rings and cover on it); rows with a null
+    *   id or null rings match nothing.
     */
   def polygonJoin(points: DataFrame, pointNvec: String, pointId: String,
                   polys: DataFrame, polyIdCol: String,
-                  ringsCol: String): DataFrame =
-    containsJoin(points, pointNvec, polys, polyIdCol, ringsCol)
+                  ringsCol: String): DataFrame = {
+    val polysN = polys.select(col(polyIdCol), col(ringsCol))
+    if (smallPolygonSide(polysN))
+      containsScan(points, pointNvec, collectPolygonSet(polysN, ringsCol, 0.0))
+    else containsCover(points, pointNvec, polys, polyIdCol, ringsCol)
+  }
 
   /** Buffered polygon-TABLE join: points within `bufferMeters` of
     * each polygon (signed distance — negative inside by even-odd, a
     * hole's rim is boundary), the lift of [[aoiBufferJoinM]] to
-    * polygon tables. Output: point columns + polyIdCol + `distCol`.
+    * polygon tables, on [[polygonJoin]]'s two paths with covers grown
+    * by the buffer angle. `polyIdCol` must be unique per polygon.
+    * Output: `polyIdCol` + point columns + `distCol`.
     */
   def polygonBufferJoin(points: DataFrame, pointNvec: String, pointId: String,
                         polys: DataFrame, polyIdCol: String, ringsCol: String,
                         bufferMeters: Double,
                         radius: Double = MeanEarthRadius,
-                        distCol: String = "dist_m"): DataFrame =
-    bufferJoin(points, pointNvec, polys, polyIdCol, ringsCol,
-      bufferMeters, radius, distCol)
+                        distCol: String = "dist_m"): DataFrame = {
+    require(bufferMeters >= 0.0, s"buffer must be >= 0 (got $bufferMeters)")
+    val polysN = polys.select(col(polyIdCol), col(ringsCol))
+    if (smallPolygonSide(polysN))
+      bufferScan(points, pointNvec,
+        collectPolygonSet(polysN, ringsCol, bufferMeters / radius),
+        bufferMeters, radius, distCol, polysN.schema(ringsCol).nullable)
+    else bufferCover(points, pointNvec, polys, polyIdCol, ringsCol, bufferMeters, radius, distCol)
+  }
 
   /** Zonal statistics: per-polygon aggregates over the exact PIP
     * join (polygon population counts, per-admin-area sums/means —
@@ -1097,9 +1247,9 @@ object SpatialJoins {
     * row per polygon containing at least one point: `polyIdCol` +
     * the given aggregate columns (alias each with `.as(...)`).
     *
-    * Scale shape: [[polygonJoin]]'s candidate machinery (mixed-level
-    * per-ring covers, one even-odd kernel call per candidate)
-    * feeding a declarative groupBy — the aggregation is PARTIAL
+    * Scale shape: [[polygonJoin]] (a kernel scan per point for small
+    * polygon tables, the mixed-level distributed cover above the
+    * gate; `polyIdCol` unique) feeding a declarative groupBy — the aggregation is PARTIAL
     * (map-side combine), so the post-join shuffle carries one row
     * per (task, polygon), never the joined rows, and the output is
     * at most |polygons| rows. Pass a NARROW points frame (id + nvec

@@ -288,6 +288,16 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     */
   def statsColOf(name: String): Option[String] = manifestOf(name).flatMap(_.statsCol)
 
+  /** (min, max) of the zone-map column over the files of the latest
+    * version of `name` that recorded stats, from its manifest (no data
+    * access, no job). None when there is no such snapshot or no file
+    * recorded stats (no statsCol, or no rows).
+    */
+  def statsRange(name: String): Option[(Long, Long)] = {
+    val ranges = manifestOf(name).toSeq.flatMap(_.files).flatMap(f => f.min.zip(f.max))
+    if (ranges.isEmpty) None else Some((ranges.map(_._1).min, ranges.map(_._2).max))
+  }
+
   /** Read `name` restricted to rows whose zone-map column lies in
     * [lo, hi]: manifest min/max stats select only the OVERLAPPING
     * data files (files committed without stats are conservatively

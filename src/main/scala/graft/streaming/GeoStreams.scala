@@ -242,20 +242,25 @@ object GeoStreams {
     * columns + `polyIdCol`, even-odd ring semantics. STATELESS: no
     * watermark, no streaming aggregation, append-mode safe.
     *
-    * Candidates come from the batch polygon joins' own cover and
-    * probe code ([[graft.operators.SpatialJoins.polygonJoin]]): the
-    * cover is ANCESTOR-FREE per polygon, so a point hits at most ONE
-    * cover cell per polygon and the stream-static equi-join emits
-    * each (point, polygon) candidate exactly once with NO dedup state.
-    * The cover is cells-only (~96 cells per ring) and persisted so
-    * the per-micro-batch re-execution of the static side reads the
-    * cached frame; it lives until the SparkSession drops it. Null
-    * positions and an empty table / all-null rings emit nothing.
+    * Candidates come from the cover path of the batch polygon joins
+    * ([[graft.operators.SpatialJoins.polygonJoin]]) at every table
+    * size: the cover is ANCESTOR-FREE per polygon, so a point hits at
+    * most ONE cover cell per polygon and the stream-static equi-join
+    * emits each (point, polygon) candidate exactly once with NO dedup
+    * state. The batch join's kernel path for small tables does not
+    * apply here: it would collect the polygon table on the driver
+    * when the query is defined, while the static side of a
+    * stream-static join stays a plan that every micro-batch
+    * re-executes. The cover is cells-only (~96 cells per
+    * ring) and persisted so the per-micro-batch re-execution of the
+    * static side reads the cached frame; it lives until the
+    * SparkSession drops it. Null positions and an empty table /
+    * all-null rings emit nothing. `polyIdCol` must be unique.
     */
   def polygonJoinStream(stream: DataFrame, pointNvec: String,
                         polys: DataFrame, polyIdCol: String,
                         ringsCol: String): DataFrame =
-    graft.operators.SpatialJoins.containsJoin(stream, pointNvec,
+    graft.operators.SpatialJoins.containsCover(stream, pointNvec,
       polys, polyIdCol, ringsCol, persistCover = true)
 
   final case class AsOfEvt(k: Long, ts: java.sql.Timestamp, id: Long,

@@ -162,6 +162,28 @@ class AoiMSpec extends AnyFunSuite {
     }
   }
 
+  test("literal AOI joins take the kernel path with the cover path's rows and schema") {
+    import PolygonTableJoinSpec.{adversarial, adversarialPoints, sameRows}
+    val rnd = new scala.util.Random(17)
+    val rows = (0 until 1500).map { i =>
+      (i.toLong, math.toDegrees(math.asin(rnd.nextDouble() * 2.0 - 1.0)), rnd.nextDouble() * 360.0 - 180.0)
+    } ++ adversarialPoints.zipWithIndex.map { case ((la, lo), i) => (10000L + i, la, lo) }
+    val n = rows.toDF("id", "lat", "lon").select(col("id"), geo.nvecDeg(col("lat"), col("lon")).as("n"))
+    val df = n.unionByName(Seq(-1L).toDF("id")
+      .select(col("id"), lit(null).cast(n.schema("n").dataType).as("n")))
+    val aois = Seq(multi, concave) ++ adversarial.map { case (id, r) => AoiM(id, r) }
+    val frame = SpatialJoins.aoiRingsFrame(spark, aois)
+    val pip = SpatialJoins.aoiJoinM(df, "n", aois)
+    assert(pip.queryExecution.analyzed.toString.contains("pipScan"))
+    sameRows(pip, SpatialJoins.containsCover(df, "n", frame, "aoi_id", "__rings"))
+    assert(pip.select("aoi_id").distinct().count() == aois.length, "every AOI must hold a point")
+    for (buf <- Seq(0.0, 250e3)) {
+      val got = SpatialJoins.aoiBufferJoinM(df, "n", aois, buf)
+      assert(got.queryExecution.analyzed.toString.contains("pipBufferScan"))
+      sameRows(got, SpatialJoins.bufferCover(df, "n", frame, "aoi_id", "__rings", buf, R, "dist_m"))
+    }
+  }
+
   test("single-ring AoiM agrees with the gated single-ring Aoi operators") {
     val ring = box(-20.0, 25.0, -40.0, 10.0)
     val rnd = new scala.util.Random(13)

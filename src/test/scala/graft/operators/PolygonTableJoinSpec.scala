@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.SparkTestSession
+import graft.{JobCount, SparkTestSession, TempDirs}
 import graft.functions.geo
 import graft.geo.{Ellipsoids, Gade, Vec3, VecMath}
 import graft.index.cells
@@ -12,7 +13,7 @@ import graft.index.cells
   * scalar math, no cover pruning) — proving the per-ring mixed-level
   * circumdisc covers drop no qualifying pair.
   */
-class PolygonTableJoinSpec extends AnyFunSuite {
+class PolygonTableJoinSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -252,6 +253,113 @@ class PolygonTableJoinSpec extends AnyFunSuite {
     }
   }
 
+  import PolygonTableJoinSpec.{adversarial, adversarialPoints, sameRows}
+
+  // the mixed-size fixture plus the adversarial polygons, a null-id
+  // row and a null-rings row
+  private def adversarialPolys = ((polyDefs ++ adversarial).map { case (id, r) => (id, flatRings(r)) } ++
+    Seq((null.asInstanceOf[String], flatRings(small)), ("nullrow", null.asInstanceOf[Seq[Double]])))
+    .toDF("poly_id", "rings")
+
+  // the scatter plus points on and around the adversarial polygons
+  // (their edges, the face corner, the poles, the antimeridian) and a
+  // row with a null position
+  private def adversarialPts: DataFrame = {
+    val extra = adversarialPoints.zipWithIndex.map { case ((la, lo), i) => (100000L + i, la, lo) }
+    val n = (pts ++ extra).toDF("id", "lat", "lon")
+      .select(col("id"), geo.nvecDeg(col("lat"), col("lon")).as("n"))
+    n.unionByName(Seq(-1L).toDF("id").select(col("id"), lit(null).cast(n.schema("n").dataType).as("n")))
+  }
+
+  private def planned(df: DataFrame, kernel: String): Boolean =
+    df.queryExecution.analyzed.toString.contains(kernel)
+
+  test("small polygon tables take the kernel path with the cover path's rows and schema") {
+    val empty = Seq.empty[(String, Seq[Double])].toDF("poly_id", "rings")
+    val bufM = 200e3
+    for (polys <- Seq(adversarialPolys, empty); points <- Seq(adversarialPts, ptsDf)) {
+      val pip = SpatialJoins.polygonJoin(points, "n", "id", polys, "poly_id", "rings")
+      assert(planned(pip, "pipScan") && !planned(pip, "ringCoverLevels"))
+      sameRows(pip, SpatialJoins.containsCover(points, "n", polys, "poly_id", "rings"))
+      val buf = SpatialJoins.polygonBufferJoin(points, "n", "id", polys, "poly_id", "rings", bufM)
+      assert(planned(buf, "pipBufferScan"))
+      sameRows(buf, SpatialJoins.bufferCover(points, "n", polys, "poly_id", "rings", bufM, R, "dist_m"))
+      val aggs = Seq(count(lit(1)).as("n_points"), max(col("id")).as("max_id"))
+      sameRows(SpatialJoins.zonalStats(points, "n", "id", polys, "poly_id", "rings", aggs),
+        SpatialJoins.containsCover(points, "n", polys, "poly_id", "rings")
+          .groupBy(col("poly_id")).agg(aggs.head, aggs.tail: _*))
+    }
+    // the fixture reaches every adversarial polygon and both branches
+    val hits = SpatialJoins.polygonJoin(adversarialPts, "n", "id", adversarialPolys, "poly_id", "rings")
+      .select("poly_id").distinct().collect().map(_.getString(0)).toSet
+    assert(adversarial.map(_._1).toSet.subsetOf(hits), s"polygons with no hit: ${adversarial.map(_._1).toSet -- hits}")
+  }
+
+  test("polygonJoin over a 200-row parquet table builds in one job and never shuffles the points") {
+    // shaped like the benchmark's polygon table: 6-24 vertex rings of
+    // 100-800 km, every fourth with a hole, some across the
+    // antimeridian, one around each pole
+    val rnd = new scala.util.Random(4242)
+    def circle(la: Double, lo: Double, r: Double, k: Int, phase: Double) = {
+      val c = Gade.latLonToNvec(math.toRadians(la), math.toRadians(lo))
+      (0 until k).map { j =>
+        val (pla, plo) = Gade.nvecToLatLon(Gade.sphereReckon(c, r, phase - 2 * math.Pi * j / k))
+        (math.toDegrees(pla), math.toDegrees(plo))
+      }
+    }
+    val specs = (0 until 200).map { i =>
+      val r = (100e3 + 700e3 * rnd.nextDouble()) / R
+      val (la, lo) =
+        if (i == 0) (89.5, 0.0) else if (i == 1) (-89.0, 10.0)
+        else if (i % 7 == 0) (rnd.nextDouble() * 120.0 - 60.0, 180.0 - math.toDegrees(r * 0.3))
+        else (math.toDegrees(math.asin(rnd.nextDouble() * 2 - 1)), rnd.nextDouble() * 360.0 - 180.0)
+      val phase = rnd.nextDouble() * 2 * math.Pi
+      val outer = circle(la, lo, r, 6 + rnd.nextInt(19), phase)
+      (s"poly_$i", if (i % 4 == 3) Seq(outer, circle(la, lo, r * 0.4, 8, phase).reverse) else Seq(outer))
+    }
+    val dir = tempDir("polys200")
+    specs.map { case (id, rings) => (id, flatRings(rings)) }.toDF("poly_id", "rings")
+      .repartition(1).write.parquet(s"$dir/polys")
+    ptsDf.write.parquet(s"$dir/points")
+    // schema inference of the reads runs its own job: plan them first
+    val polys = spark.read.parquet(s"$dir/polys")
+    val points = spark.read.parquet(s"$dir/points")
+    val (pip, jobs) = JobCount(spark)(SpatialJoins.polygonJoin(points, "n", "id", polys, "poly_id", "rings"))
+    assert(jobs == 1, s"building polygonJoin ran $jobs jobs")
+    sameRows(pip, SpatialJoins.containsCover(points, "n", polys, "poly_id", "rings"))
+    val plan = pip.queryExecution.executedPlan.toString
+    for (op <- Seq("Exchange", "SortMergeJoin", "BroadcastNestedLoopJoin", "CartesianProduct"))
+      assert(!plan.contains(op), s"$op in the kernel path's plan:\n$plan")
+    val want = (for {
+      (i, la, lo) <- pts
+      p = Gade.latLonToNvec(math.toRadians(la), math.toRadians(lo))
+      (id, rings) <- specs if refEvenOdd(p, rings)
+    } yield (i, id)).toSet
+    val got = pip.select("id", "poly_id").collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(want.nonEmpty && got == want, s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
+  }
+
+  // even-odd through the single-ring winding kernel (the benchmark
+  // rings are not all convex in refInside's orientation)
+  private def refEvenOdd(p: Vec3, rings: Seq[Seq[(Double, Double)]]): Boolean =
+    rings.count(r => graft.index.CellKernels.pointInPolygon(p.x, p.y, p.z,
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(graft.index.CellIndex.flatNvecs(r)))) % 2 == 1
+
+  test("a polygon table above the size gate plans the distributed cover") {
+    // a million-row range filtered to 3 rows: the statistics estimate
+    // far more than 10,000 rows, so the gate must not collect it
+    val big = spark.range(0, 1000000).filter(col("id") < 3)
+      .select(concat(lit("p"), col("id").cast("string")).as("poly_id"),
+        typedLit(flatRings(small)).as("rings"))
+    val pip = SpatialJoins.polygonJoin(ptsDf, "n", "id", big, "poly_id", "rings")
+    assert(planned(pip, "ringCoverCells") && !planned(pip, "pipScan"))
+    val inSmall = pts.count { case (_, la, lo) =>
+      refInside(Gade.latLonToNvec(math.toRadians(la), math.toRadians(lo)), small) }
+    assert(inSmall > 0 && pip.count() == 3L * inSmall)
+    val buf = SpatialJoins.polygonBufferJoin(ptsDf, "n", "id", big, "poly_id", "rings", 50e3)
+    assert(planned(buf, "ringCoverCells") && !planned(buf, "pipBufferScan"))
+  }
+
   test("hemisphere-violating rings throw instead of silently mis-containing") {
     // a ring spanning > 90 deg from its centroid (near-hemispheric)
     val bad = Seq(Seq((-80.0, 0.0), (-80.0, 120.0), (-80.0, -120.0),
@@ -262,5 +370,49 @@ class PolygonTableJoinSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("hemisphere") ||
       Option(ex.getCause).exists(_.getMessage.contains("hemisphere")))
+  }
+}
+
+object PolygonTableJoinSpec {
+  import org.scalatest.Assertions._
+
+  private def box(lat0: Double, lat1: Double, lon0: Double, lon1: Double) =
+    Seq((lat0, lon0), (lat0, lon1), (lat1, lon1), (lat1, lon0))
+
+  /** Latitude of the cube-face corner (1, 1, 1) / sqrt(3) at lon 45. */
+  val CornerLat: Double = math.toDegrees(math.atan(1.0 / math.sqrt(2.0)))
+
+  /** Polygons where a cell cover is easiest to get wrong: one whose
+    * cover straddles a cube-face corner, ring edges running along cell
+    * edges (the meridian lon 45 is a face edge, the equator a cell
+    * edge at every level), an antimeridian ring, polar rings (one
+    * with a hole around the pole).
+    */
+  val adversarial: Seq[(String, Seq[Seq[(Double, Double)]])] = Seq(
+    "corner" -> Seq(box(CornerLat - 2.0, CornerLat + 2.0, 43.0, 47.0)),
+    "face_edge" -> Seq(box(10.0, 20.0, 45.0, 52.0)),
+    "equator" -> Seq(box(0.0, 6.0, 100.0, 110.0)),
+    "antimeridian" -> Seq(Seq((-10.0, 175.0), (-10.0, -175.0), (10.0, -175.0), (10.0, 175.0))),
+    "north" -> Seq((0 until 8).map(i => (80.0, -180.0 + 45.0 * i))),
+    "south" -> Seq((0 until 6).map(i => (-70.0, 30.0 + 60.0 * i)),
+      (0 until 6).map(i => (-84.0, 60.0 * i))))
+
+  /** Points on and near [[adversarial]]: the corner, points on the
+    * cell-edge ring edges, the poles, the antimeridian, and a grid
+    * around each polygon. */
+  val adversarialPoints: Seq[(Double, Double)] =
+    Seq((CornerLat, 45.0), (15.0, 45.0), (0.0, 105.0), (90.0, 0.0), (-90.0, 0.0),
+      (0.0, 180.0), (0.0, -180.0), (5.0, 180.0), (-77.0, 10.0), (-88.0, 100.0)) ++
+      (for {
+        (la, lo) <- Seq((CornerLat, 45.0), (15.0, 48.5), (3.0, 105.0), (0.0, 180.0), (82.0, 0.0), (-78.0, 0.0))
+        i <- -6 to 6; j <- -6 to 6
+      } yield (math.max(-90.0, math.min(90.0, la + 1.1 * i)), lo + 1.3 * j))
+
+  /** Equal schemas (nullability included) and equal rows as multisets. */
+  def sameRows(got: org.apache.spark.sql.DataFrame, want: org.apache.spark.sql.DataFrame): Unit = {
+    assert(got.schema == want.schema, s"schema ${got.schema.treeString} vs ${want.schema.treeString}")
+    val g = got.collect().map(_.toString).sorted.toSeq
+    val w = want.collect().map(_.toString).sorted.toSeq
+    assert(g == w, s"missing=${w.diff(g).take(5)} extra=${g.diff(w).take(5)}")
   }
 }

@@ -398,6 +398,21 @@ class SourcesSpec extends AnyFunSuite with TempDirs {
     assert(e.getMessage.contains("no snapshot named 'imgs__metrics' at or before version 0"))
   }
 
+  test("statsRange is the zone map's min and max, read from the manifest without a job") {
+    val store = new SnapshotStore(spark, tempDir("statsrange"))
+    val df = spark.range(0, 500, 1, 4).select(col("id"), (col("id") * 7 - 1000).as("cell"))
+      .repartitionByRange(4, col("cell"))
+    store.commit("zoned", df, Some("cell"))
+    store.commit("plain", df)
+    val (ranges, jobs) = JobCount(spark) {
+      Seq("zoned", "plain", "absent").map(store.statsRange)
+    }
+    assert(jobs == 0, s"three statsRange calls ran $jobs jobs")
+    val mm = df.agg(min("cell"), max("cell")).collect()(0)
+    assert(ranges == Seq(Some((mm.getLong(0), mm.getLong(1))), None, None))
+    assert(store.fileMetrics(1).length > 1, "the range must span several files")
+  }
+
   test("commit runs exactly one job and the manifest matches the data") {
     val df = ImageTable.generate(spark, 120, 6)
     val root = tempDir("onejob")
