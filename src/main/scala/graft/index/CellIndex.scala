@@ -193,26 +193,43 @@ object CellIndex {
     * cover built from it can only over-include cells.
     */
   def cellMinDistLB(id: Long, x: Double, y: Double, z: Double): Double = {
-    val level = levelOf(id)
-    val scale = 1 << level
-    val step = 2.0 / scale
+    val step = 2.0 / (1 << levelOf(id))
     val face = faceOf(id)
-    val u0 = iOf(id) * step - 1.0; val u1 = u0 + step
-    val v0 = jOf(id) * step - 1.0; val v1 = v0 + step
-    val w = faceW(face); val ua = faceU(face); val va = faceV(face)
-    val pw = x * w.x + y * w.y + z * w.z
-    // plane u = c with the cell on the {>= c} (sideGE) or {<= c} side;
-    // positive return = violation angle
-    def viol(ax: Vec3, c: Double, sideGE: Boolean): Double = {
-      val d = (x * ax.x + y * ax.y + z * ax.z) - c * pw
-      val s = d / math.sqrt(1.0 + c * c)
-      val signed = if (sideGE) -s else s
-      if (signed > 0) math.asin(math.min(1.0, signed)) else 0.0
-    }
-    var lb = math.max(viol(ua, u0, sideGE = true), viol(ua, u1, sideGE = false))
-    lb = math.max(lb, math.max(viol(va, v0, sideGE = true), viol(va, v1, sideGE = false)))
-    if (pw < 0) lb = math.max(lb, math.asin(math.min(1.0, -pw)))
-    lb
+    val pu = dot(faceU(face), x, y, z); val pv = dot(faceV(face), x, y, z)
+    val pw = dot(faceW(face), x, y, z)
+    val u0 = iOf(id) * step - 1.0; val v0 = jOf(id) * step - 1.0
+    val v = sinViolation(planeSin(pu, pw, u0), planeSin(pu, pw, u0 + step),
+      planeSin(pv, pw, v0), planeSin(pv, pw, v0 + step), pw)
+    if (v > 0) math.asin(math.min(1.0, v)) else 0.0
+  }
+
+  @inline private def dot(a: Vec3, x: Double, y: Double, z: Double): Double =
+    x * a.x + y * a.y + z * a.z
+
+  /** The point's signed sine outside the face plane u = c (or v = c;
+    * normal (faceU - c faceW) / sqrt(1 + c^2)), from its dot products
+    * `pa` with faceU (or faceV) and `pw` with faceW. Positive on the
+    * side of larger u.
+    */
+  @inline private def planeSin(pa: Double, pw: Double, c: Double): Double =
+    (pa - c * pw) / math.sqrt(1.0 + c * c)
+
+  /** The sine of [[cellMinDistLB]]'s bound, before its `asin`: the
+    * largest violation of a cell by the point, or 0 when it violates
+    * nothing. The cell spans [uLo, uHi] x [vLo, vHi] on its face,
+    * given as the point's [[planeSin]] against those four planes;
+    * outside the face hemisphere the violation is -pw. The one bound
+    * definition behind [[cellMinDistLB]] and [[capCells]].
+    */
+  @inline private def sinViolation(uLo: Double, uHi: Double, vLo: Double, vHi: Double,
+                                   pw: Double): Double = {
+    var m = 0.0
+    if (-uLo > m) m = -uLo
+    if (uHi > m) m = uHi
+    if (-vLo > m) m = -vLo
+    if (vHi > m) m = vHi
+    if (-pw > m) m = -pw
+    m
   }
 
   /** All cells at `level` intersecting (by the safe lower bound) the
@@ -222,19 +239,78 @@ object CellIndex {
     * parent's true distance — hence its lower bound — is within the
     * cap, so pruning parents never loses needed cells). Cost is
     * O(cover size * level), valid at any level; sorted ascending.
+    *
+    * The descent allocates nothing per cell: two reused frontier
+    * buffers, and the 4 children of a cell tested inline against the
+    * 3 + 3 bounding planes they share (plane offsets are exact dyadic
+    * doubles, so a shared plane has the same value for each child). A
+    * cell is kept when [[cellMinDistLB]] <= angleRad, tested in sine
+    * space: its [[sinViolation]] s passes when s <= sin(angleRad).
+    * Only within a relative 1e-9 of sin(angleRad) does it fall back to
+    * the bound's own asin(min(1, s)) <= angleRad; outside that band
+    * both tests agree, because sin and asin are correct to an ulp
+    * (~1e-16 relative) and asin's slope is >= 1. At angleRad >= pi/2
+    * every asin is <= pi/2 <= angleRad, so the cover is [[allCells]].
+    * The cells are therefore exactly those of a descent that filters
+    * each level by cellMinDistLB <= angleRad. A NaN coordinate, or an
+    * angle that is negative or NaN, yields no cells.
     */
   def capCells(x: Double, y: Double, z: Double, level: Int,
                angleRad: Double): Array[Long] = {
-    var frontier = Array.tabulate(6)(f => pack(f, 0, 0, 0))
-      .filter(c => cellMinDistLB(c, x, y, z) <= angleRad)
-    var l = 0
-    while (l < level) {
-      frontier = frontier.flatMap(children)
-        .filter(c => cellMinDistLB(c, x, y, z) <= angleRad)
+    if (x.isNaN || y.isNaN || z.isNaN || !(angleRad >= 0)) return Array.emptyLongArray
+    require(level <= MaxLevel, s"level $level > $MaxLevel")
+    if (angleRad >= math.Pi / 2) return allCells(level)
+    val sinA = math.sin(angleRad)
+    val sinLo = sinA * (1.0 - 1e-9); val sinHi = sinA * (1.0 + 1e-9)
+    def inCap(s: Double): Boolean =
+      s <= sinLo || (s <= sinHi && math.asin(math.min(1.0, s)) <= angleRad)
+    // the point's dot products with each face's frame
+    val pu = new Array[Double](6); val pv = new Array[Double](6); val pw = new Array[Double](6)
+    var cur = new Array[Long](64); var next = new Array[Long](64)
+    var n = 0
+    var f = 0
+    while (f < 6) {
+      pu(f) = dot(faceU(f), x, y, z); pv(f) = dot(faceV(f), x, y, z); pw(f) = dot(faceW(f), x, y, z)
+      if (inCap(sinViolation(planeSin(pu(f), pw(f), -1.0), planeSin(pu(f), pw(f), 1.0),
+          planeSin(pv(f), pw(f), -1.0), planeSin(pv(f), pw(f), 1.0), pw(f)))) {
+        cur(n) = pack(f, 0, 0, 0); n += 1
+      }
+      f += 1
+    }
+    var l = 1
+    while (l <= level) {
+      val step = 2.0 / (1 << l)
+      if (next.length < 4 * n) next = new Array[Long](4 * n)
+      var m = 0
+      var k = 0
+      while (k < n) {
+        val id = cur(k)
+        val fc = faceOf(id); val i = iOf(id) << 1; val j = jOf(id) << 1
+        val a = pu(fc); val b = pv(fc); val w = pw(fc)
+        // the 4 children share 3 u-planes and 3 v-planes
+        val u0 = i * step - 1.0; val v0 = j * step - 1.0
+        val su0 = planeSin(a, w, u0); val su1 = planeSin(a, w, u0 + step)
+        val su2 = planeSin(a, w, u0 + 2 * step)
+        val sv0 = planeSin(b, w, v0); val sv1 = planeSin(b, w, v0 + step)
+        val sv2 = planeSin(b, w, v0 + 2 * step)
+        var c = 0
+        while (c < 4) {
+          val di = c & 1; val dj = c >> 1
+          if (inCap(sinViolation(if (di == 0) su0 else su1, if (di == 0) su1 else su2,
+              if (dj == 0) sv0 else sv1, if (dj == 0) sv1 else sv2, w))) {
+            next(m) = pack(fc, l, i + di, j + dj); m += 1
+          }
+          c += 1
+        }
+        k += 1
+      }
+      val t = cur; cur = next; next = t
+      n = m
       l += 1
     }
-    java.util.Arrays.sort(frontier)
-    frontier
+    val out = java.util.Arrays.copyOf(cur, n)
+    java.util.Arrays.sort(out)
+    out
   }
 
   /** The cover level of a point-probe join: the level at which a disc

@@ -29,21 +29,21 @@ object CellKernels {
     * (see CellIndex.cellCornersFlat).
     */
   def cornersFlat(id: Long): ArrayData =
-    new GenericArrayData(CellIndex.cellCornersFlat(id))
+    UnsafeArrayData.fromPrimitiveArray(CellIndex.cellCornersFlat(id))
 
   /** Local sibling-group compaction of one ancestor group down to
     * `floor` (see CellIndex.compactLocal — the per-group kernel of
     * the distributed CellSetOps.compact).
     */
   def compactGroup(cs: ArrayData, floor: Int): ArrayData =
-    new GenericArrayData(CellIndex.compactLocal(cs.toLongArray(), floor))
+    UnsafeArrayData.fromPrimitiveArray(CellIndex.compactLocal(cs.toLongArray(), floor))
 
   def ring(id: Long, k: Int): ArrayData =
-    new GenericArrayData(CellIndex.ring(id, k))
+    UnsafeArrayData.fromPrimitiveArray(CellIndex.ring(id, k))
 
   def capCells(x: Double, y: Double, z: Double, level: Int,
                angleRad: Double): ArrayData =
-    new GenericArrayData(CellIndex.capCells(x, y, z, level, angleRad))
+    UnsafeArrayData.fromPrimitiveArray(CellIndex.capCells(x, y, z, level, angleRad))
 
   def ringCoverageRad(x: Double, y: Double, z: Double, level: Int, k: Int): Double =
     CellIndex.ringCoverageRad(x, y, z, level, k)
@@ -416,20 +416,15 @@ object CellKernels {
     val vs = data.toDoubleArray()
     val k = decodeRingCount(vs)
     val stats = ringCoverStats(vs, extraRad, k)
-    val set = new java.util.TreeSet[java.lang.Long]()
-    var r = 0
-    while (r < k) {
-      val (cx, cy, cz, ang, l) = stats(r)
-      val cs = CellIndex.capCells(cx, cy, cz, l, ang)
-      var i = 0
-      while (i < cs.length) { set.add(cs(i)); i += 1 }
-      r += 1
-    }
-    val out = new Array[Long](set.size)
-    val it = set.iterator()
+    val all = stats.flatMap { case (cx, cy, cz, ang, l) => CellIndex.capCells(cx, cy, cz, l, ang) }
+    java.util.Arrays.sort(all)
+    var w = 0
     var i = 0
-    while (it.hasNext) { out(i) = it.next(); i += 1 }
-    new GenericArrayData(out)
+    while (i < all.length) {
+      if (w == 0 || all(w - 1) != all(i)) { all(w) = all(i); w += 1 }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(all, w))
   }
 
   /** The distinct cover LEVELS [[ringCoverCells]] would use — the
@@ -440,7 +435,7 @@ object CellKernels {
     val vs = data.toDoubleArray()
     val k = decodeRingCount(vs)
     val stats = ringCoverStats(vs, extraRad, k)
-    new GenericArrayData(stats.map(_._5).distinct.sorted)
+    UnsafeArrayData.fromPrimitiveArray(stats.map(_._5).distinct.sorted)
   }
 
   /** Polygon indices of a shipped cover that hold the point's cell at

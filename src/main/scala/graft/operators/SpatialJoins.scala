@@ -100,6 +100,18 @@ object SpatialJoins {
     * the output itself is quadratic and pruning cannot help — take the
     * exact-filtered cross join.
     *
+    * Join side, from Catalyst statistics (no job): the build side
+    * (right, one cell per row) is broadcast when its estimated bytes,
+    * times `skewSalt` when salted, fit
+    * `spark.sql.autoBroadcastJoinThreshold`. The exploded probe
+    * side may be broadcast only when its estimate times the cells of
+    * one cover (a cap at a cube-face corner, where cells are smallest)
+    * still fits; Spark sizes a Generate like its input, so otherwise
+    * it would hash a whole cover per probe row on the driver. Past
+    * both, the join shuffles.
+    *
+    * @param broadcastRight forces the build-side broadcast whatever its
+    *   estimate.
     * @param probeSideBloom when true, the cover-exploded probe rows
     *   are prefiltered by a Bloom filter over the build side's
     *   OCCUPIED cells before the shuffle. At low cell occupancy
@@ -201,8 +213,24 @@ object SpatialJoins {
             .otherwise(array(lit(0)))))
         (p, b)
       }
-    val build = if (broadcastRight) broadcast(build1) else build1
-    probes.join(build, Seq("__cell", "__salt"))
+    // the hash table goes on the build side: Spark sizes a Generate
+    // like its input, so by its own estimate the exploded probe side
+    // (a whole cover per row) looks as small as the probe table
+    val threshold = left.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    def fits(bytes: BigInt): Boolean = threshold >= 0 && bytes <= threshold
+    // salting replicates the build side's hot cells skewSalt times
+    def buildBytes: BigInt = estBytes(build1) * math.max(1, skewSalt)
+    // a cap at a cube-face corner, where cells are smallest, has the
+    // largest cover
+    def coverCells: Int = {
+      val c = 1.0 / math.sqrt(3.0)
+      CellIndex.capCells(c, c, c, level, coverAngle).length
+    }
+    val (probeSide, build) =
+      if (broadcastRight || fits(buildBytes)) (probes, broadcast(build1))
+      else if (fits(estBytes(probes) * coverCells)) (probes, build1)
+      else (GraftSqlBridge.noBroadcastHash(probes), build1)
+    probeSide.join(build, Seq("__cell", "__salt"))
       .withColumn(distCol, geo.gcDistance(col(leftNvec), col(rightNvec), sphereRadius))
       .filter(col(distCol) <= radiusMeters)
       .drop("__cell", "__salt")

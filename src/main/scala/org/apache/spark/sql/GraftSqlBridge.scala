@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, NO_BROADCAST_HASH, ResolvedHint}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.DataType
 
@@ -20,9 +21,17 @@ object GraftSqlBridge {
     column(StaticInvoke(cls, returnType, method, args.map(expression),
       argTypes, propagateNull = true, returnNullable = false))
 
-  /** Register a Column-builder as a session SQL function (same
-    * expression tree as the DataFrame DSL — no UDF indirection).
+  /** `df` with Spark's NO_BROADCAST_HASH join strategy hint: a join
+    * never broadcasts it, while the planner and AQE stay free to pick
+    * any other strategy. The hint has no SQL name (AQE's own
+    * DynamicJoinSelection sets it), hence the bridge.
     */
+  def noBroadcastHash(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    classic.Dataset.ofRows(ds.sparkSession,
+      ResolvedHint(ds.logicalPlan, HintInfo(strategy = Some(NO_BROADCAST_HASH))))
+  }
+
   /** Eager Column -> catalyst conversion through the active session
     * converter (ExpressionUtils.expression alone leaves a lazy wrapper
     * the analyzer will not unwrap inside a function builder).
@@ -38,6 +47,9 @@ object GraftSqlBridge {
   def applyExtensionFunctions(ext: SparkSessionExtensions, spark: SparkSession): Unit =
     ext.registerFunctions(spark.sessionState.functionRegistry)
 
+  /** Register a Column-builder as a session SQL function (same
+    * expression tree as the DataFrame DSL — no UDF indirection).
+    */
   def registerFunction(spark: SparkSession, name: String, arity: Int,
                        builder: Seq[Column] => Column): Unit = {
     val registry = spark.sessionState.functionRegistry

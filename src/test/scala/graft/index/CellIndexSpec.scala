@@ -138,6 +138,64 @@ class CellIndexSpec extends AnyFunSuite {
     assert(fine.contains(cellAt(p.x, p.y, p.z, 14)))
   }
 
+  /** The descent capCells had before its sine-space kernel: each
+    * level's children filtered by cellMinDistLB <= angleRad.
+    */
+  private def capCellsReference(x: Double, y: Double, z: Double, level: Int,
+                                angleRad: Double): Array[Long] = {
+    var frontier = Array.tabulate(6)(f => pack(f, 0, 0, 0))
+      .filter(c => cellMinDistLB(c, x, y, z) <= angleRad)
+    for (_ <- 0 until level)
+      frontier = frontier.flatMap(children).filter(c => cellMinDistLB(c, x, y, z) <= angleRad)
+    frontier.sorted
+  }
+
+  test("capCells returns exactly the reference descent's cells") {
+    def deg(la: Double, lo: Double) = Gade.latLonToNvec(math.toRadians(la), math.toRadians(lo))
+    val corners = for (sx <- Seq(-1.0, 1.0); sy <- Seq(-1.0, 1.0); sz <- Seq(-1.0, 1.0))
+      yield VecMath.unit(Vec3(sx, sy, sz))
+    val special = Seq(Vec3(0, 0, 1), Vec3(0, 0, -1)) ++
+      Seq(-60.0, 0.0, 33.0, 75.0).flatMap(la =>
+        Seq(deg(la, 180.0), deg(la, -180.0), deg(la, 179.9999999))) ++
+      // cube-face edges (x = y, x = z, -x = y) and just off them
+      Seq(deg(0, 45), deg(45, 0), deg(0, -135), deg(1e-10, 45 + 1e-10), deg(-1e-9, 135)) ++
+      corners
+    val points = special ++ (1L to 120L).map(i => randomPoint(i * 31))
+    val halfPi = math.Pi / 2
+    var cases = 0
+    points.zipWithIndex.foreach { case (p, k) =>
+      val seeded = (0 until 4).map(j => 1e-7 * math.pow(0.6 / 1e-7, rnd(k * 97L + j)))
+      // angles exactly at a cell's bound, and one ulp either side: the
+      // sine-space test's asin fallback band
+      val onBound = capCellsReference(p.x, p.y, p.z, 6, 0.05)
+        .map(c => cellMinDistLB(c, p.x, p.y, p.z)).filter(_ > 0).takeRight(2)
+        .flatMap(b => Seq(b, math.nextUp(b), math.nextDown(b)))
+      val angles = Seq(1e-12, halfPi - 1e-9, halfPi - 1e-10, math.nextDown(halfPi), halfPi,
+        math.Pi) ++ seeded ++ onBound
+      for (ang <- angles) {
+        // every level up to the first whose cover exceeds 2048 cells
+        var level = 0
+        var bounded = true
+        while (bounded && level <= MaxLevel) {
+          val want = capCellsReference(p.x, p.y, p.z, level, ang)
+          val got = capCells(p.x, p.y, p.z, level, ang)
+          assert(got.sameElements(want),
+            s"p=$p level=$level ang=$ang: ${got.length} cells, reference ${want.length}")
+          assert(CellKernels.capCells(p.x, p.y, p.z, level, ang).toLongArray().sameElements(want))
+          cases += 1
+          bounded = want.length <= 2048
+          level += 1
+        }
+      }
+    }
+    assert(cases > 10000, cases)
+    // a NaN coordinate has no cells, at any angle
+    for (ang <- Seq(0.01, halfPi, math.Pi)) {
+      assert(capCells(Double.NaN, 0.0, 1.0, 5, ang).isEmpty)
+      assert(capCells(0.0, 0.0, Double.NaN, 3, ang).isEmpty)
+    }
+  }
+
   test("levelForRadiusSafe guarantees block coverage at the level it picks") {
     for (meters <- Seq(10.0, 1000.0, 50000.0, 1e6); k <- Seq(1, 2)) {
       val angle = meters / 6371009.0

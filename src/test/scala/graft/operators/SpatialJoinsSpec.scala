@@ -3,7 +3,7 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.SparkTestSession
+import graft.{SparkTestSession, TempDirs}
 import graft.functions.geo
 import graft.geo.Gade
 import graft.operators.SpatialJoins.Aoi
@@ -12,7 +12,7 @@ import graft.SparkTestSession.rnd
 /** Join operators must agree with brute force on deterministic random
   * point sets (including near face-edge and polar points).
   */
-class SpatialJoinsSpec extends AnyFunSuite {
+class SpatialJoinsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = SparkTestSession.spark
 
   /** Deterministic points: splitmix64 lanes of the ordinal. */
@@ -398,6 +398,66 @@ class SpatialJoinsSpec extends AnyFunSuite {
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join:\n$plan")
     assert(joined.count() >= 0)
+  }
+
+  test("distance join broadcasts the build side, never the exploded cover side") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import spark.implicits._
+    // the benchmark's shape: half the probe rows in one ~20 km disc, and
+    // the probe smaller on disk than the build side
+    val hot = (0 until 300).map { i =>
+      (5000L + i, 48.85 + 0.18 * (rnd(i * 7L) - 0.5), 2.35 + 0.27 * (rnd(i * 11L) - 0.5))
+    }.toDF("a_id", "a_lat", "a_lon").withColumn("a_n", geo.nvecDeg(col("a_lat"), col("a_lon")))
+    val dir = tempDir("distjoin-side")
+    pointsDf(300, "a", 61).unionByName(hot).coalesce(1).write.parquet(s"$dir/probe")
+    pointsDf(2000, "b", 62).coalesce(1).write.parquet(s"$dir/build")
+    val a = spark.read.parquet(s"$dir/probe")
+    val b = spark.read.parquet(s"$dir/build")
+    val radius = 300e3
+    def pairs(df: DataFrame) =
+      df.select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val brute = pairs(a.crossJoin(b)
+      .withColumn("d", geo.gcDistance(col("a_n"), col("b_n")))
+      .filter(col("d") <= radius))
+    val helper = new AdaptiveSparkPlanHelper {}
+    /** The subtrees the join's executed plan broadcasts, after its
+      * pairs are checked against the brute-force cross join.
+      */
+    def run(probe: DataFrame, tag: String): Seq[BroadcastExchangeExec] = {
+      val ids = probe.select("a_id").collect().map(_.getLong(0)).toSet
+      val want = brute.filter(p => ids(p._1))
+      val joined = SpatialJoins.distanceJoin(probe, b, "a_n", "b_n", radius)
+      val got = joined.collect().map(r =>
+        (r.getLong(r.fieldIndex("a_id")), r.getLong(r.fieldIndex("b_id")))).toSet
+      assert(want.nonEmpty && got == want,
+        s"$tag: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
+      helper.collect(joined.queryExecution.executedPlan) { case x: BroadcastExchangeExec => x }
+    }
+    def coverBroadcast(bx: Seq[BroadcastExchangeExec]): Boolean =
+      bx.exists(_.find(_.isInstanceOf[GenerateExec]).nonEmpty)
+    // default threshold: the build side's projection is broadcast
+    val bx = run(a, "default threshold")
+    assert(!coverBroadcast(bx), s"the exploded cover side is broadcast:\n${bx.mkString("\n")}")
+    assert(bx.exists { x =>
+      val cols = x.child.output.map(_.name)
+      cols.contains("b_n") && cols.contains("__cell") && !cols.contains("a_n")
+    }, s"no broadcast of the build side:\n${bx.mkString("\n")}")
+    // a threshold below the build side and below probe x cover, but
+    // above the probe table: only a shuffle join is left
+    def est(df: DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val threshold = est(a) * 2
+    assert(threshold < est(b), s"probe ${est(a)} B, build ${est(b)} B")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold.toString)
+    try {
+      assert(!coverBroadcast(run(a, "threshold below the build side")))
+      // a probe side whose estimate times a whole cover still fits may
+      // be broadcast
+      val few = a.filter(col("a_id").isin(brute.map(_._1).toSeq.sorted.take(3): _*)).collect()
+      val tiny = spark.createDataFrame(java.util.Arrays.asList(few: _*), a.schema)
+      assert(coverBroadcast(run(tiny, "a probe side that fits with its covers")))
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("corridor join over a route TABLE matches the per-segment brute force") {
